@@ -1,6 +1,6 @@
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload serve --seed 1 --seconds 20 --trace 0
+    python3 perfbench/run.py --workload serve --seed 1 --seconds 12 --trace 0
 
 Run from the repository root. Starts ``worker.py`` in a process group of its
 own, so the Spark JVM it launches can be killed with it on a timeout, an
