@@ -28,7 +28,7 @@ from typing import Iterable, Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from judy_graph_db_spark.schema import EDGES_SCHEMA, NODES_SCHEMA, RANGES_SCHEMA, EDGE_COLS
+from judy_graph_db_spark.schema import EDGES_SCHEMA, NODES_SCHEMA, RANGES_SCHEMA, EDGE_COLS, local_df
 
 
 @dataclass(frozen=True)
@@ -53,7 +53,7 @@ class Ranges:
 
     def to_df(self, spark: SparkSession) -> DataFrame:
         rows = [(s, ln, lbl, list(els)) for (s, ln, lbl, els) in self.entries]
-        return spark.createDataFrame(rows, RANGES_SCHEMA)
+        return local_df(spark, rows, RANGES_SCHEMA)
 
     def label_of(self, node_id: int) -> str | None:
         for s, ln, lbl, _ in self.entries:
@@ -140,8 +140,8 @@ class Graph:
         """``empty``/``emptyJ``/``emptyE`` (``FastAccess.hs:240-245``, ``Enum.hs:96-100``)."""
         return cls(
             spark,
-            spark.createDataFrame([], NODES_SCHEMA),
-            spark.createDataFrame([], EDGES_SCHEMA),
+            local_df(spark, [], NODES_SCHEMA),
+            local_df(spark, [], EDGES_SCHEMA),
             ranges,
         )
 
@@ -170,7 +170,7 @@ class Graph:
             nid, lbl = t[0], t[1]
             props = t[2] if len(t) > 2 else None
             node_rows.append((int(nid), str(lbl) if lbl is not None else None, props))
-        nodes_df = spark.createDataFrame(node_rows, NODES_SCHEMA) if node_rows else spark.createDataFrame([], NODES_SCHEMA)
+        nodes_df = local_df(spark, node_rows, NODES_SCHEMA)
 
         def expand(raw: Sequence[tuple], undirected: bool) -> list[tuple]:
             rows = []
@@ -185,10 +185,10 @@ class Graph:
             return rows
 
         edge_rows = expand(directed_edges, False) + expand(undirected_edges, True)
-        g = cls(spark, nodes_df, spark.createDataFrame([], EDGES_SCHEMA), ranges)
+        g = cls(spark, nodes_df, local_df(spark, [], EDGES_SCHEMA), ranges)
         if edge_rows:
-            raw = spark.createDataFrame(
-                edge_rows, "src long, dst long, label string, labels array<string>, is_back boolean"
+            raw = local_df(
+                spark, edge_rows, "src long, dst long, label string, labels array<string>, is_back boolean"
             ).withColumn("ins_order", F.monotonically_increasing_id())
             g.edges = _assign_edge_seq(raw).select(*EDGE_COLS)
         return g
@@ -224,7 +224,7 @@ class Graph:
             e = _assign_edge_seq(e)
         e = e.select(*EDGE_COLS)
         if nodes is None:
-            nodes = spark.createDataFrame([], NODES_SCHEMA)
+            nodes = local_df(spark, [], NODES_SCHEMA)
         return cls(spark, nodes, e, ranges)
 
     # ------------------------------------------------------------- accessors

@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from judy_graph_db_spark.graph import Graph
+from judy_graph_db_spark.schema import local_df
 
 
 def _edge_filter(g: Graph, node_id: int | None = None, label: str | None = None,
@@ -208,7 +209,7 @@ def node_keys(g: Graph) -> DataFrame:
 def node_label(g: Graph, ids: DataFrame | Iterable[int], id_col: str = "id") -> DataFrame:
     """Node id → range label (``nodeLabel``, ``FastAccess.hs:658-667``)."""
     if not isinstance(ids, DataFrame):
-        ids = g.spark.createDataFrame([(int(i),) for i in ids], f"{id_col} long")
+        ids = local_df(g.spark, [(int(i),) for i in ids], f"{id_col} long")
     return g.with_node_labels(ids, id_col)
 
 

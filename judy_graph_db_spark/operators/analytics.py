@@ -30,6 +30,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from judy_graph_db_spark.schema import local_df
+
 
 def _unpersist_checkpoint(df: DataFrame) -> None:
     """Free the block-store copy behind a ``localCheckpoint``-ed (or
@@ -1485,7 +1487,7 @@ def _scc_coloring(base: DataFrame, max_peel_rounds: int = 10_000,
             _unpersist_checkpoint(df)
         _unpersist_checkpoint(active_nodes)
         _unpersist_checkpoint(active_edges)
-        return base.sparkSession.createDataFrame([], "id long, scc long")
+        return local_df(base.sparkSession, [], "id long, scc long")
     out = settled_parts[0]
     for p in settled_parts[1:]:
         out = out.union(p)
@@ -1869,7 +1871,7 @@ def maximal_independent_set(edges: DataFrame, seed: int = 7,
                        "left_semi").localCheckpoint(eager=True)
     if not mis_parts:  # no edges → no rounds ran; empty typed result
         spark = edges.sparkSession
-        return spark.createDataFrame([], "id BIGINT, round BIGINT")
+        return local_df(spark, [], "id BIGINT, round BIGINT")
     out = mis_parts[0]
     for p in mis_parts[1:]:
         out = out.unionByName(p)
@@ -1985,8 +1987,7 @@ def maximal_matching(edges: DataFrame, seed: int = 7,
         _unpersist_checkpoint(und)
         und = nxt
     if not parts:
-        return edges.sparkSession.createDataFrame(
-            [], "a BIGINT, b BIGINT, round BIGINT")
+        return local_df(edges.sparkSession, [], "a BIGINT, b BIGINT, round BIGINT")
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -2215,8 +2216,7 @@ def minimum_spanning_forest(edges: DataFrame, weight_col: str = "weight",
                 if ra != rb:
                     parent[max(ra, rb)] = min(ra, rb)
             mapping = [(c, find(c)) for c in parent]
-            merged = picked.sparkSession.createDataFrame(
-                mapping, "id long, component long")
+            merged = local_df(picked.sparkSession, mapping, "id long, component long")
         else:
             merged = connected_components(cedges)  # (id=old comp, component=new)
         nxt = (
@@ -2698,7 +2698,7 @@ def shortest_path_tree(edges: DataFrame, sources: "list[int]",
     spark = edges.sparkSession
     e = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
     frontier = (
-        spark.createDataFrame([(int(s),) for s in sources], "id BIGINT")
+        local_df(spark, [(int(s),) for s in sources], "id BIGINT")
         .distinct()
         .select(F.col("id").alias("root"), F.col("id").alias("id"))
         .localCheckpoint(eager=True)
@@ -2723,8 +2723,7 @@ def shortest_path_tree(edges: DataFrame, sources: "list[int]",
             nxt.select("root", "id")).localCheckpoint(eager=True)
         frontier = nxt.select("root", "id")
     if not parts:
-        return spark.createDataFrame(
-            [], "root BIGINT, id BIGINT, depth BIGINT, parent BIGINT")
+        return local_df(spark, [], "root BIGINT, id BIGINT, depth BIGINT, parent BIGINT")
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -2975,8 +2974,8 @@ def diameter_double_sweep(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     sym = _symmetric(edges).localCheckpoint(eager=True)
     start_row = sym.agg(F.min("src").alias("m")).collect()[0]
     if start_row["m"] is None:
-        return edges.sparkSession.createDataFrame(
-            [], "start BIGINT, far_node BIGINT, ecc_start BIGINT, "
+        return local_df(
+            edges.sparkSession, [], "start BIGINT, far_node BIGINT, ecc_start BIGINT, "
                 "diameter_lb BIGINT")
     start = int(start_row["m"])
     t1 = shortest_path_tree(sym, [start], max_iter=max_iter)
@@ -3230,10 +3229,9 @@ def landmark_distances(edges: DataFrame, n_landmarks: int = 4,
     marks = [int(r["id"]) for r in deg.collect()]
     spark = edges.sparkSession
     if not marks:
-        return spark.createDataFrame(
-            [], "landmark BIGINT, id BIGINT, depth BIGINT")
-    frontier = spark.createDataFrame(
-        [(m, m) for m in marks], "landmark BIGINT, id BIGINT"
+        return local_df(spark, [], "landmark BIGINT, id BIGINT, depth BIGINT")
+    frontier = local_df(
+        spark, [(m, m) for m in marks], "landmark BIGINT, id BIGINT"
     ).localCheckpoint(eager=True)
     settled = frontier
     out = frontier.select(
@@ -3362,8 +3360,7 @@ def greedy_coloring(edges: DataFrame, max_iter: int = 64,
         .select("id", pri.alias("pri"))
         .localCheckpoint(eager=True)
     )
-    colored = spark.createDataFrame(
-        [], "id BIGINT, color BIGINT, round BIGINT")
+    colored = local_df(spark, [], "id BIGINT, color BIGINT, round BIGINT")
     uncolored = nodes
     for rnd in range(1, max_iter + 1):
         if uncolored.limit(1).count() == 0:
@@ -3902,14 +3899,14 @@ def girvan_newman_split(edges: DataFrame, n_removals: int = 1,
             q = _q_from_labels(comp) if n_pivots is None else _q_scaled(und)
             if q > best_q:
                 best_r, best_q = r + 1, q
-    rem_df = spark.createDataFrame(
-        removed, "round long, src long, dst long, betweenness double")
+    rem_df = local_df(
+        spark, removed, "round long, src long, dst long, betweenness double")
     if pick == "modularity" and best_r < len(removed):
         # ONE anti-join against the argmax prefix's removed pairs (both
         # orientations) — plan depth constant in best_r, vs the per-edge
         # filter chain that grew O(prefix) predicates
-        rem_pairs = spark.createDataFrame(
-            [(a, b) for _rr, a, b, _s in removed[:best_r]],
+        rem_pairs = local_df(
+            spark, [(a, b) for _rr, a, b, _s in removed[:best_r]],
             "src long, dst long")
         sym = rem_pairs.union(rem_pairs.select(
             F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -4264,8 +4261,7 @@ def betweenness_sampled(edges: DataFrame, n_pivots: int = 16,
              .unionByName(e.select(F.col("dst").alias("id"))).distinct())
     n = nodes.count()
     if n == 0:
-        return _done(spark.createDataFrame(
-            [], "id BIGINT, betweenness DOUBLE"))
+        return _done(local_df(spark, [], "id BIGINT, betweenness DOUBLE"))
     if pivots is not None:
         pick = (pivots.select("id").distinct().join(nodes, "id")
                 .localCheckpoint(eager=False))
@@ -4280,15 +4276,13 @@ def betweenness_sampled(edges: DataFrame, n_pivots: int = 16,
     ck.append(pick)
     k = pick.count()
     if k == 0:
-        return _done(spark.createDataFrame(
-            [], "id BIGINT, betweenness DOUBLE"))
+        return _done(local_df(spark, [], "id BIGINT, betweenness DOUBLE"))
     slices, counts = _pivot_sigma_bfs(e, pick, max_iter, horizon=horizon,
                                       ckpts=ck)
     node_parts, _ = _brandes_backward(slices, counts, e, want_edges=False,
                                       ckpts=ck)
     if not node_parts:
-        return _done(spark.createDataFrame(
-            [], "id BIGINT, betweenness DOUBLE"))
+        return _done(local_df(spark, [], "id BIGINT, betweenness DOUBLE"))
     acc = node_parts[0]
     for p in node_parts[1:]:
         acc = acc.unionByName(p)
@@ -4357,7 +4351,7 @@ def edge_betweenness_sampled(edges: DataFrame, n_pivots: int = 16,
              .unionByName(e.select(F.col("dst").alias("id"))).distinct())
     n = nodes.count()
     if n == 0:
-        return _done(spark.createDataFrame([], empty))
+        return _done(local_df(spark, [], empty))
     if pivots is not None:
         pick = (pivots.select("id").distinct().join(nodes, "id")
                 .localCheckpoint(eager=False))
@@ -4372,13 +4366,13 @@ def edge_betweenness_sampled(edges: DataFrame, n_pivots: int = 16,
     ck.append(pick)
     k = pick.count()
     if k == 0:
-        return _done(spark.createDataFrame([], empty))
+        return _done(local_df(spark, [], empty))
     slices, counts = _pivot_sigma_bfs(e, pick, max_iter, horizon=horizon,
                                       ckpts=ck)
     _, edge_parts = _brandes_backward(slices, counts, e, want_edges=True,
                                       ckpts=ck)
     if not edge_parts:
-        return _done(spark.createDataFrame([], empty))
+        return _done(local_df(spark, [], empty))
     acc = edge_parts[0]
     for p in edge_parts[1:]:
         acc = acc.unionByName(p)
@@ -4734,8 +4728,7 @@ def onion_layers(edges: DataFrame, max_iter: int = 10000) -> DataFrame:
     grow = deg0.agg(F.min("d").alias("gmin"), F.max("d").alias("gmax"),
                     F.count(F.lit(1)).alias("n")).collect()[0]
     if not grow["n"]:
-        return edges.sparkSession.createDataFrame(
-            [], "id long, coreness long, layer long")
+        return local_df(edges.sparkSession, [], "id long, coreness long, layer long")
     out_parts = []
     w_p = 0
 
@@ -4852,8 +4845,7 @@ def onion_layers(edges: DataFrame, max_iter: int = 10000) -> DataFrame:
             F.lit(t1 + 1).cast("long").alias("layer")))
 
     if not out_parts:
-        return edges.sparkSession.createDataFrame(
-            [], "id long, coreness long, layer long")
+        return local_df(edges.sparkSession, [], "id long, coreness long, layer long")
     out = out_parts[0]
     for p in out_parts[1:]:
         out = out.unionByName(p)

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from judy_graph_db_spark.functions.text import WORD_TOKEN_RE
+from judy_graph_db_spark.schema import local_df
 
 __all__ = ["bpe_train", "bpe_train_oracle_sql", "bpe_encode",
            "bpe_encode_oracle_sql"]
@@ -358,15 +359,15 @@ def bpe_train(docs: DataFrame, n_merges: int, text_col: str = "text",
             merges = _train_merges_local_likelihood(local_words, n_merges)
         else:
             merges = _train_merges_local(local_words, n_merges)
-        merges_df = spark.createDataFrame(
-            merges or [], "rank long, a string, b string, count long"
+        merges_df = local_df(
+            spark, merges or [], "rank long, a string, b string, count long"
         )
         sym_freq: dict = {}
         for syms, freq in local_words:
             for s in syms:
                 sym_freq[s] = sym_freq.get(s, 0) + freq
-        vocab = spark.createDataFrame(
-            sorted(sym_freq.items()), "symbol string, freq long"
+        vocab = local_df(
+            spark, sorted(sym_freq.items()), "symbol string, freq long"
         )
         return merges_df, vocab
     merges = []
@@ -430,8 +431,8 @@ def bpe_train(docs: DataFrame, n_merges: int, text_col: str = "text",
             folded = _merge_fold(folded, a, b)
         words = words.withColumn("syms", folded) \
                      .localCheckpoint(eager=True)
-    merges_df = spark.createDataFrame(
-        merges or [], "rank long, a string, b string, count long"
+    merges_df = local_df(
+        spark, merges or [], "rank long, a string, b string, count long"
     )
     vocab = (
         words.select("freq", F.explode("syms").alias("symbol"))

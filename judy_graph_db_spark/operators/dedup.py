@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from judy_graph_db_spark.schema import local_df
+
 SHINGLE_LEN = 8
 SHINGLE_STRIDE = 4
 
@@ -231,9 +233,7 @@ def dedup_clusters(docs: DataFrame, text_col: str = "text",
             if ra != rb:
                 parent[max(ra, rb)] = min(ra, rb)
         mapping = [(c, find(c)) for c in parent]
-        comp = docs.sparkSession.createDataFrame(
-            mapping or [(-1, -1)], "id long, component long"
-        ).filter(F.col("id") >= 0)
+        comp = local_df(docs.sparkSession, mapping, "id long, component long")
     else:
         comp = connected_components(edges)
     return (

@@ -6,6 +6,13 @@ immutable, so every mutation returns a NEW Graph whose ``edges`` plan is the
 old one plus a union/anti-join — cheap to declare, optimized by Catalyst,
 and at scale realized as a MERGE into the storage table.
 
+Every edit batch, key list and id list is a local relation
+(:func:`~judy_graph_db_spark.schema.local_df`): it runs inside the JVM
+and carries its exact size. So a small delete, update or overwrite joins
+``edges`` with the literal as the broadcast side, and ``edges`` is not
+shuffled. An append still aggregates the per-key ``edge_seq`` max over
+``edges``.
+
 Counter semantics reproduced (SURVEY.md §1.5):
 - ``overwrite=False``: parallel edges with the same (src,label) are kept and
   enumerated — new edges get ``edge_seq = existing_count + k``.
@@ -22,7 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from judy_graph_db_spark.graph import Graph
-from judy_graph_db_spark.schema import EDGE_COLS, NODES_SCHEMA
+from judy_graph_db_spark.schema import EDGE_COLS, NODES_SCHEMA, local_df
 
 
 def _edge_batch_df(g: Graph, edges: Sequence[tuple], is_back: bool = False) -> DataFrame:
@@ -30,8 +37,8 @@ def _edge_batch_df(g: Graph, edges: Sequence[tuple], is_back: bool = False) -> D
     for i, (src, dst, lbls) in enumerate(edges):
         lbls = [lbls] if isinstance(lbls, str) else list(lbls)
         rows.append((int(src), int(dst), lbls[0], lbls, is_back, i))
-    return g.spark.createDataFrame(
-        rows, "src long, dst long, label string, labels array<string>, is_back boolean, ins_order long"
+    return local_df(
+        g.spark, rows, "src long, dst long, label string, labels array<string>, is_back boolean, ins_order long"
     )
 
 
@@ -39,7 +46,7 @@ def insert_nodes(g: Graph, nodes: Sequence[tuple]) -> Graph:
     """Upsert node labels (``insertNode``/``insertNodes``,
     ``JudyGraph.hs:134-157``): new rows win over old on id collision."""
     rows = [(int(t[0]), str(t[1]) if t[1] is not None else None, t[2] if len(t) > 2 else None) for t in nodes]
-    new = g.spark.createDataFrame(rows, NODES_SCHEMA).withColumn("_pri", F.lit(1))
+    new = local_df(g.spark, rows, NODES_SCHEMA).withColumn("_pri", F.lit(1))
     old = g.nodes.withColumn("_pri", F.lit(0))
     w = Window.partitionBy("id").orderBy(F.col("_pri").desc())
     merged = (
@@ -116,8 +123,8 @@ def update_node_edges(g: Graph, updates: Sequence[tuple]) -> Graph:
     """Overwrite the target of existing (node, label, seq) keys
     (``updateNodeEdges``, ``FastAccess.hs:442-448``).
     ``updates``: (src, label, edge_seq, new_dst)."""
-    upd = g.spark.createDataFrame(
-        [(int(s), str(l), int(q), int(d)) for s, l, q, d in updates],
+    upd = local_df(
+        g.spark, [(int(s), str(l), int(q), int(d)) for s, l, q, d in updates],
         "src long, label string, edge_seq long, new_dst long",
     )
     key = ["src", "label", "edge_seq"]
@@ -134,7 +141,7 @@ def delete_nodes(g: Graph, node_ids: Iterable[int]) -> Graph:
     """Remove nodes and all incident edges (``deleteNode``/``deleteNodes``,
     ``FastAccess.hs:351-358`` — the reference's version is a near-no-op on
     judy; ours actually deletes). Anti-join on the id list."""
-    ids = g.spark.createDataFrame([(int(i),) for i in node_ids], "id long")
+    ids = local_df(g.spark, [(int(i),) for i in node_ids], "id long")
     nodes = g.nodes.join(ids, "id", "left_anti")
     edges = (
         g.edges.join(ids.withColumnRenamed("id", "src"), "src", "left_anti")
@@ -152,7 +159,7 @@ def delete_edges(g: Graph, pairs: Sequence[tuple]) -> Graph:
     n0→n1 row (``is_back=False``) and its own back row (``is_back=True`` at
     n1→n0) are deleted — an independent forward edge n1→n0 is untouched
     (``FastAccess.hs:364-369`` keys the delete on the n0 side only)."""
-    p = g.spark.createDataFrame([(int(a), int(b)) for a, b in pairs], "src long, dst long")
+    p = local_df(g.spark, [(int(a), int(b)) for a, b in pairs], "src long, dst long")
     fwd = p.withColumn("is_back", F.lit(False))
     rev = p.select(
         F.col("dst").alias("src"), F.col("src").alias("dst"), F.lit(True).alias("is_back")
@@ -168,8 +175,8 @@ def delete_edges(g: Graph, pairs: Sequence[tuple]) -> Graph:
 def delete_edge_keys(g: Graph, keys: Sequence[tuple]) -> Graph:
     """Delete explicit (src,label,edge_seq) keys (``deleteNodeEdgeListJ/E``,
     ``FastAccess.hs:557-561``, ``Enum.hs:449-453``)."""
-    k = g.spark.createDataFrame(
-        [(int(s), str(l), int(q)) for s, l, q in keys], "src long, label string, edge_seq long"
+    k = local_df(
+        g.spark, [(int(s), str(l), int(q)) for s, l, q in keys], "src long, label string, edge_seq long"
     )
     edges = g.edges.join(k, ["src", "label", "edge_seq"], "left_anti").select(*EDGE_COLS)
     return Graph(g.spark, g.nodes, edges, g.ranges)

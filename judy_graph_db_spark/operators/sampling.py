@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from judy_graph_db_spark.operators.analytics import _unpersist_checkpoint
+
 
 def _edge_hash(seed, *cols) -> "F.Column":
     return F.md5(F.concat_ws("|", F.lit(str(seed)), *[c.cast("string") for c in cols]))
@@ -108,10 +110,7 @@ def random_walks(edges: DataFrame, length: int = 3, seed: int = 0,
     result = out.localCheckpoint(eager=True)
     adj.unpersist()
     for h_df in hops:
-        try:
-            h_df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-        except Exception:
-            pass
+        _unpersist_checkpoint(h_df)
     return result
 
 

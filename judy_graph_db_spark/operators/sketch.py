@@ -45,6 +45,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from judy_graph_db_spark.schema import local_df
+
 __all__ = [
     "bloom_build",
     "bloom_probe",
@@ -389,7 +391,7 @@ def mg_merge(a: DataFrame, b: DataFrame, m: int = 64) -> DataFrame:
     prior = (
         a.select(F.col("subtracted").alias("__s")).limit(1)
         .unionByName(b.select(F.col("subtracted").alias("__s")).limit(1))
-        .unionByName(a.sparkSession.createDataFrame([(0,)], "__s long"))
+        .unionByName(local_df(a.sparkSession, [(0,)], "__s long"))
         .agg(F.sum("__s").alias("__prior")))
     return (
         both.join(F.broadcast(_mg_threshold(both, m)), how="cross")

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 # lowercase word tokens — kept in sync with the oracle twin via import
 from judy_graph_db_spark.functions.text import WORD_TOKEN_RE
+from judy_graph_db_spark.schema import local_df
 
 
 def grouped_quantiles(df: DataFrame, group_cols: Sequence[str],
@@ -1063,8 +1064,7 @@ def perceptron_train(features: DataFrame, labels: DataFrame,
         bias = 0
         errors = []
         for _ in range(int(iters)):
-            wdf = spark.createDataFrame(
-                list(wt.items()) or [(0, 0)], "bucket long, w long")
+            wdf = local_df(spark, list(wt.items()), "bucket long, w long")
             scores = (
                 f.join(F.broadcast(wdf), "bucket", "left")
                 .groupBy(id_col, "y")
@@ -1108,9 +1108,7 @@ def perceptron_train(features: DataFrame, labels: DataFrame,
             bias += int(lr) * st.sy
     finally:
         f.unpersist()
-    wout = spark.createDataFrame(
-        sorted(wt.items()) or [(0, 0)], "bucket long, w long"
-    ).filter(F.col("w") != 0)
+    wout = local_df(spark, sorted(wt.items()), "bucket long, w long").filter(F.col("w") != 0)
     return wout, bias, errors
 
 

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from judy_graph_db_spark.graph import Graph
 from judy_graph_db_spark.plans.pattern import E, N, Pattern
-from judy_graph_db_spark.schema import EDGE_COLS
+from judy_graph_db_spark.schema import EDGE_COLS, local_df
 
 UNBOUNDED_MAX_HOPS = 30  # safety cap for `***` (reference uses 2^32-1, Cypher.hs:135-136)
 
@@ -57,9 +57,15 @@ def _ranges_predicate(g: Graph, col, wanted_labels) -> Optional[object]:
 
 def materialize_node_spec(g: Graph, spec: N, col_name: str) -> DataFrame:
     """``evalNode`` (``Cypher.hs:624-642``): AllNodes → every node; Label →
-    range spans; Nodes → the explicit list."""
+    range spans; Nodes → the explicit list.
+
+    An explicit list is de-duplicated here in Python and becomes a local
+    relation (:func:`local_df`) with its exact size, so the first hop
+    broadcasts it against the edge table; it needs no ``distinct`` and so
+    adds no Exchange. The other specs are de-duplicated by ``distinct``."""
     if spec.ids is not None:
-        df = g.spark.createDataFrame([(int(i),) for i in spec.ids], f"{col_name} long")
+        df = local_df(g.spark, [(i,) for i in dict.fromkeys(int(i) for i in spec.ids)],
+                      f"{col_name} long")
     elif spec.labels is not None:
         pred = _ranges_predicate(g, F.col("id"), spec.labels)
         if pred is not None and g.nodes.isEmpty():
@@ -72,7 +78,7 @@ def materialize_node_spec(g: Graph, spec: N, col_name: str) -> DataFrame:
                 df = src.filter(F.col("label").isin(list(spec.labels))).select(
                     F.col("id").alias(col_name))
             else:
-                df = g.spark.createDataFrame([], f"{col_name} long")
+                df = local_df(g.spark, [], f"{col_name} long")
     else:
         if not g.nodes.isEmpty():
             df = g.nodes.select(F.col("id").alias(col_name))
@@ -84,7 +90,7 @@ def materialize_node_spec(g: Graph, spec: N, col_name: str) -> DataFrame:
             )
     if spec.where is not None:
         df = df.filter(spec.where(F.col(col_name)))
-    return df.distinct()
+    return df if spec.ids is not None else df.distinct()
 
 
 def restrict_to_node_spec(g: Graph, df: DataFrame, col_name: str, spec: N) -> DataFrame:
@@ -712,11 +718,11 @@ def create_mem(g: Graph, pattern: Pattern) -> tuple[Graph, GraphDiff]:
     # node diffs: explicit-id specs can reference ids the node table lacks
     spec_ids = [int(i) for s in node_specs if s.ids is not None for i in s.ids]
     if spec_ids and not g.nodes.isEmpty():
-        ids_df = g.spark.createDataFrame([(i,) for i in sorted(set(spec_ids))], "id long")
+        ids_df = local_df(g.spark, [(i,) for i in sorted(set(spec_ids))], "id long")
         nodes_added = ids_df.join(g.nodes.select("id"), "id", "left_anti")
     else:
-        nodes_added = g.spark.createDataFrame([], "id long")
-    nodes_deleted = g.spark.createDataFrame([], "id long")
+        nodes_added = local_df(g.spark, [], "id long")
+    nodes_deleted = local_df(g.spark, [], "id long")
     return (Graph(g.spark, g.nodes, edges, g.ranges),
             GraphDiff(added, deleted, nodes_added, nodes_deleted))
 

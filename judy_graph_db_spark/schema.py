@@ -14,11 +14,18 @@ reference's parallel-edge counter (``FastAccess.hs:293-315``); ``is_back``
 replaces the back-bit ``edgeBackward=0x80000000`` (``FastAccess.hs:149-150``);
 ``labels`` (array) replaces the summed orthogonal attr bits
 (``FastAccess.hs:271-278``).
+
+:func:`local_df` is the one place Python rows become a DataFrame.
 """
 
 from __future__ import annotations
 
+from typing import Iterable
+
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 NODES_SCHEMA = T.StructType(
     [
@@ -50,3 +57,24 @@ RANGES_SCHEMA = T.StructType(
 
 EDGE_COLS = [f.name for f in EDGES_SCHEMA.fields]
 NODE_COLS = [f.name for f in NODES_SCHEMA.fields]
+
+
+def local_df(spark: SparkSession, rows: Iterable[tuple], schema: T.StructType | str) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` (tuples in ``schema`` order;
+    ``schema`` is a StructType or a DDL string).
+
+    The rows go in as a ``pyarrow.Table``, which Spark plans as a JVM
+    ``LocalRelation`` whatever the session's Arrow setting. A plain
+    ``createDataFrame(<list>)`` plans a ``LogicalRDD`` instead: every
+    execution starts Python workers, and its size estimate is
+    ``Long.MaxValue``, so a join can never broadcast it. A local relation
+    carries its exact size, so an id anchor or an edit batch joins the
+    edge table as the broadcast side and the edge table is not shuffled.
+    """
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow)
+    return spark.createDataFrame(table, schema)

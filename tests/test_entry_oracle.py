@@ -3,10 +3,11 @@ entry must hash-match its oracle_sql() twin on DuckDB (sf0.001 here for
 speed; the driver runs sf0.01 — scripts/check_oracle.py replicates that)."""
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import __spark_entry__ as entry_mod
 from tests.oracle_utils import compare, duck_connection

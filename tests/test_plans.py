@@ -601,3 +601,44 @@ def test_cycle_unification_folds_into_join_keys(g):
     for line in plan.splitlines():
         if "Filter (" in line or line.strip().startswith("+- Filter"):
             assert not _re.search(r"n\d+#\d+L = n\d+#\d+L", line), line
+
+
+def _physical_nodes(plan):
+    yield plan
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from _physical_nodes(kids.apply(i))
+
+
+def test_literal_anchor_and_edit_batch_broadcast(spark):
+    """An id anchor and a delete list are local relations with exact
+    sizes: on a cached edge table above the broadcast threshold (and the
+    literals below it) both join as the broadcast side, so the edge table
+    is never shuffled for an 8-edge write or a one-customer read."""
+    from judy_graph_db_spark.operators.mutation import delete_edges
+
+    g = tpch_graph(spark, SF_DIR)
+    g.edges.cache().count()
+    keys = ("spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.enabled")
+    saved = {k: spark.conf.get(k) for k in keys}
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024))
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        c = 3 * B + 1
+        cases = {
+            "hop1": (table(g, N(ids=[c]) >> E("PLACED", direction="r") >> N()), 1),
+            "delete": (delete_edges(g, [(c, 5 * B + 1), (c, 5 * B + 2)]).edges, 2),
+        }
+        for name, (df, n_bhj) in cases.items():
+            nodes = list(_physical_nodes(df._jdf.queryExecution().executedPlan()))
+            names = [n.nodeName() for n in nodes]
+            assert names.count("SortMergeJoin") == 0, name
+            assert names.count("BroadcastHashJoin") == n_bhj, name
+            for bx in (n for n in nodes if n.nodeName() == "BroadcastExchange"):
+                built = [n.nodeName() for n in _physical_nodes(bx)]
+                assert "LocalTableScan" in built, (name, built)
+                assert "InMemoryTableScan" not in built, (name, built)
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+        g.edges.unpersist()
