@@ -30,6 +30,7 @@ from judy_graph_db_spark.operators import dedup as D
 from judy_graph_db_spark.operators import sampling as SA_ORACLE
 from judy_graph_db_spark.operators import similarity as S
 from judy_graph_db_spark.operators import temporal as TEMPORAL
+from judy_graph_db_spark.sources.edge_list import f4_data_path, read_edge_list
 from judy_graph_db_spark.sources.tpch_graph import (
     B,
     load_tpch_views,
@@ -196,22 +197,19 @@ def _q_pattern_comma(spark, sf_dir):
 
 
 def _q_edge_list_ingest(spark, sf_dir):
-    """insertNodeLines (``Enum.hs:387-407``): ingest the reference's OWN
-    benchmark dataset (367,662 tab-separated int pairs, CRLF) through our
-    edge-list reader and roll up per-source — DuckDB reads the same file
-    with read_csv. Raises loudly if the reference checkout is absent: an
-    empty frame would read as a vacuous green row instead of flagging that
-    this gate stopped testing ingest."""
-    import os as _os
+    """insertNodeLines (``Enum.hs:387-407``): ingest an F4 edge list
+    (367,662 tab-separated int pairs, CRLF) through our edge-list reader
+    and roll up per-source — DuckDB reads the same file with read_csv.
 
-    from judy_graph_db_spark.sources.edge_list import read_edge_list
-
-    path = "/root/reference/benchmark/data.txt"
-    if not _os.path.exists(path):
-        raise FileNotFoundError(
-            f"edge_list_ingest gate needs the reference dataset at {path}"
-        )
-    g = read_edge_list(spark, path, label="MAILED")
+    The file comes from ``edge_list.f4_data_path``, which the DuckDB twin
+    in ``oracle_sql()`` also uses, so both engines read the same bytes.
+    The reference's own ``benchmark/data.txt`` is used first, whenever
+    the reference checkout is present. Without it, the resolver writes
+    the in-repo deterministic generator's file of the same format (ids
+    0..9999, Zipf-skewed degrees). The resolver raises if it cannot
+    produce the file: an empty frame would read as a vacuous green row
+    instead of flagging that this gate stopped testing ingest."""
+    g = read_edge_list(spark, f4_data_path(), label="MAILED")
     return (
         g.edges.filter(~F.col("is_back"))
         .groupBy("src")
@@ -3747,9 +3745,9 @@ UNION ALL
 SELECT 'unbounded', n0, n1, CAST(d AS BIGINT) FROM walk
 UNION ALL
 SELECT 'shortest', n0, n1, CAST(MIN(d) AS BIGINT) FROM walk GROUP BY n0, n1""",
-        "edge_list_ingest": """
+        "edge_list_ingest": f"""
 SELECT CAST(column0 AS BIGINT) AS src, COUNT(*) AS degree
-FROM read_csv('/root/reference/benchmark/data.txt', sep='\t', header=false)
+FROM read_csv('{f4_data_path()}', sep='\t', header=false)
 GROUP BY 1""",
         "point_lookups": f"""{P}
 SELECT 'lookup_node_edge' AS op, CAST(NULL AS VARCHAR) AS label,

@@ -11,12 +11,78 @@ executors; malformed lines are dropped by the reader
 
 from __future__ import annotations
 
+import itertools
+import os
+import random
+import tempfile
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from judy_graph_db_spark.graph import Graph, Ranges
+
+# F4 (FIXTURES.md): the reference checkout's own benchmark edge list
+REFERENCE_DATA_TXT = "/root/reference/benchmark/data.txt"
+F4_SEED = 4
+F4_EDGES = 367_662
+F4_NODES = 10_000
+# Zipf exponent of the endpoint draw: the heaviest source gets ~1.3k of
+# the 367,662 edges, the reference's skew (max out-degree ~1,383)
+_F4_ZIPF_S = 0.46
+
+
+def _f4_bytes() -> bytes:
+    """The F4-shaped edge list: F4_EDGES CRLF lines of ``src<TAB>dst``
+    over ids 0..F4_NODES-1, both endpoints Zipf-drawn through an
+    independent shuffle of the ids (so hubs are spread over the id space,
+    not piled on id 0), all from ``random.Random(F4_SEED)``."""
+    rng = random.Random(F4_SEED)
+    cum = list(itertools.accumulate(
+        (r + 1) ** -_F4_ZIPF_S for r in range(F4_NODES)))
+    src_ids = rng.sample(range(F4_NODES), F4_NODES)
+    dst_ids = rng.sample(range(F4_NODES), F4_NODES)
+    src = rng.choices(src_ids, cum_weights=cum, k=F4_EDGES)
+    dst = rng.choices(dst_ids, cum_weights=cum, k=F4_EDGES)
+    return "".join(
+        f"{s}\t{d}\r\n" for s, d in zip(src, dst)).encode("ascii")
+
+
+def write_f4_edge_list(directory: str | None = None) -> str:
+    """Write the deterministic F4-format edge list (see :func:`_f4_bytes`)
+    to ``<directory>/judy_f4_data_seed<F4_SEED>.txt`` (default: the
+    system temp directory) and return its path. A file already there is
+    reused only if its size matches what the generator produces;
+    otherwise the bytes go to a temp file in the same directory that is
+    then renamed over the target, so a reader never sees a partial file.
+    Raises if the file cannot be produced — callers never get an empty
+    input."""
+    directory = directory or tempfile.gettempdir()
+    path = os.path.join(directory, f"judy_f4_data_seed{F4_SEED}.txt")
+    data = _f4_bytes()
+    if os.path.isfile(path) and os.path.getsize(path) == len(data):
+        return path
+    fd, tmp = tempfile.mkstemp(dir=directory, prefix=".judy_f4_")
+    try:
+        with os.fdopen(fd, "wb") as f:
+            f.write(data)
+        os.replace(tmp, path)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
+        raise
+    return path
+
+
+def f4_data_path() -> str:
+    """The F4 edge-list file (``insertNodeLines`` input): the reference's
+    own ``benchmark/data.txt`` when the reference checkout is present,
+    else the in-repo generated file of the same format
+    (:func:`write_f4_edge_list`). Every consumer that must read the same
+    bytes — an ingest gate and its DuckDB twin — resolves through here."""
+    if os.path.exists(REFERENCE_DATA_TXT):
+        return REFERENCE_DATA_TXT
+    return write_f4_edge_list()
 
 
 def read_edge_list(

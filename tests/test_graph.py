@@ -124,6 +124,54 @@ def test_json_edges_roundtrip_and_edge_list_export(spark, tmp_path):
     assert {(r.src, r.dst) for r in g2.edges.collect()} == {(1, 2), (1, 3), (2, 3)}
 
 
+def test_f4_generator_is_deterministic_in_reference_format(tmp_path):
+    """The generated F4 edge list is byte-identical across runs and has
+    the reference ``benchmark/data.txt`` format: F4_EDGES CRLF lines of
+    ``src<TAB>dst`` over ids 0..9999."""
+    import re
+
+    from judy_graph_db_spark.sources.edge_list import (
+        F4_EDGES, F4_NODES, write_f4_edge_list,
+    )
+
+    (tmp_path / "a").mkdir()
+    (tmp_path / "b").mkdir()
+    a = write_f4_edge_list(str(tmp_path / "a"))
+    b = write_f4_edge_list(str(tmp_path / "b"))
+    data = open(a, "rb").read()
+    assert data == open(b, "rb").read()
+
+    lines = data.splitlines(keepends=True)
+    assert len(lines) == F4_EDGES == 367_662
+    line_re = re.compile(rb"^\d+\t\d+\r\n$")
+    assert all(line_re.match(ln) for ln in lines)
+    ids = {int(x) for ln in lines for x in ln.split()}
+    assert min(ids) >= 0 and max(ids) <= F4_NODES - 1 == 9_999
+
+    # a wrong-sized file at the target path is replaced, not reused
+    open(a, "wb").write(b"0\t1\r\n")
+    assert write_f4_edge_list(str(tmp_path / "a")) == a
+    assert open(a, "rb").read() == data
+    # the atomic write leaves no temp file behind
+    assert [p.name for p in (tmp_path / "a").iterdir()] == [
+        "judy_f4_data_seed4.txt"]
+
+
+def test_f4_data_path_prefers_reference_file(tmp_path, monkeypatch):
+    from judy_graph_db_spark.sources import edge_list
+
+    ref = tmp_path / "data.txt"
+    ref.write_bytes(b"128\t1\r\n")
+    monkeypatch.setattr(edge_list, "REFERENCE_DATA_TXT", str(ref))
+    assert edge_list.f4_data_path() == str(ref)
+
+    monkeypatch.setattr(edge_list, "REFERENCE_DATA_TXT", str(tmp_path / "absent"))
+    monkeypatch.setattr(edge_list.tempfile, "tempdir", str(tmp_path))
+    got = edge_list.f4_data_path()
+    assert got == str(tmp_path / "judy_f4_data_seed4.txt")
+    assert sum(1 for _ in open(got, "rb")) == edge_list.F4_EDGES
+
+
 def test_assign_dense_ids_matches_global_rank(spark):
     """The bucketed two-level rank must reproduce the global
     (label, name) lexicographic rank exactly — dense, 0-based,
