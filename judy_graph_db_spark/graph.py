@@ -28,7 +28,8 @@ from typing import Iterable, Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from judy_graph_db_spark.schema import EDGES_SCHEMA, NODES_SCHEMA, RANGES_SCHEMA, EDGE_COLS, local_df
+from judy_graph_db_spark.schema import (EDGES_SCHEMA, NODES_SCHEMA, RANGES_SCHEMA, EDGE_COLS,
+                                        local_df, union_all)
 
 
 @dataclass(frozen=True)
@@ -238,12 +239,8 @@ class Graph:
         n = self.nodes.count()
         if n:
             return n
-        return (
-            self.edges.select(F.col("src").alias("id"))
-            .union(self.edges.select(F.col("dst").alias("id")))
-            .distinct()
-            .count()
-        )
+        return union_all([self.edges.select(F.col("src").alias("id")),
+                          self.edges.select(F.col("dst").alias("id"))]).distinct().count()
 
     def ranges_df(self) -> DataFrame:
         return self.ranges.to_df(self.spark)
@@ -285,12 +282,12 @@ class Graph:
         key = ["src", "label", "edge_seq", "is_back"]
         w = Window.partitionBy(*key).orderBy(F.col("_pri").desc())
         merged = (
-            left.unionByName(right)
+            union_all([left, right], by_name=True)
             .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .select(*EDGE_COLS)
         )
-        nodes = self.nodes.unionByName(other.nodes).dropDuplicates(["id"])
+        nodes = union_all([self.nodes, other.nodes], by_name=True).dropDuplicates(["id"])
         return Graph(self.spark, nodes, merged, self.ranges)
 
     def intersect_edges(self, other: "Graph") -> "Graph":

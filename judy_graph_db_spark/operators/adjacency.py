@@ -18,7 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from judy_graph_db_spark.graph import Graph
-from judy_graph_db_spark.schema import local_df
+from judy_graph_db_spark.schema import local_df, union_all
 
 
 def _edge_filter(g: Graph, node_id: int | None = None, label: str | None = None,
@@ -175,7 +175,8 @@ def target_nodes_scan(g: Graph) -> DataFrame:
 def nodes_scan(g: Graph) -> DataFrame:
     """All node ids, sources ++ targets with duplicates (``nodesJ``,
     ``FastAccess.hs:470-475``)."""
-    return g.edges.select(F.col("src").alias("id")).union(g.edges.select(F.col("dst").alias("id")))
+    return union_all([g.edges.select(F.col("src").alias("id")),
+                      g.edges.select(F.col("dst").alias("id"))])
 
 
 def get_node_edges(g: Graph) -> DataFrame:

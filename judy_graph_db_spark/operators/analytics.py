@@ -30,7 +30,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from judy_graph_db_spark.schema import local_df
+from judy_graph_db_spark.schema import local_df, union_all
 
 
 def _unpersist_checkpoint(df: DataFrame) -> None:
@@ -56,11 +56,14 @@ def _unpersist_checkpoint(df: DataFrame) -> None:
     Hence the cache-level unpersist only runs on relations THIS module
     cached itself (tagged ``_graft_cached`` by :func:`_prep_edge_rel`);
     everything else is freed RDD-only, which can never touch a caller's
-    CacheManager entry.
+    CacheManager entry. The tagged cache is freed BLOCKING: it exists
+    only at ≥ ``_EDGE_CACHE_MIN_ROWS`` edges and once per operator call,
+    and when the operator returns its blocks are gone from every
+    executor, not merely scheduled for removal.
     """
     if getattr(df, "_graft_cached", False):
         try:
-            df.unpersist(False)
+            df.unpersist(True)
         except Exception:
             pass
     try:
@@ -73,7 +76,13 @@ def _symmetric(edges: DataFrame) -> DataFrame:
     """Distinct undirected neighbor pairs (both directions materialized)."""
     fwd = edges.select("src", "dst")
     rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    return fwd.union(rev).filter(F.col("src") != F.col("dst")).distinct()
+    return union_all([fwd, rev]).filter(F.col("src") != F.col("dst")).distinct()
+
+
+def _endpoints(df: DataFrame, a: str = "src", b: str = "dst", name: str = "id") -> DataFrame:
+    """Columns ``a`` and ``b`` of ``df`` stacked into one column ``name``
+    (UNION ALL: a node appears once per incident row)."""
+    return union_all([df.select(F.col(a).alias(name)), df.select(F.col(b).alias(name))])
 
 
 def _star_round(pairs: DataFrame, large: bool) -> DataFrame:
@@ -105,9 +114,8 @@ def _star_round(pairs: DataFrame, large: bool) -> DataFrame:
     the min), fusing the round's two Window operators into one
     Sort+Window pass over the O(|E|) relation.
     """
-    adj = pairs.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
-        pairs.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    )
+    adj = union_all([pairs.select(F.col("a").alias("u"), F.col("b").alias("v")),
+                     pairs.select(F.col("b").alias("u"), F.col("a").alias("v"))])
     wo = Window.partitionBy("u").orderBy("v")
     ann = adj.select(
         "u",
@@ -122,7 +130,7 @@ def _star_round(pairs: DataFrame, large: bool) -> DataFrame:
         F.col("u").alias("v"), "m"
     )
     out = (
-        rewired.union(self_link)
+        union_all([rewired, self_link])
         .filter(F.col("v") != F.col("m"))
         .select(F.least("v", "m").alias("a"), F.greatest("v", "m").alias("b"))
     )
@@ -155,11 +163,9 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
         .distinct()
         .localCheckpoint(eager=True)
     )
-    id_set = pairs.select(F.col("a").alias("id")).union(
-        pairs.select(F.col("b").alias("id"))
-    )
+    id_set = _endpoints(pairs, "a", "b")
     if nodes is not None:
-        id_set = id_set.union(nodes.select(F.col("id").cast("long")))
+        id_set = union_all([id_set, nodes.select(F.col("id").cast("long"))])
     id_set = id_set.distinct().localCheckpoint(eager=True)
 
     def fingerprint(df: DataFrame) -> tuple:
@@ -214,8 +220,7 @@ def triangle_count(edges: DataFrame) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     deg = (
-        und.select(F.col("a").alias("id"))
-        .union(und.select(F.col("b").alias("id")))
+        _endpoints(und, "a", "b")
         .groupBy("id")
         .agg(F.count(F.lit(1)).alias("d"))
     )
@@ -298,8 +303,7 @@ def pagerank(
         ldeg = links.withColumn("outdeg", F.sum("__w").over(w) / F.col("__w")) \
                     .cache()
     nodes = (
-        ldeg.select(F.col("src").alias("id"))
-        .union(ldeg.select(F.col("dst").alias("id")))
+        _endpoints(ldeg)
         .distinct()  # leaves hashpartitioning(id) in place for the rank joins
         .cache()
     )
@@ -433,8 +437,7 @@ def hits(edges: DataFrame, iters: int = 3) -> DataFrame:
         .cache()
     )
     nodes = (
-        links.select(F.col("src").alias("id"))
-        .union(links.select(F.col("dst").alias("id")))
+        _endpoints(links)
         .distinct()
         .cache()
     )
@@ -560,8 +563,7 @@ def personalized_pagerank(
     w = Window.partitionBy("src")
     ldeg = links.withColumn("outdeg", F.count(F.lit(1)).over(w)).cache()
     nodes = (
-        ldeg.select(F.col("src").alias("id"))
-        .union(ldeg.select(F.col("dst").alias("id")))
+        _endpoints(ldeg)
         .distinct()
         .cache()
     )
@@ -940,7 +942,7 @@ def minplus_closure(
         # doubling round instead of two (r14); free the predecessor only
         # after the fingerprint job has materialized the new state
         r = (
-            r.union(doubled)
+            union_all([r, doubled])
             .groupBy("src", "dst")
             .agg(F.min("depth").alias("depth"))
             .localCheckpoint(eager=False)
@@ -1067,8 +1069,8 @@ def katz_centrality(edges: DataFrame, alpha_pow2: int = 1,
     e = edges.select("src", "dst").distinct()
     pk = e.groupBy(F.col("dst").alias("id")).agg(
         F.count(F.lit(1)).alias("c"))
-    total = pk.select(
-        "id", (F.col("c") * F.lit(1 << (alpha_pow2 * (iters - 1)))).alias("k"))
+    terms = [pk.select(
+        "id", (F.col("c") * F.lit(1 << (alpha_pow2 * (iters - 1)))).alias("k"))]
     for k in range(2, iters + 1):
         pk = (
             pk.join(e.withColumnRenamed("src", "id"), "id")
@@ -1076,9 +1078,8 @@ def katz_centrality(edges: DataFrame, alpha_pow2: int = 1,
             .agg(F.sum("c").alias("c"))
         )
         w = 1 << (alpha_pow2 * (iters - k))
-        total = total.unionByName(
-            pk.select("id", (F.col("c") * F.lit(w)).alias("k")))
-    return total.groupBy("id").agg(F.sum("k").alias("katz_scaled"))
+        terms.append(pk.select("id", (F.col("c") * F.lit(w)).alias("k")))
+    return union_all(terms, by_name=True).groupBy("id").agg(F.sum("k").alias("katz_scaled"))
 
 
 def katz_oracle_sql(edges_sql: str, alpha_pow2: int = 1, iters: int = 3,
@@ -1212,8 +1213,7 @@ def strongly_connected_components(edges: DataFrame, method: str = "auto",
 
 def _scc_closure(base: DataFrame, max_iter: int = 20) -> DataFrame:
     nodes = (
-        base.select(F.col("src").alias("id"))
-        .union(base.select(F.col("dst").alias("id")))
+        _endpoints(base)
         .distinct()
     )
     # reachability-only doubling: SCC needs the pair SET, not min depths —
@@ -1242,7 +1242,7 @@ def _scc_closure(base: DataFrame, max_iter: int = 20) -> DataFrame:
         # non-eager checkpoint: the convergence count materializes the
         # round's reach set — one job per round instead of two (r14);
         # the predecessor is freed only after that job has run
-        reach = reach.union(doubled).distinct().localCheckpoint(eager=False)
+        reach = union_all([reach, doubled]).distinct().localCheckpoint(eager=False)
         n = reach.count()
         _unpersist_checkpoint(prev_state)
         if n == prev_n:
@@ -1304,8 +1304,7 @@ def _scc_coloring(base: DataFrame, max_peel_rounds: int = 10_000,
     # both (r15 — was 2 eager setup jobs)
     active_edges = base.localCheckpoint(eager=False)
     active_nodes = (
-        active_edges.select(F.col("src").alias("id"))
-        .union(active_edges.select(F.col("dst").alias("id")))
+        _endpoints(active_edges)
         .distinct()
         .localCheckpoint(eager=False)
     )
@@ -1335,12 +1334,12 @@ def _scc_coloring(base: DataFrame, max_peel_rounds: int = 10_000,
         # coloring wall-time (CHANGELOG item 58)
         while True:
             keep = (
-                active_edges.select(F.col("src").alias("id"),
-                                    F.lit(1).alias("o"), F.lit(0).alias("i"))
-                .unionByName(
+                union_all([
+                    active_edges.select(F.col("src").alias("id"),
+                                        F.lit(1).alias("o"), F.lit(0).alias("i")),
                     active_edges.select(F.col("dst").alias("id"),
                                         F.lit(0).alias("o"),
-                                        F.lit(1).alias("i")))
+                                        F.lit(1).alias("i"))], by_name=True)
                 .groupBy("id")
                 .agg(F.max("o").alias("has_out"), F.max("i").alias("has_in"))
                 .filter((F.col("has_out") == 1) & (F.col("has_in") == 1))
@@ -1448,9 +1447,9 @@ def _scc_coloring(base: DataFrame, max_peel_rounds: int = 10_000,
             old = in_scc
             # same one-job merge as the forward sweep (r14)
             in_scc = (
-                in_scc.select("id", "color", F.lit(False).alias("new"))
-                .unionByName(add.select(
-                    "id", "color", F.lit(True).alias("new")))
+                union_all([in_scc.select("id", "color", F.lit(False).alias("new")),
+                           add.select("id", "color", F.lit(True).alias("new"))],
+                          by_name=True)
                 .localCheckpoint(eager=False)
             )
             any_new = in_scc.agg(
@@ -1488,12 +1487,9 @@ def _scc_coloring(base: DataFrame, max_peel_rounds: int = 10_000,
         _unpersist_checkpoint(active_nodes)
         _unpersist_checkpoint(active_edges)
         return local_df(base.sparkSession, [], "id long, scc long")
-    out = settled_parts[0]
-    for p in settled_parts[1:]:
-        out = out.union(p)
     # ONE self-contained checkpoint for the caller (as before), then the
     # slice-backing and residual-active checkpoints are freed
-    out = out.localCheckpoint(eager=True)
+    out = union_all(settled_parts).localCheckpoint(eager=True)
     for df in slice_ck:
         _unpersist_checkpoint(df)
     for df in pend_free:
@@ -1620,14 +1616,13 @@ def incremental_connected_components(labels: DataFrame,
         )
     )
     fresh = (
-        new_edges.select(F.col("src").alias("id"))
-        .union(new_edges.select(F.col("dst").alias("id")))
+        _endpoints(new_edges)
         .distinct()
         .join(lab.select("id"), "id", "left_anti")
         .join(q, F.col("id") == F.col("_qid"), "left")
         .select("id", F.coalesce(F.col("_qcomp"), F.col("id")).alias("component"))
     )
-    return updated_old.unionByName(fresh)
+    return union_all([updated_old, fresh], by_name=True)
 
 
 def local_clustering(edges: DataFrame,
@@ -1741,9 +1736,9 @@ def _k_truss_peel(und: DataFrame, k: int, max_iter: int) -> DataFrame:
                   ["x", "z"], "left_semi")
         )
         sup = (
-            tri.select(F.col("x").alias("a"), F.col("y").alias("b"))
-            .unionByName(tri.select(F.col("y").alias("a"), F.col("z").alias("b")))
-            .unionByName(tri.select(F.col("x").alias("a"), F.col("z").alias("b")))
+            union_all([tri.select(F.col("x").alias("a"), F.col("y").alias("b")),
+                       tri.select(F.col("y").alias("a"), F.col("z").alias("b")),
+                       tri.select(F.col("x").alias("a"), F.col("z").alias("b"))], by_name=True)
             .groupBy("a", "b").agg(F.count(F.lit(1)).alias("support"))
         )
         # non-eager checkpoint: the convergence count materializes the
@@ -1858,10 +1853,11 @@ def maximal_independent_set(edges: DataFrame, seed: int = 7,
         )
         mis_parts.append(winners.select("id", F.lit(r).cast("long").alias("round")))
         # deactivate winners and their neighbors
-        removed = winners.unionByName(
+        removed = union_all([
+            winners,
             sym.join(winners.withColumnRenamed("id", "src"), "src",
                      "left_semi").select(F.col("dst").alias("id"))
-        ).distinct()
+        ], by_name=True).distinct()
         nxt = active_nodes.join(removed, "id", "left_anti").localCheckpoint(eager=True)
         _unpersist_checkpoint(active_nodes)
         active_nodes = nxt
@@ -1872,10 +1868,7 @@ def maximal_independent_set(edges: DataFrame, seed: int = 7,
     if not mis_parts:  # no edges → no rounds ran; empty typed result
         spark = edges.sparkSession
         return local_df(spark, [], "id BIGINT, round BIGINT")
-    out = mis_parts[0]
-    for p in mis_parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return union_all(mis_parts, by_name=True)
 
 
 def mis_oracle_sql(edges_sql: str, seed: int = 7, rounds: int = 24,
@@ -1955,8 +1948,8 @@ def maximal_matching(edges: DataFrame, seed: int = 7,
             16, 10,
         ).cast("long")
         wp = und.select("a", "b", pri.alias("p"))
-        incid = wp.select(F.col("a").alias("node"), "p", "a", "b").unionByName(
-            wp.select(F.col("b").alias("node"), "p", "a", "b"))
+        incid = union_all([wp.select(F.col("a").alias("node"), "p", "a", "b"),
+                           wp.select(F.col("b").alias("node"), "p", "a", "b")], by_name=True)
         nmin = incid.groupBy("node").agg(
             F.min(F.struct("p", "a", "b")).alias("nm"))
         key = F.struct("p", "a", "b")
@@ -1975,8 +1968,7 @@ def maximal_matching(edges: DataFrame, seed: int = 7,
             .localCheckpoint(eager=False)
         )
         parts.append(sel.select("a", "b", F.lit(r).cast("long").alias("round")))
-        matched = sel.select(F.col("a").alias("node")).unionByName(
-            sel.select(F.col("b").alias("node"))).distinct()
+        matched = _endpoints(sel, "a", "b", "node").distinct()
         nxt = (
             und.join(matched.withColumnRenamed("node", "a"), "a", "left_anti")
             .join(matched.withColumnRenamed("node", "b"), "b", "left_anti")
@@ -1988,10 +1980,7 @@ def maximal_matching(edges: DataFrame, seed: int = 7,
         und = nxt
     if not parts:
         return local_df(edges.sparkSession, [], "a BIGINT, b BIGINT, round BIGINT")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return union_all(parts, by_name=True)
 
 
 def coarsen_graph(edges: DataFrame, matching: DataFrame,
@@ -2143,8 +2132,7 @@ def minimum_spanning_forest(edges: DataFrame, weight_col: str = "weight",
         .localCheckpoint(eager=True)
     )
     comp = (
-        canon.select(F.col("a").alias("id"))
-        .union(canon.select(F.col("b").alias("id")))
+        _endpoints(canon, "a", "b")
         .distinct()
         .select("id", F.col("id").alias("comp"))
         .localCheckpoint(eager=True)
@@ -2163,10 +2151,9 @@ def minimum_spanning_forest(edges: DataFrame, weight_col: str = "weight",
         # below is a plain projection of `picked` — no second pair of
         # component-label joins per round (the tie order is unchanged:
         # equal (w, a, b) means the same edge, which fixes ca/cb).
-        bids = lab.select(
-            F.col("ca").alias("c"), "a", "b", "w", "ca", "cb"
-        ).unionByName(lab.select(
-            F.col("cb").alias("c"), "a", "b", "w", "ca", "cb"))
+        bids = union_all([lab.select(F.col("ca").alias("c"), "a", "b", "w", "ca", "cb"),
+                          lab.select(F.col("cb").alias("c"), "a", "b", "w", "ca", "cb")],
+                         by_name=True)
         picked = (
             bids.groupBy("c")
             .agg(F.min(F.struct(
@@ -2229,10 +2216,8 @@ def minimum_spanning_forest(edges: DataFrame, weight_col: str = "weight",
     if not forest_parts:
         return canon.filter(F.lit(False)).select(
             "a", "b", F.col("w").alias("weight"))
-    out = forest_parts[0]
-    for p in forest_parts[1:]:
-        out = out.unionByName(p)
-    return out.distinct().select("a", "b", F.col("w").alias("weight"))
+    return union_all(forest_parts, by_name=True).distinct().select(
+        "a", "b", F.col("w").alias("weight"))
 
 
 def modularity_scaled(edges: DataFrame, labels: DataFrame) -> DataFrame:
@@ -2268,8 +2253,7 @@ def modularity_scaled(edges: DataFrame, labels: DataFrame) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("in_edges"))
     )
     deg = (
-        lab.select(F.col("ca").alias("community"))
-        .unionByName(lab.select(F.col("cb").alias("community")))
+        _endpoints(lab, "ca", "cb", "community")
         .groupBy("community")
         .agg(F.count(F.lit(1)).alias("tot_degree"))
     )
@@ -2327,15 +2311,17 @@ def greedy_modularity_moves(edges: DataFrame, rounds: int = 3) -> DataFrame:
             .groupBy("community").agg(F.sum("k").alias("tot"))
         )
         cur = labels.select("id", F.col("community").alias("__cur"))
-        kin = (
+        cands = (
             sym.join(lab_d, "dst")
             .select(F.col("src").alias("id"),
                     F.col("__c_dst").alias("cand"), F.lit(1).alias("__one"))
+        )
+        kin = (
             # the node's CURRENT community is always a candidate (k_in may
             # be 0 — without this row a community-isolated node would be
             # forced into a losing move)
-            .unionByName(cur.select("id", F.col("__cur").alias("cand"),
-                                    F.lit(0).alias("__one")))
+            union_all([cands, cur.select("id", F.col("__cur").alias("cand"),
+                                         F.lit(0).alias("__one"))], by_name=True)
             .groupBy("id", "cand")
             .agg(F.sum("__one").alias("k_in"))
         )
@@ -2528,7 +2514,7 @@ def shortest_path_counts(edges: DataFrame, max_iter: int = 100) -> DataFrame:
             _unpersist_checkpoint(nxt)  # empty break-round slice
             break
         slices.append(nxt)
-        settled_keys = settled_keys.unionByName(nxt.select("src", "dst"))
+        settled_keys = union_all([settled_keys, nxt.select("src", "dst")], by_name=True)
         seen_rows += n
         since_collapse += 1
         if since_collapse >= _SEEN_COLLAPSE_LEVELS:
@@ -2536,12 +2522,9 @@ def shortest_path_counts(edges: DataFrame, max_iter: int = 100) -> DataFrame:
             collapse_ck.append(settled_keys)
             since_collapse = 0
         frontier = nxt
-    out = slices[0]
-    for sl in slices[1:]:
-        out = out.unionByName(sl)
     # one self-contained checkpoint for the caller (freeable with a single
     # _unpersist_checkpoint, as before); the per-level slices are freed here
-    out = out.localCheckpoint(eager=True)
+    out = union_all(slices, by_name=True).localCheckpoint(eager=True)
     for sl in slices:
         _unpersist_checkpoint(sl)
     for df in collapse_ck:
@@ -2608,16 +2591,12 @@ def community_conductance(edges: DataFrame, labels: DataFrame) -> DataFrame:
     lab = und.join(la, "a").join(lb, "b")
     two_m = 2 * und.count()
     cut = (
-        lab.filter(F.col("ca") != F.col("cb"))
-        .select(F.col("ca").alias("community"))
-        .unionByName(lab.filter(F.col("ca") != F.col("cb"))
-                     .select(F.col("cb").alias("community")))
+        _endpoints(lab.filter(F.col("ca") != F.col("cb")), "ca", "cb", "community")
         .groupBy("community")
         .agg(F.count(F.lit(1)).alias("cut_edges"))
     )
     vol = (
-        lab.select(F.col("ca").alias("community"))
-        .unionByName(lab.select(F.col("cb").alias("community")))
+        _endpoints(lab, "ca", "cb", "community")
         .groupBy("community")
         .agg(F.count(F.lit(1)).alias("volume"))
     )
@@ -2719,15 +2698,12 @@ def shortest_path_tree(edges: DataFrame, sources: "list[int]",
         )
         parts.append(nxt.select(
             "root", "id", F.lit(depth).cast("long").alias("depth"), "parent"))
-        settled = settled.unionByName(
-            nxt.select("root", "id")).localCheckpoint(eager=True)
+        settled = union_all([settled, nxt.select("root", "id")],
+                            by_name=True).localCheckpoint(eager=True)
         frontier = nxt.select("root", "id")
     if not parts:
         return local_df(spark, [], "root BIGINT, id BIGINT, depth BIGINT, parent BIGINT")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return union_all(parts, by_name=True)
 
 
 def shortest_path_tree_sql(edges_sql: str, sources: "list[int]",
@@ -3220,8 +3196,7 @@ def landmark_distances(edges: DataFrame, n_landmarks: int = 4,
         raise ValueError("n_landmarks must be positive")
     e = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
     deg = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
+        _endpoints(e)
         .groupBy("id").agg(F.count(F.lit(1)).alias("deg"))
         .orderBy(F.col("deg").desc(), F.col("id").asc())
         .limit(int(n_landmarks))
@@ -3234,8 +3209,8 @@ def landmark_distances(edges: DataFrame, n_landmarks: int = 4,
         spark, [(m, m) for m in marks], "landmark BIGINT, id BIGINT"
     ).localCheckpoint(eager=True)
     settled = frontier
-    out = frontier.select(
-        "landmark", "id", F.lit(0).cast("long").alias("depth"))
+    levels = [frontier.select(
+        "landmark", "id", F.lit(0).cast("long").alias("depth"))]
     for depth in range(1, max_iter + 1):
         if frontier.limit(1).count() == 0:
             break
@@ -3246,11 +3221,11 @@ def landmark_distances(edges: DataFrame, n_landmarks: int = 4,
             .distinct()
             .localCheckpoint(eager=True)
         )
-        out = out.unionByName(nxt.select(
+        levels.append(nxt.select(
             "landmark", "id", F.lit(depth).cast("long").alias("depth")))
-        settled = settled.unionByName(nxt).localCheckpoint(eager=True)
+        settled = union_all([settled, nxt], by_name=True).localCheckpoint(eager=True)
         frontier = nxt
-    return out.localCheckpoint(eager=True)
+    return union_all(levels, by_name=True).localCheckpoint(eager=True)
 
 
 def landmark_distances_sql(edges_sql: str, n_landmarks: int = 4,
@@ -3348,8 +3323,8 @@ def greedy_coloring(edges: DataFrame, max_iter: int = 64,
         .filter(F.col("a") != F.col("b"))
     )
     adj = (
-        und.unionByName(und.select(F.col("b").alias("a"),
-                                   F.col("a").alias("b")))
+        union_all([und, und.select(F.col("b").alias("a"), F.col("a").alias("b"))],
+                  by_name=True)
         .distinct().localCheckpoint(eager=True)
     )
     pri = F.conv(F.substring(F.md5(F.concat_ws(
@@ -3392,7 +3367,7 @@ def greedy_coloring(edges: DataFrame, max_iter: int = 64,
                    "sequence(1, size(used) + 1), used))").alias("color"),
             F.lit(rnd).cast("long").alias("round"),
         ).localCheckpoint(eager=True)
-        colored = colored.unionByName(newly).localCheckpoint(eager=True)
+        colored = union_all([colored, newly], by_name=True).localCheckpoint(eager=True)
         uncolored = uncolored.join(newly.select("id"), "id", "left_anti") \
             .localCheckpoint(eager=True)
     remaining = uncolored.limit(1).count()
@@ -3562,13 +3537,12 @@ def edge_betweenness(edges: DataFrame,
         edges, max_iter=max_iter)
     base = (edges.select("src", "dst")
             .filter(F.col("src") != F.col("dst")).distinct())
-    nodes = base.select(F.col("src").alias("id")).union(
-        base.select(F.col("dst").alias("id"))).distinct()
+    nodes = _endpoints(base).distinct()
     diag = nodes.select(
         F.col("id").alias("src"), F.col("id").alias("dst"),
         F.lit(0).cast("long").alias("depth"),
         F.lit(1).cast("long").alias("sigma"))
-    aug = C.select("src", "dst", "depth", "sigma").unionByName(diag)
+    aug = union_all([C.select("src", "dst", "depth", "sigma"), diag], by_name=True)
     a = aug.select(F.col("src").alias("s"), F.col("dst").alias("u"),
                    F.col("depth").alias("d1"), F.col("sigma").alias("sig1"))
     if sources is not None:
@@ -3753,12 +3727,10 @@ def girvan_newman_split(edges: DataFrame, n_removals: int = 1,
     e0 = edges.select("src", "dst").localCheckpoint(eager=False)
     # node set from the RAW edges — a node whose only edges are
     # self-loops must still appear in the labels output
-    all_nodes = (e0.select(F.col("src").alias("id"))
-                 .unionByName(e0.select(F.col("dst").alias("id")))
-                 .distinct().localCheckpoint(eager=True))
+    all_nodes = _endpoints(e0).distinct().localCheckpoint(eager=True)
     und0 = e0.filter(F.col("src") != F.col("dst"))
-    und0 = und0.union(und0.select(F.col("dst").alias("src"),
-                                  F.col("src").alias("dst"))).distinct() \
+    und0 = union_all([und0, und0.select(F.col("dst").alias("src"),
+                                        F.col("src").alias("dst"))]).distinct() \
         .localCheckpoint(eager=False)
     und = und0
     if method == "exact":
@@ -3877,8 +3849,8 @@ def girvan_newman_split(edges: DataFrame, n_removals: int = 1,
             sub = und.join(x_ids.select(F.col("id").alias("src")),
                            "src", "left_semi").localCheckpoint(eager=True)
             cc_sub = connected_components(sub, nodes=x_ids)
-            new_comp = comp.filter(F.col("component") != comp_a) \
-                .unionByName(cc_sub).localCheckpoint(eager=True)
+            new_comp = union_all([comp.filter(F.col("component") != comp_a), cc_sub],
+                                 by_name=True).localCheckpoint(eager=True)
             _unpersist_checkpoint(comp)
             comp = new_comp
             if not last:
@@ -3886,10 +3858,10 @@ def girvan_newman_split(edges: DataFrame, n_removals: int = 1,
                 # final round the update is dead work in every mode (r15)
                 C = shortest_path_counts(sub, max_iter=max_iter)
                 eb_sub = edge_betweenness(sub, closure=C)
-                new_cache = (
-                    eb_cache.join(x_ids.select(F.col("id").alias("src")),
-                                  "src", "left_anti")
-                    .unionByName(eb_sub).localCheckpoint(eager=True))
+                new_cache = union_all(
+                    [eb_cache.join(x_ids.select(F.col("id").alias("src")),
+                                   "src", "left_anti"), eb_sub],
+                    by_name=True).localCheckpoint(eager=True)
                 _unpersist_checkpoint(C)
                 _unpersist_checkpoint(eb_cache)
                 eb_cache = new_cache
@@ -3908,8 +3880,8 @@ def girvan_newman_split(edges: DataFrame, n_removals: int = 1,
         rem_pairs = local_df(
             spark, [(a, b) for _rr, a, b, _s in removed[:best_r]],
             "src long, dst long")
-        sym = rem_pairs.union(rem_pairs.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst")))
+        sym = union_all([rem_pairs, rem_pairs.select(
+            F.col("dst").alias("src"), F.col("src").alias("dst"))])
         cut = und0.join(sym, ["src", "dst"], "left_anti")
         labels = connected_components(cut, nodes=all_nodes)
     elif n_pivots is None and pending_a is not None:
@@ -3928,9 +3900,9 @@ def girvan_newman_split(edges: DataFrame, n_removals: int = 1,
                 .select("id").localCheckpoint(eager=True)
             sub = und_f.join(x_ids.select(F.col("id").alias("src")),
                              "src", "left_semi").localCheckpoint(eager=True)
-            out = comp_f.filter(F.col("component") != comp_a) \
-                .unionByName(connected_components(sub, nodes=x_ids)) \
-                .localCheckpoint(eager=True)
+            out = union_all([comp_f.filter(F.col("component") != comp_a),
+                             connected_components(sub, nodes=x_ids)],
+                            by_name=True).localCheckpoint(eager=True)
             _unpersist_checkpoint(sub)
             _unpersist_checkpoint(x_ids)
             return out
@@ -4092,7 +4064,7 @@ def _pivot_sigma_bfs(e: DataFrame, pivots: DataFrame, max_iter: int,
             break
         slices.append(nxt)
         counts.append(n)
-        seen = seen.unionByName(nxt.select("s", "id"))
+        seen = union_all([seen, nxt.select("s", "id")], by_name=True)
         seen_rows += n
         since_collapse += 1
         if since_collapse >= _SEEN_COLLAPSE_LEVELS:
@@ -4257,8 +4229,7 @@ def betweenness_sampled(edges: DataFrame, n_pivots: int = 16,
         return out
 
     e = _prep_edge_rel(edges, ckpts=ck)
-    nodes = (e.select(F.col("src").alias("id"))
-             .unionByName(e.select(F.col("dst").alias("id"))).distinct())
+    nodes = _endpoints(e).distinct()
     n = nodes.count()
     if n == 0:
         return _done(local_df(spark, [], "id BIGINT, betweenness DOUBLE"))
@@ -4283,11 +4254,8 @@ def betweenness_sampled(edges: DataFrame, n_pivots: int = 16,
                                       ckpts=ck)
     if not node_parts:
         return _done(local_df(spark, [], "id BIGINT, betweenness DOUBLE"))
-    acc = node_parts[0]
-    for p in node_parts[1:]:
-        acc = acc.unionByName(p)
     factor = float(n) / k if scale else 1.0
-    return _done(acc.groupBy("id")
+    return _done(union_all(node_parts, by_name=True).groupBy("id")
                  .agg((F.sum("delta") * F.lit(factor)).alias("betweenness"))
                  .filter(F.col("betweenness") > 0))
 
@@ -4347,8 +4315,7 @@ def edge_betweenness_sampled(edges: DataFrame, n_pivots: int = 16,
         return out
 
     e = _prep_edge_rel(edges, ckpts=ck)
-    nodes = (e.select(F.col("src").alias("id"))
-             .unionByName(e.select(F.col("dst").alias("id"))).distinct())
+    nodes = _endpoints(e).distinct()
     n = nodes.count()
     if n == 0:
         return _done(local_df(spark, [], empty))
@@ -4373,11 +4340,8 @@ def edge_betweenness_sampled(edges: DataFrame, n_pivots: int = 16,
                                       ckpts=ck)
     if not edge_parts:
         return _done(local_df(spark, [], empty))
-    acc = edge_parts[0]
-    for p in edge_parts[1:]:
-        acc = acc.unionByName(p)
     factor = float(n) / k if scale else 1.0
-    return _done(acc.groupBy("src", "dst")
+    return _done(union_all(edge_parts, by_name=True).groupBy("src", "dst")
                  .agg((F.sum("delta") * F.lit(factor)).alias("betweenness"))
                  .filter(F.col("betweenness") > 0))
 
@@ -4420,9 +4384,7 @@ def hyperball_registers(edges: DataFrame, rounds: int = 3, p: int = 4,
 
     e = edges.select("src", "dst").localCheckpoint(eager=True)
     if nodes is None:
-        nodes = (e.select(F.col("src").alias("id"))
-                 .unionByName(e.select(F.col("dst").alias("id")))
-                 .distinct())
+        nodes = _endpoints(e).distinct()
     else:
         nodes = nodes.select("id").distinct()
     h = _h60(F.col("id"), "hll")
@@ -4443,7 +4405,7 @@ def hyperball_registers(edges: DataFrame, rounds: int = 3, p: int = 4,
             .select(F.col("src").alias("id"), "bucket", "max_rho")
         )
         nxt = (
-            regs.unionByName(contrib)
+            union_all([regs, contrib], by_name=True)
             .groupBy("id", "bucket")
             .agg(F.max("max_rho").alias("max_rho"))
             .localCheckpoint(eager=True)
@@ -4451,12 +4413,9 @@ def hyperball_registers(edges: DataFrame, rounds: int = 3, p: int = 4,
         snapshots.append(nxt)
         regs = nxt
     if with_rounds:
-        out = None
-        for r, snap in enumerate(snapshots):
-            part = snap.select(F.lit(r).cast("long").alias("round"),
-                               "id", "bucket", "max_rho")
-            out = part if out is None else out.unionByName(part)
-        return out
+        return union_all([snap.select(F.lit(r).cast("long").alias("round"),
+                                      "id", "bucket", "max_rho")
+                          for r, snap in enumerate(snapshots)], by_name=True)
     for snap in snapshots[:-1]:
         _unpersist_checkpoint(snap)
     return regs
@@ -4543,8 +4502,7 @@ def directed_triangle_census(edges: DataFrame) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     deg = (
-        und.select(F.col("a").alias("id"))
-        .union(und.select(F.col("b").alias("id")))
+        _endpoints(und, "a", "b")
         .groupBy("id").agg(F.count(F.lit(1)).alias("d"))
     )
     withd = (
@@ -4682,8 +4640,7 @@ def _path_end_distances(psym: DataFrame, max_rounds: int = 64,
         F.col("src").alias("id"), F.lit(0).cast("long").alias("end_dist"))
     inner = st.filter(F.col("term")).groupBy(F.col("v").alias("id")).agg(
         F.min("dist").alias("end_dist"))
-    return (inner.join(ends.select("id"), "id", "left_anti")
-            .unionByName(ends))
+    return union_all([inner.join(ends.select("id"), "id", "left_anti"), ends], by_name=True)
 
 
 def onion_layers(edges: DataFrame, max_iter: int = 10000) -> DataFrame:
@@ -4746,12 +4703,9 @@ def onion_layers(edges: DataFrame, max_iter: int = 10000) -> DataFrame:
         cyc = deg0.select("id").join(pl.select("id"), "id", "left_anti")
         # global numbering: cycles survive the whole k=1 era (w_p waves)
         # untouched, then peel together in the first k=2 wave
-        out = cyc.select(
+        return union_all([cyc.select(
             "id", F.lit(2).cast("long").alias("coreness"),
-            F.lit(w_p + 1).cast("long").alias("layer"))
-        for p in out_parts:
-            out = out.unionByName(p)
-        return out
+            F.lit(w_p + 1).cast("long").alias("layer"))] + out_parts, by_name=True)
 
     has_cycles = False
     d2n = None
@@ -4846,10 +4800,7 @@ def onion_layers(edges: DataFrame, max_iter: int = 10000) -> DataFrame:
 
     if not out_parts:
         return local_df(edges.sparkSession, [], "id long, coreness long, layer long")
-    out = out_parts[0]
-    for p in out_parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return union_all(out_parts, by_name=True)
 
 
 def trussness(edges: DataFrame, k_max: int = 8,

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from judy_graph_db_spark.operators.similarity import norm
+from judy_graph_db_spark.schema import union_all
 
 #: broadcast the materialized (id, cluster) assignment into the
 #: semantic-dedup joins when its MEASURED row count is at most this —
@@ -263,11 +264,8 @@ def pq_train_encode(embeddings: DataFrame, m: int = 4, k: int = 16,
         parts.append(a.select(
             id_col, F.lit(s).cast("long").alias("__sub"),
             F.col("cluster").alias("__code")))
-    codes = parts[0]
-    for p in parts[1:]:
-        codes = codes.unionByName(p)
     return (
-        codes.groupBy(id_col)
+        union_all(parts, by_name=True).groupBy(id_col)
         .agg(F.array_sort(F.collect_list(
             F.struct("__sub", "__code"))).alias("__sc"))
         .select(id_col,
@@ -286,9 +284,9 @@ def pq_codebooks(embeddings: DataFrame, codes: DataFrame, m: int = 4,
     any corpus scale."""
     d = dim // m
     j = embeddings.select(id_col, vec_col).join(codes, id_col)
-    out = None
+    parts = []
     for s in range(m):
-        g = (
+        parts.append(
             j.select(
                 F.col("codes")[s].alias("code"),
                 F.slice(vec_col, s * d + 1, d).alias("__sv"))
@@ -302,8 +300,7 @@ def pq_codebooks(embeddings: DataFrame, codes: DataFrame, m: int = 4,
                     F.array(*[F.col(f"__a{i}") for i in range(d)])
                     .alias("cvec"))
         )
-        out = g if out is None else out.unionByName(g)
-    return out
+    return union_all(parts, by_name=True)
 
 
 def pq_adc_topk(codes: DataFrame, codebooks: DataFrame, query: DataFrame,
@@ -325,13 +322,12 @@ def pq_adc_topk(codes: DataFrame, codebooks: DataFrame, query: DataFrame,
     global top-k which Spark executes as per-partition heaps + a
     driver-sized merge."""
     d = dim // m
-    qsubs = None
-    for s in range(m):
-        q = query.select(
+    qsubs = union_all([
+        query.select(
             F.lit(s).cast("long").alias("sub"),
             F.transform(F.slice(vec_col, s * d + 1, d),
                         lambda x: x.cast("double")).alias("__qv"))
-        qsubs = q if qsubs is None else qsubs.unionByName(q)
+        for s in range(m)], by_name=True)
     dtable = (
         codebooks.join(F.broadcast(qsubs), "sub")
         .withColumn("__dd", _sqdist("__qv", "cvec", d))

@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from judy_graph_db_spark.functions.text import token_count
+from judy_graph_db_spark.schema import union_all
 
 
 def hash_bucket(col) -> "F.Column":
@@ -1820,7 +1821,7 @@ def emit_training_sequences(pieces: DataFrame, vocab: DataFrame,
     eods = pre.select(
         (F.col("__start") + F.col("n_tokens") - 1).alias("gpos"),
         F.lit(int(eod_id)).cast("long").alias("token_id"))
-    stream = placed.unionByName(eods)
+    stream = union_all([placed, eods], by_name=True)
     out = stream.select(
         F.expr(f"gpos div {int(seq_len)}").alias("seq_id"),
         (F.col("gpos") % int(seq_len)).alias("__pos"), "token_id")

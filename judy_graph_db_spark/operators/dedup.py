@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from judy_graph_db_spark.schema import local_df
+from judy_graph_db_spark.schema import local_df, union_all
 
 SHINGLE_LEN = 8
 SHINGLE_STRIDE = 4
@@ -672,7 +672,7 @@ def incremental_lsh_candidates(new_docs: DataFrame, existing_docs: DataFrame,
         .distinct()
         .withColumn("vs_existing", F.lit(False))
     )
-    return vs_old.unionByName(within)
+    return union_all([vs_old, within], by_name=True)
 
 
 def winnow_fingerprints(docs: DataFrame, k: int = 8, w: int = 16,

@@ -6,6 +6,13 @@ immutable, so every mutation returns a NEW Graph whose ``edges`` plan is the
 old one plus a union/anti-join — cheap to declare, optimized by Catalyst,
 and at scale realized as a MERGE into the storage table.
 
+The union is :func:`~judy_graph_db_spark.schema.union_all`, not
+``DataFrame.unionByName``: the latter rewrites the nested UNION ALLs
+inside ``g.edges``'s plan, so a cached edge table no longer matched its
+cache entry and every read of an edited graph re-ran the edge source from
+its files. Through ``union_all`` the old edges are still read from the
+cache, and only the edit batch is new work.
+
 Every edit batch, key list and id list is a local relation
 (:func:`~judy_graph_db_spark.schema.local_df`): it runs inside the JVM
 and carries its exact size. So a small delete, update or overwrite joins
@@ -29,7 +36,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from judy_graph_db_spark.graph import Graph
-from judy_graph_db_spark.schema import EDGE_COLS, NODES_SCHEMA, local_df
+from judy_graph_db_spark.schema import EDGE_COLS, NODES_SCHEMA, local_df, union_all
 
 
 def _edge_batch_df(g: Graph, edges: Sequence[tuple], is_back: bool = False) -> DataFrame:
@@ -50,7 +57,7 @@ def insert_nodes(g: Graph, nodes: Sequence[tuple]) -> Graph:
     old = g.nodes.withColumn("_pri", F.lit(0))
     w = Window.partitionBy("id").orderBy(F.col("_pri").desc())
     merged = (
-        old.unionByName(new)
+        union_all([old, new], by_name=True)
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_pri", "_rn")
@@ -71,7 +78,7 @@ def insert_node_edges(g: Graph, edges: Sequence[tuple], overwrite: bool = False,
             F.col("dst").alias("src"), F.col("src").alias("dst"),
             "label", "labels", F.lit(True).alias("is_back"), "ins_order",
         )
-        batch = batch.unionByName(back)
+        batch = union_all([batch, back], by_name=True)
     return insert_edges_df(g, batch, overwrite=overwrite)
 
 
@@ -104,7 +111,7 @@ def insert_edges_df(g: Graph, batch: DataFrame, overwrite: bool = False) -> Grap
             key + ["edge_seq"],
             "left_anti",
         )
-        merged = old.unionByName(newest)
+        merged = union_all([old, newest], by_name=True)
         return Graph(g.spark, g.nodes, merged, g.ranges)
 
     # append: offset new seqs by the existing per-key count
@@ -116,7 +123,7 @@ def insert_edges_df(g: Graph, batch: DataFrame, overwrite: bool = False) -> Grap
         .withColumn("edge_seq", (F.col("_base") + F.row_number().over(w)).cast("long"))
         .select(*EDGE_COLS)
     )
-    return Graph(g.spark, g.nodes, g.edges.unionByName(new), g.ranges)
+    return Graph(g.spark, g.nodes, union_all([g.edges, new], by_name=True), g.ranges)
 
 
 def update_node_edges(g: Graph, updates: Sequence[tuple]) -> Graph:

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from judy_graph_db_spark.operators.analytics import _unpersist_checkpoint
+from judy_graph_db_spark.schema import union_all
 
 
 def _edge_hash(seed, *cols) -> "F.Column":
@@ -75,10 +76,10 @@ def random_walks(edges: DataFrame, length: int = 3, seed: int = 0,
     frontier = starts.select(
         F.col("id").alias("walk_id"), F.col("id").alias("cur")
     )
-    out = frontier.select(
+    steps = [frontier.select(
         "walk_id", F.lit(0).cast("long").alias("step"),
         F.col("cur").alias("node"),
-    )
+    )]
     hops: list = []
     for s in range(1, length + 1):
         h = _edge_hash(
@@ -101,13 +102,13 @@ def random_walks(edges: DataFrame, length: int = 3, seed: int = 0,
         # twice (next hop's join + the output union) without recompute.
         frontier = step.localCheckpoint(eager=False)
         hops.append(frontier)
-        out = out.unionByName(
+        steps.append(
             frontier.select(
                 "walk_id", F.lit(s).cast("long").alias("step"),
                 F.col("cur").alias("node"),
             )
         )
-    result = out.localCheckpoint(eager=True)
+    result = union_all(steps, by_name=True).localCheckpoint(eager=True)
     adj.unpersist()
     for h_df in hops:
         _unpersist_checkpoint(h_df)
@@ -460,9 +461,9 @@ def metapath_walks(edges: DataFrame, metapath: "list[str]",
                   .select(F.col("src").alias("id")).distinct())
     frontier = starts.select(
         F.col("id").alias("walk_id"), F.col("id").alias("cur"))
-    out = frontier.select(
+    steps = [frontier.select(
         "walk_id", F.lit(0).cast("long").alias("step"),
-        F.col("cur").alias("node"))
+        F.col("cur").alias("node"))]
     for s in range(1, length + 1):
         lbl = metapath[(s - 1) % len(metapath)]
         h = _edge_hash(
@@ -478,10 +479,10 @@ def metapath_walks(edges: DataFrame, metapath: "list[str]",
             .select("walk_id", F.col("pick.d").alias("cur"))
         )
         frontier = step.localCheckpoint(eager=True)
-        out = out.unionByName(frontier.select(
+        steps.append(frontier.select(
             "walk_id", F.lit(s).cast("long").alias("step"),
             F.col("cur").alias("node")))
-    result = out.localCheckpoint(eager=True)
+    result = union_all(steps, by_name=True).localCheckpoint(eager=True)
     adj.unpersist()
     return result
 
@@ -577,9 +578,9 @@ def weighted_random_walks(edges: DataFrame, weight_col: str = "weight",
         starts = adj.select(F.col("src").alias("id")).distinct()
     frontier = starts.select(
         F.col("id").alias("walk_id"), F.col("id").alias("cur"))
-    out = frontier.select(
+    steps = [frontier.select(
         "walk_id", F.lit(0).cast("long").alias("step"),
-        F.col("cur").alias("node"))
+        F.col("cur").alias("node"))]
     for s in range(1, length + 1):
         h = F.conv(F.substring(F.md5(F.concat_ws(
             "|", F.lit(str(seed)), F.col("walk_id").cast("string"),
@@ -593,10 +594,10 @@ def weighted_random_walks(edges: DataFrame, weight_col: str = "weight",
             .select("walk_id", F.col("dst").alias("cur"))
         )
         frontier = step.localCheckpoint(eager=True)
-        out = out.unionByName(frontier.select(
+        steps.append(frontier.select(
             "walk_id", F.lit(s).cast("long").alias("step"),
             F.col("cur").alias("node")))
-    result = out.localCheckpoint(eager=True)
+    result = union_all(steps, by_name=True).localCheckpoint(eager=True)
     adj.unpersist()
     return result
 
@@ -775,9 +776,9 @@ def node2vec_walks(edges: DataFrame, length: int = 3, seed: int = 0,
     frontier = starts.select(
         F.col("id").alias("walk_id"), F.lit(-1).cast("long").alias("prev"),
         F.col("id").alias("cur"))
-    out = frontier.select(
+    steps = [frontier.select(
         "walk_id", F.lit(0).cast("long").alias("step"),
-        F.col("cur").alias("node"))
+        F.col("cur").alias("node"))]
     wb = Window.partitionBy("walk_id").orderBy("dst") \
         .rowsBetween(Window.unboundedPreceding, -1)
     wt = Window.partitionBy("walk_id")
@@ -808,10 +809,10 @@ def node2vec_walks(edges: DataFrame, length: int = 3, seed: int = 0,
                     F.col("dst").alias("cur"))
         )
         frontier = step.localCheckpoint(eager=True)
-        out = out.unionByName(frontier.select(
+        steps.append(frontier.select(
             "walk_id", F.lit(s).cast("long").alias("step"),
             F.col("cur").alias("node")))
-    return out.localCheckpoint(eager=True)
+    return union_all(steps, by_name=True).localCheckpoint(eager=True)
 
 
 def node2vec_walks_oracle_sql(edges_sql: str, length: int = 3,

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from judy_graph_db_spark.schema import union_all
+
 DOT = "aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)), cast(0.0 as double), (acc, v) -> acc + v)"
 NORM = "sqrt(aggregate({a}, cast(0.0 as double), (acc, v) -> acc + cast(v as double) * cast(v as double)))"
 
@@ -310,11 +312,8 @@ def rrf_fuse(rankings: "list[DataFrame]", id_col: str = "id",
                  F.col(rank_col).cast("long").alias("__rank"))
         for r in rankings
     ]
-    allr = parts[0]
-    for p in parts[1:]:
-        allr = allr.unionByName(p)
     return (
-        allr.groupBy(id_col)
+        union_all(parts, by_name=True).groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("n_lists"),
              F.sum(F.expr(f"1000000 div ({int(k0)} + __rank)"))
              .alias("rrf_micro"))
@@ -765,8 +764,8 @@ def bitext_mine(src: DataFrame, tgt: DataFrame, k: int = 4,
         else:
             # one job: both corpus counts union into a single max agg
             # (two separate .count() calls would be two full jobs)
-            n = (src.select(F.count(F.lit(1)).alias("__n"))
-                 .unionByName(tgt.select(F.count(F.lit(1)).alias("__n")))
+            n = (union_all([src.select(F.count(F.lit(1)).alias("__n")),
+                            tgt.select(F.count(F.lit(1)).alias("__n"))], by_name=True)
                  .agg(F.max("__n")).collect()[0][0])
         n_planes = max(1, math.ceil(math.log2(max(n / 128, 2))))
     if n_planes:

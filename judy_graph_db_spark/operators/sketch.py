@@ -45,7 +45,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from judy_graph_db_spark.schema import local_df
+from judy_graph_db_spark.schema import local_df, union_all
 
 __all__ = [
     "bloom_build",
@@ -386,12 +386,12 @@ def mg_merge(a: DataFrame, b: DataFrame, m: int = 64) -> DataFrame:
     bound composes additively (Agarwal et al. 2012, Thm 1). Input
     ``subtracted`` scalars are carried via max (each is uniform on its
     rows). Deterministic; used by the streaming fold."""
-    both = (a.select("key", "count").unionByName(b.select("key", "count"))
+    both = (union_all([a.select("key", "count"), b.select("key", "count")], by_name=True)
             .groupBy("key").agg(F.sum("count").alias("cnt")))
     prior = (
-        a.select(F.col("subtracted").alias("__s")).limit(1)
-        .unionByName(b.select(F.col("subtracted").alias("__s")).limit(1))
-        .unionByName(local_df(a.sparkSession, [(0,)], "__s long"))
+        union_all([a.select(F.col("subtracted").alias("__s")).limit(1),
+                   b.select(F.col("subtracted").alias("__s")).limit(1),
+                   local_df(a.sparkSession, [(0,)], "__s long")], by_name=True)
         .agg(F.sum("__s").alias("__prior")))
     return (
         both.join(F.broadcast(_mg_threshold(both, m)), how="cross")

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 # lowercase word tokens — kept in sync with the oracle twin via import
 from judy_graph_db_spark.functions.text import WORD_TOKEN_RE
-from judy_graph_db_spark.schema import local_df
+from judy_graph_db_spark.schema import local_df, union_all
 
 
 def grouped_quantiles(df: DataFrame, group_cols: Sequence[str],
@@ -468,10 +468,7 @@ def repetition_signals(docs: DataFrame, ns: Sequence[int] = (2, 3, 4),
             led.filter(F.col(f"__w{n - 1}").isNotNull())
             .select("__id", F.lit(n).cast("long").alias("n"),
                     gram.alias("gram")))
-    grams = per_n[0]
-    for p in per_n[1:]:
-        grams = grams.unionByName(p)
-    gc = grams.groupBy("__id", "n", "gram").agg(
+    gc = union_all(per_n, by_name=True).groupBy("__id", "n", "gram").agg(
         F.count(F.lit(1)).alias("__c"))
     return (
         gc.groupBy("__id", "n")

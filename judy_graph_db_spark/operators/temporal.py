@@ -34,6 +34,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from judy_graph_db_spark.schema import union_all
+
 
 def asof_join(
     left: DataFrame,
@@ -99,7 +101,7 @@ def asof_join(
         .orderBy(*order)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    filled = probe.unionByName(quote).select(
+    filled = union_all([probe, quote], by_name=True).select(
         "*", F.last("__rs", ignorenulls=True).over(w).alias("__f"),
         F.last(F.when(F.col("__is_r") == 1, F.col("__t")),
                ignorenulls=True).over(w).alias("__qt"),
@@ -430,7 +432,7 @@ def time_respecting_reachability(edges: DataFrame, src_col: str = "src",
         )
         prev_state = r
         r = (
-            r.union(step)
+            union_all([r, step])
             .groupBy("src", "dst").agg(F.min("t_arr").alias("t_arr"))
             .localCheckpoint(eager=True)
         )
@@ -754,8 +756,7 @@ def scd2_merge(current: DataFrame, updates: DataFrame,
         F.col("__u_ts").alias(from_col),
         F.lit(None).cast("timestamp").alias(to_col))
     out_cols = [key_col, *vals, from_col, to_col]
-    return (closed_rows.select(*out_cols)
-            .unionByName(keep).unionByName(close).unionByName(opens))
+    return union_all([closed_rows.select(*out_cols), keep, close, opens], by_name=True)
 
 
 def rate_anomalies(events: DataFrame, period_seconds: int,

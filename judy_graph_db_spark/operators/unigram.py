@@ -46,6 +46,7 @@ from typing import Iterator
 from pyspark.sql import DataFrame, functions as F
 
 from judy_graph_db_spark.functions.text import WORD_TOKEN_RE
+from judy_graph_db_spark.schema import union_all
 
 __all__ = [
     "unigram_seed_vocab", "with_piece_costs", "unigram_segment_words",
@@ -111,7 +112,7 @@ def unigram_seed_vocab(docs: DataFrame, max_piece_len: int = 4,
         .orderBy(F.col("cnt").desc(), F.col("piece").asc())
         .limit(int(seed_size))
     )
-    return chars.unionByName(multi)
+    return union_all([chars, multi], by_name=True)
 
 
 def with_piece_costs(vocab: DataFrame) -> DataFrame:
@@ -258,7 +259,7 @@ def unigram_train(docs: DataFrame, rounds: int = 2,
             multi = (multi.orderBy(F.col("cnt").desc(), F.col("piece").asc())
                      .limit(max(0, int(vocab_size) - n_chars)))
         prev = costed
-        costed = with_piece_costs(kept_chars.unionByName(multi)) \
+        costed = with_piece_costs(union_all([kept_chars, multi], by_name=True)) \
             .localCheckpoint(eager=True)
         try:
             prev.unpersist()

@@ -19,6 +19,8 @@ from typing import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from judy_graph_db_spark.schema import union_all
+
 UNK = "[UNK]"
 
 
@@ -29,8 +31,8 @@ def wordpiece_vocab_from_pieces(pieces: DataFrame,
     ``##`` continuation form. |vocab|-sized relation — broadcastable by
     construction."""
     p = pieces.select(F.col(piece_col).alias("piece")).distinct()
-    return p.unionByName(
-        p.select(F.concat(F.lit("##"), "piece").alias("piece")))
+    return union_all(
+        [p, p.select(F.concat(F.lit("##"), "piece").alias("piece"))], by_name=True)
 
 
 def _greedy(word: str, vocab: set, k: int, max_pieces: int) -> list:

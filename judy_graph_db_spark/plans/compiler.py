@@ -32,8 +32,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from judy_graph_db_spark.graph import Graph
+from judy_graph_db_spark.operators.adjacency import nodes_scan
 from judy_graph_db_spark.plans.pattern import E, N, Pattern
-from judy_graph_db_spark.schema import EDGE_COLS, local_df
+from judy_graph_db_spark.schema import EDGE_COLS, local_df, union_all
 
 UNBOUNDED_MAX_HOPS = 30  # safety cap for `***` (reference uses 2^32-1, Cypher.hs:135-136)
 
@@ -69,8 +70,7 @@ def materialize_node_spec(g: Graph, spec: N, col_name: str) -> DataFrame:
     elif spec.labels is not None:
         pred = _ranges_predicate(g, F.col("id"), spec.labels)
         if pred is not None and g.nodes.isEmpty():
-            ids = g.edges.select(F.col("src").alias("id")).union(
-                g.edges.select(F.col("dst").alias("id"))).distinct()
+            ids = nodes_scan(g).distinct()
             df = ids.filter(pred).select(F.col("id").alias(col_name))
         else:
             src = g.nodes if not g.nodes.isEmpty() else None
@@ -83,11 +83,7 @@ def materialize_node_spec(g: Graph, spec: N, col_name: str) -> DataFrame:
         if not g.nodes.isEmpty():
             df = g.nodes.select(F.col("id").alias(col_name))
         else:
-            df = (
-                g.edges.select(F.col("src").alias(col_name))
-                .union(g.edges.select(F.col("dst").alias(col_name)))
-                .distinct()
-            )
+            df = nodes_scan(g).select(F.col("id").alias(col_name)).distinct()
     if spec.where is not None:
         df = df.filter(spec.where(F.col(col_name)))
     return df if spec.ids is not None else df.distinct()
@@ -196,7 +192,13 @@ def compile_pattern(g: Graph, pattern: Pattern) -> DataFrame:
 def _walk_several(g: Graph, bindings: DataFrame, espec: E, cur: str, nxt: str,
                   hop: int) -> DataFrame:
     """Variable-length expansion (``walkPaths`` repeat handling,
-    ``Cypher.hs:853-858`` + ``stopRecursion`` ``Cypher.hs:823-837``)."""
+    ``Cypher.hs:853-858`` + ``stopRecursion`` ``Cypher.hs:823-837``).
+
+    Each depth's rows are collected in a list and unioned once through
+    :func:`union_all`. ``DataFrame.union`` would rewrite the nested
+    UNION ALLs inside a cached edge table's plan, so the CacheManager no
+    longer matched it and every ``several`` walk re-ran the edge source
+    from its files; ``union_all`` keeps the cached edges visible."""
     lo, hi = espec.several
     hi_eff = hi if hi is not None else UNBOUNDED_MAX_HOPS
     # per-hop relation without the `several` bounds
@@ -250,16 +252,14 @@ def _walk_several(g: Graph, bindings: DataFrame, espec: E, cur: str, nxt: str,
                 closure["dst"].alias("_next"),
                 closure["depth"].cast("int").alias(f"e{hop}_depth"),
             ).withColumnRenamed("_next", "_cur")
-            for r0 in results:  # lo == 0: depth-0 rows, column already set
-                out = r0.unionByName(out)
-            return out.withColumnRenamed("_cur", nxt)
+            # lo == 0: depth-0 rows first, column already set
+            return union_all(results + [out], by_name=True).withColumnRenamed("_cur", nxt)
 
-    visited = None
     if use_visited:
         start_states = frontier.select(*prev_cols, "_cur").distinct()
         # pre-seed start states only when depth 0 was already reported;
         # otherwise a start node re-reached through a cycle is a result
-        visited = start_states if lo == 0 else start_states.limit(0)
+        visited_parts = [start_states if lo == 0 else start_states.limit(0)]
 
     # Short bounded repeats stay fully lazy: a ≤8-deep join chain is well
     # within Catalyst's comfort zone, so per-depth checkpoint + isEmpty
@@ -278,7 +278,7 @@ def _walk_several(g: Graph, bindings: DataFrame, espec: E, cur: str, nxt: str,
             .distinct()
         )
         if use_visited:
-            stepped = stepped.join(visited, prev_cols + ["_cur"], "left_anti")
+            stepped = stepped.join(union_all(visited_parts), prev_cols + ["_cur"], "left_anti")
         if materialize_rounds:
             fresh = stepped.localCheckpoint(eager=True)
             if fresh.isEmpty():
@@ -286,7 +286,7 @@ def _walk_several(g: Graph, bindings: DataFrame, espec: E, cur: str, nxt: str,
         else:
             fresh = stepped
         if use_visited:
-            visited = visited.union(fresh)
+            visited_parts.append(fresh)
         if depth >= lo:
             results.append(fresh.withColumn(f"e{hop}_depth", F.lit(depth)))
         frontier = fresh
@@ -297,10 +297,7 @@ def _walk_several(g: Graph, bindings: DataFrame, espec: E, cur: str, nxt: str,
             .withColumn(f"e{hop}_depth", F.lit(0))
             .limit(0)
         )
-    out = results[0]
-    for r in results[1:]:
-        out = out.union(r)
-    return out.withColumnRenamed("_cur", nxt)
+    return union_all(results).withColumnRenamed("_cur", nxt)
 
 
 # ----------------------------------------------------------- entry points
@@ -567,10 +564,7 @@ def flat_table(g: Graph, pattern: Pattern, quick: bool = True) -> DataFrame:
             F.lit(int(c[1:])).alias("position"), "node_set")
         for c in sorted(ncols, key=lambda c: int(c[1:]))
     ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.union(p)
-    return out
+    return union_all(parts)
 
 
 def nested_layers(bindings: DataFrame, upto: int | None = None) -> DataFrame:
@@ -705,15 +699,11 @@ def create_mem(g: Graph, pattern: Pattern) -> tuple[Graph, GraphDiff]:
         )
         keep = edges.join(winner.select("src", "label", "edge_seq", "is_back"),
                           ["src", "label", "edge_seq", "is_back"], "left_anti")
-        edges = keep.unionByName(winner)
+        edges = union_all([keep, winner], by_name=True)
         frontier = winner.select(F.col("dst").alias("src")).distinct()
 
-    added = added_parts[0]
-    for p in added_parts[1:]:
-        added = added.union(p)
-    deleted = deleted_parts[0]
-    for p in deleted_parts[1:]:
-        deleted = deleted.union(p)
+    added = union_all(added_parts)
+    deleted = union_all(deleted_parts)
 
     # node diffs: explicit-id specs can reference ids the node table lacks
     spec_ids = [int(i) for s in node_specs if s.ids is not None for i in s.ids]
@@ -742,11 +732,7 @@ def graph_query(g: Graph, pattern: Pattern, quick: bool = True) -> Graph:
     b = table(g, pattern, quick)
     ncols = sorted([c for c in b.columns if c.startswith("n") and c[1:].isdigit()],
                    key=lambda c: int(c[1:]))
-    node_ids = None
-    for c in ncols:
-        part = b.select(F.col(c).alias("id"))
-        node_ids = part if node_ids is None else node_ids.union(part)
-    node_ids = node_ids.distinct()
+    node_ids = union_all([b.select(F.col(c).alias("id")) for c in ncols]).distinct()
     nodes = g.nodes.join(node_ids, "id", "left_semi") if not g.nodes.isEmpty() else g.nodes
 
     edge_parts = []
@@ -761,10 +747,8 @@ def graph_query(g: Graph, pattern: Pattern, quick: bool = True) -> Graph:
                 ).distinct()
             )
     if edge_parts:
-        keys = edge_parts[0]
-        for p in edge_parts[1:]:
-            keys = keys.union(p)
-        edges = g.edges.join(keys.distinct(), ["src", "dst", "label", "edge_seq"], "left_semi")
+        edges = g.edges.join(union_all(edge_parts).distinct(),
+                             ["src", "dst", "label", "edge_seq"], "left_semi")
     else:
         edges = g.edges.limit(0)
     return Graph(g.spark, nodes, edges, g.ranges)

@@ -15,12 +15,13 @@ replaces the back-bit ``edgeBackward=0x80000000`` (``FastAccess.hs:149-150``);
 ``labels`` (array) replaces the summed orthogonal attr bits
 (``FastAccess.hs:271-278``).
 
-:func:`local_df` is the one place Python rows become a DataFrame.
+:func:`local_df` is the one place Python rows become a DataFrame, and
+:func:`union_all` the one place DataFrames are unioned.
 """
 
 from __future__ import annotations
 
-from typing import Iterable
+from typing import Iterable, Sequence
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -78,3 +79,33 @@ def local_df(spark: SparkSession, rows: Iterable[tuple], schema: T.StructType | 
     table = pa.Table.from_arrays(
         [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow)
     return spark.createDataFrame(table, schema)
+
+
+def union_all(dfs: Sequence[DataFrame], by_name: bool = False) -> DataFrame:
+    """UNION ALL of ``dfs`` (positional, or by column name when
+    ``by_name``) as ONE n-ary logical ``Union`` over the inputs' plans.
+
+    ``DataFrame.union``/``unionByName`` run ``CombineUnions`` over the
+    whole new plan, which also flattens nested unions *inside* the inputs.
+    A cached input whose plan holds a UNION ALL (the tpch edge SQL, a
+    ``fwd ∪ back`` edge table) then no longer matches its own cached plan,
+    so the CacheManager misses and the query recomputes the input from
+    its sources. Here the inputs' plans stay as they are, so a cached
+    input is still read from the cache; the optimizer flattens the unions
+    after cache substitution, so executed plans are otherwise unchanged.
+    An input's top-level ``Union`` is never spliced either: the input may
+    itself be the cached plan.
+
+    Every union in the package goes through here; loops collect their
+    parts in a list and call this once."""
+    dfs = list(dfs)
+    if not dfs:
+        raise ValueError("union_all needs at least one DataFrame")
+    if len(dfs) == 1:
+        return dfs[0]
+    first = dfs[0]
+    jvm, jspark = first.sparkSession._jvm, first.sparkSession._jsparkSession
+    plans = jvm.PythonUtils.toSeq([df._jdf.logicalPlan() for df in dfs])
+    union = jvm.org.apache.spark.sql.catalyst.plans.logical.Union(plans, by_name, False)
+    return DataFrame(jvm.org.apache.spark.sql.classic.Dataset.ofRows(jspark, union),
+                     first.sparkSession)

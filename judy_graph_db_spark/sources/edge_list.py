@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from judy_graph_db_spark.graph import Graph, Ranges
+from judy_graph_db_spark.schema import union_all
 
 # F4 (FIXTURES.md): the reference checkout's own benchmark edge list
 REFERENCE_DATA_TXT = "/root/reference/benchmark/data.txt"
@@ -114,7 +115,7 @@ def read_edge_list(
             F.col("dst").alias("src"), F.col("src").alias("dst"),
             "label", "labels", F.lit(True).alias("is_back"), "edge_seq",
         )
-        g.edges = g.edges.unionByName(back)
+        g.edges = union_all([g.edges, back], by_name=True)
     return g
 
 

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from judy_graph_db_spark.schema import union_all
+
 
 def parse_robots(robots: DataFrame, host_col: str = "host",
                  text_col: str = "text") -> DataFrame:
@@ -112,7 +114,7 @@ def robots_url_policy(urls: DataFrame, rules: DataFrame,
         # hosts where the named agent HAS a group use only that group
         named_hosts = named.select("host").distinct()
         star = star.join(named_hosts, "host", "left_anti")
-        rules = named.unionByName(star)
+        rules = union_all([named, star], by_name=True)
     else:
         rules = star
     u = urls.withColumn("host", url_host(F.col(url_col))).withColumn(

@@ -201,7 +201,16 @@ def tpch_graph(spark: SparkSession, sf_dir: str) -> Graph:
     """Build the Graph from a scale-factor directory. The edges plan is the
     declarative SQL above — Catalyst prunes unused branches of the UNION when
     a query filters on one label, and window seqs shuffle only on their
-    natural partition keys."""
+    natural partition keys.
+
+    The plan ends in a hash repartition on ``src`` into
+    ``spark.sql.shuffle.partitions`` partitions: the layout ``graph.py``
+    names for scale, clustered on the key every anchored filter and hop
+    join uses. Without it the UNION ALL's branches set the partitioning,
+    and a cached edge table came out as 3 + 5 × ``shuffle.partitions``
+    small partitions, so every anchored read of the cache ran that many
+    tasks. Filters still push below the repartition, so label pruning and
+    ``src`` pushdown on an uncached graph reach the scans."""
     load_tpch_views(spark, sf_dir)
     edges = spark.sql(GRAPH_EDGES_SQL)
     from pyspark.sql import functions as F
@@ -211,7 +220,8 @@ def tpch_graph(spark: SparkSession, sf_dir: str) -> Graph:
         F.when(F.col("is_bulk"), F.array(F.col("label"), F.lit("BULK"))).otherwise(
             F.array(F.col("label"))
         ),
-    ).select("src", "dst", "label", "labels", "is_back", "edge_seq")
+    ).select("src", "dst", "label", "labels", "is_back", "edge_seq").repartition(
+        int(spark.conf.get("spark.sql.shuffle.partitions")), "src")
     nodes = spark.sql(GRAPH_NODES_SQL).withColumn("props", F.lit(None).cast("map<string,string>"))
     return Graph(spark, nodes, edges, RANGES)
 

@@ -28,6 +28,7 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from judy_graph_db_spark.schema import union_all
 from judy_graph_db_spark.streaming.pathio import (fs_delete, fs_exists,
                                                   fs_isdir, fs_listdir,
                                                   fs_read_text,
@@ -150,8 +151,8 @@ def foreach_batch_insert(stream: DataFrame, edges_sink: str,
         batch_max = out.groupBy(*key).agg(F.max("edge_seq").alias("max_seq"))
         if base is not None:
             merged = (
-                base.select(*key, F.col("_base").alias("max_seq"))
-                .unionByName(batch_max)
+                union_all([base.select(*key, F.col("_base").alias("max_seq")), batch_max],
+                          by_name=True)
                 .groupBy(*key)
                 .agg(F.max("max_seq").alias("max_seq"))
             )

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, functions as F
 from judy_graph_db_spark.operators.sketch import (bloom_build, count_min,
                                                   hll_registers, mg_merge,
                                                   misra_gries)
+from judy_graph_db_spark.schema import union_all
 from judy_graph_db_spark.streaming.pathio import (fs_exists, fs_isdir,
                                                   fs_listdir, fs_read_text,
                                                   fs_write_text, pjoin)
@@ -113,11 +114,11 @@ def foreach_batch_sketches(stream: DataFrame, store: str, col: str,
         bloom_b = bloom_build(batch, col, m_bits=m_bits, k=k)
         mg_b = misra_gries(batch, col, m=int(mg_m)) if mg_m else None
         if prev is not None:
-            cms_b = (prev["cms"].unionByName(cms_b)
+            cms_b = (union_all([prev["cms"], cms_b], by_name=True)
                      .groupBy("d", "w").agg(F.sum("cnt").alias("cnt")))
-            hll_b = (prev["hll"].unionByName(hll_b)
+            hll_b = (union_all([prev["hll"], hll_b], by_name=True)
                      .groupBy("bucket").agg(F.max("max_rho").alias("max_rho")))
-            bloom_b = (prev["bloom"].unionByName(bloom_b)
+            bloom_b = (union_all([prev["bloom"], bloom_b], by_name=True)
                        .groupBy("word")
                        .agg(F.bit_or("bits").alias("bits")))
             if mg_b is not None and "mg" in prev:

@@ -9,11 +9,13 @@ scripts/ab_minhash.py pattern). Config is injected via
 SPARK_GRAFT_EXTRA_CONF (session.py), so the measured code is exactly
 what the driver's bench runs.
 
-Usage: python scripts/ab_conf_r15.py [reps]   (default 2)
+Usage: python scripts/ab_conf_r15.py [reps]   (default 3; an odd count
+gives each arm a true middle sample)
 """
 
 import json
 import os
+import statistics
 import subprocess
 import sys
 
@@ -57,7 +59,7 @@ def run_arm(arm: str, extra: str) -> dict:
 
 
 def main() -> None:
-    reps = int(sys.argv[1]) if len(sys.argv) > 1 else 2
+    reps = int(sys.argv[1]) if len(sys.argv) > 1 else 3
     samples: dict = {a: {} for a in ARMS}
     for rep in range(reps):
         for arm, extra in ARMS.items():
@@ -67,7 +69,7 @@ def main() -> None:
             sys.stderr.write(
                 f"[ab_conf] rep {rep + 1}/{reps} arm {arm}: "
                 f"{ {k: round(v, 2) for k, v in got.items()} }\n")
-    med = {a: {k: sorted(v)[len(v) // 2] for k, v in s.items()}
+    med = {a: {k: statistics.median(v) for k, v in s.items()}
            for a, s in samples.items()}
     report = {"arms": med, "samples": samples,
               "speedup_vs_base": {

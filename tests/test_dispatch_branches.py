@@ -49,7 +49,14 @@ def test_bfs_edge_cache_branch_row_identical(spark, monkeypatch):
     """Forces the >=50M-row repartition+sort+cache branch of
     _prep_edge_rel (never active on local fixtures otherwise) and checks
     betweenness is unchanged — and that the operator frees its own cache
-    (self-contained _ckpts=None path, ADVICE r14)."""
+    (self-contained _ckpts=None path).
+
+    The cleanup check is exact and names its targets by RDD id: the
+    state the forced prep persisted (its checkpoint and the tagged
+    cache's column buffers) must be unregistered when the operator
+    returns, and the tagged cache's blocks gone from every block
+    manager. Raw persistent-RDD counts would race GC of the weak-valued
+    map and non-blocking unpersists."""
     import random
 
     rng = random.Random(23)
@@ -57,18 +64,41 @@ def test_bfs_edge_cache_branch_row_identical(spark, monkeypatch):
                     for _ in range(40)} - {(i, i) for i in range(12)})
     e = _edges(spark, pairs)
     jsc = spark.sparkContext._jsc.sc()
-    n0 = jsc.getPersistentRDDs().size()
+
+    def persistent_ids() -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
     base = {r["id"]: r["betweenness"]
             for r in AN.betweenness_centrality(e).collect()}
-    n1 = jsc.getPersistentRDDs().size()  # + the result's own checkpoint
     monkeypatch.setattr(AN, "_EDGE_CACHE_MIN_ROWS", 1)
+    prepped = []  # (relation, cache RDD id, its partitions, all prep RDD ids)
+    real_prep = AN._prep_edge_rel
+
+    def recording_prep(*args, **kwargs):
+        before = persistent_ids()
+        rel = real_prep(*args, **kwargs)
+        buffers = (cache_manager.lookupCachedData(rel._jdf).get()
+                   .cachedRepresentation().cacheBuilder().cachedColumnBuffers())
+        prepped.append((rel, buffers.id(), buffers.getNumPartitions(),
+                        persistent_ids() - before))
+        return rel
+
+    monkeypatch.setattr(AN, "_prep_edge_rel", recording_prep)
     forced = {r["id"]: r["betweenness"]
               for r in AN.betweenness_centrality(e).collect()}
-    n2 = jsc.getPersistentRDDs().size()
     assert set(forced) == set(base)
     assert all(abs(forced[v] - base[v]) < 1e-9 for v in base)
-    # the cached branch must not retain MORE state than the plain branch:
-    # each run legitimately keeps its result checkpoint alive (it backs
-    # the returned DataFrame), but the tagged edge cache itself is freed
-    # by the operator's own cleanup
-    assert n2 - n1 <= n1 - n0
+
+    (rel, cache_rdd, n_parts, prep_rdds), = prepped
+    assert rel._graft_cached
+    # the prep persisted exactly its checkpoint and the tagged cache
+    assert cache_rdd in prep_rdds and len(prep_rdds) == 2, prep_rdds
+    # both are unregistered, and the cache's blocks are gone everywhere:
+    # the operator frees the tagged cache with a blocking unpersist
+    assert cache_manager.lookupCachedData(rel._jdf).isEmpty()
+    assert not prep_rdds & persistent_ids()
+    block_master = jsc.env().blockManager().master()
+    for part in range(n_parts):
+        block = spark._jvm.org.apache.spark.storage.RDDBlockId(cache_rdd, part)
+        assert block_master.getBlockStatus(block, True).isEmpty(), part

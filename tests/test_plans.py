@@ -642,3 +642,68 @@ def test_literal_anchor_and_edit_batch_broadcast(spark):
         for k, v in saved.items():
             spark.conf.set(k, v)
         g.edges.unpersist()
+
+
+def test_tpch_edges_are_src_partitioned(spark, g):
+    """The source ends its edge plan in a hash repartition on ``src``: the
+    edge table has exactly ``spark.sql.shuffle.partitions`` partitions and
+    every ``src`` lives in one of them, so an anchored read of the cached
+    table touches one cluster of rows instead of one scrap per UNION
+    branch and window shuffle."""
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert g.edges.rdd.getNumPartitions() == n
+    spread = (
+        g.edges.select("src", F.spark_partition_id().alias("p"))
+        .groupBy("src").agg(F.countDistinct("p").alias("n_parts"))
+        .filter(F.col("n_parts") > 1)
+    )
+    assert spread.count() == 0
+
+
+def _leaf_classes(df) -> list:
+    """Leaf node classes of the plan the query runs after cache
+    substitution (an ``InMemoryRelation`` is a leaf: its cached plan is
+    not a child)."""
+    leaves = df._jdf.queryExecution().withCachedData().collectLeaves()
+    return [leaves.apply(i).getClass().getSimpleName() for i in range(leaves.size())]
+
+
+def test_union_queries_read_the_cached_edges(spark):
+    """Every query that unions something with the cached edge table must
+    still read that table from the cache: ``DataFrame.union`` rewrote the
+    nested UNION ALLs inside the edges plan, the CacheManager no longer
+    matched it, and the query re-ran the edge SQL from parquet. Covers the
+    per-depth union of a ``several`` path, a k=2 insert/delete chain (the
+    mutation union), ``Graph.union`` and the node-less ``N()`` spec."""
+    from judy_graph_db_spark.graph import Graph
+    from judy_graph_db_spark.operators import mutation as M
+    from judy_graph_db_spark.plans.compiler import materialize_node_spec
+    from judy_graph_db_spark.schema import NODES_SCHEMA, local_df
+
+    g = tpch_graph(spark, SF_DIR)
+    g.edges.cache().count()
+    try:
+        o = (g.edges.filter((F.col("label") == "NEXT_ORDER") & ~F.col("is_back"))
+             .select("src").orderBy("src").first()[0])
+        c, parts = 3 * B + 1, [4 * B + p for p in range(1, 5)]
+        first, second = [(c, p, "RATED") for p in parts[:2]], [(c, p, "RATED") for p in parts[2:]]
+        g1 = M.insert_node_edges(g, first, add_back_edges=True)
+        g2 = M.delete_edges(M.insert_node_edges(g1, second, add_back_edges=True),
+                            [(s, d) for s, d, _ in first])
+        other = Graph.from_edges(spark, local_df(spark, [(c, parts[0], "RATED")],
+                                                 "src long, dst long, label string"))
+        no_nodes = Graph(spark, local_df(spark, [], NODES_SCHEMA), g.edges, g.ranges)
+        cases = {
+            "several_path": table(g, N(ids=[o]) >> E("NEXT_ORDER", direction="r",
+                                                     several=(1, 3)) >> N()),
+            "write_k2_hop1": A.adjacent_nodes_by_attr(g2, c, "RATED"),
+            "graph_union": g.union(other).edges,
+            "all_nodes_spec": materialize_node_spec(no_nodes, N(), "n0"),
+        }
+        leaves = {name: _leaf_classes(df) for name, df in cases.items()}
+        missed = {name: ls for name, ls in leaves.items()
+                  if "InMemoryRelation" not in ls or "LogicalRelation" in ls}
+        assert not missed, {name: sorted(set(ls)) for name, ls in missed.items()}
+        assert cases["write_k2_hop1"].count() == 2
+    finally:
+        g.edges.unpersist(blocking=True)
