@@ -9,8 +9,12 @@ variable-length-path loop in ``plans/compiler.py`` (SURVEY.md §4.3).
 Scale design (100 TB):
 - every iteration is ONE shuffle keyed on the join column; no driver-side
   collection anywhere — frontiers stay distributed;
-- each iteration ``localCheckpoint``\\ s the state DataFrame so lineage (and
-  the Catalyst plan) stays flat no matter how many rounds run;
+- each iteration checkpoints the state DataFrame (``loopstate.checkpoint``)
+  so lineage (and the Catalyst plan) stays flat no matter how many rounds
+  run; every public operator runs in a ``loopstate.scoped`` scope, which
+  frees each checkpoint and cache the call made except those backing its
+  result, also when the call raises. Loops free a superseded state with
+  ``loopstate.free`` once its successor is materialized;
 - ``connected_components`` pairs hash-min propagation with pointer jumping,
   giving O(log d) rounds instead of O(d) on long chains;
 - ``triangle_count`` canonicalizes to the ``a < b`` undirected edge set
@@ -24,52 +28,14 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
-import os
 from typing import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from judy_graph_db_spark.loopstate import (Deferred, cache, checkpoint,
+                                           fixpoint, free, scoped)
 from judy_graph_db_spark.schema import local_df, union_all
-
-
-def _unpersist_checkpoint(df: DataFrame) -> None:
-    """Free the block-store copy behind a ``localCheckpoint``-ed (or
-    ``cache``-d) DataFrame.
-
-    Loop states are checkpointed every round; without explicit cleanup each
-    round's blocks linger until the driver GCs the RDD handle — at scale
-    that is O(rounds) × |state| of executor storage for data that can never
-    be read again (the next state is already materialized; the old one is
-    reachable only through it). Only call this on a state whose SUCCESSOR
-    checkpoint is fully materialized: localCheckpoint truncates lineage, so
-    an unpersisted-but-still-referenced checkpoint cannot be recomputed.
-    (``cache``-d relations keep their lineage, so freeing those is always
-    safe — r14 uses cache for loop-invariant edge relations because, unlike
-    ``localCheckpoint``, ``InMemoryRelation`` preserves outputPartitioning/
-    outputOrdering into the per-round joins.)
-
-    The CacheManager uncaches by CANONICALIZED-plan equality, so calling
-    ``df.unpersist`` on a non-cached loop state whose plan canonically
-    equals a relation the CALLER cached (a user-cached edges projection
-    passed into an operator, say) would silently drop the caller's cache.
-    Hence the cache-level unpersist only runs on relations THIS module
-    cached itself (tagged ``_graft_cached`` by :func:`_prep_edge_rel`);
-    everything else is freed RDD-only, which can never touch a caller's
-    CacheManager entry. The tagged cache is freed BLOCKING: it exists
-    only at ≥ ``_EDGE_CACHE_MIN_ROWS`` edges and once per operator call,
-    and when the operator returns its blocks are gone from every
-    executor, not merely scheduled for removal.
-    """
-    if getattr(df, "_graft_cached", False):
-        try:
-            df.unpersist(True)
-        except Exception:
-            pass
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass  # non-checkpoint plan or non-py4j backend — nothing to free
 
 
 def _symmetric(edges: DataFrame) -> DataFrame:
@@ -140,6 +106,7 @@ def _star_round(pairs: DataFrame, large: bool) -> DataFrame:
     return out if large else out.distinct()
 
 
+@scoped
 def connected_components(edges: DataFrame, max_iter: int = 50,
                          nodes: DataFrame | None = None) -> DataFrame:
     """Connected components via alternating large-star/small-star
@@ -155,18 +122,16 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
     stopped changing; one agg job per round, no join. Each round
     ``localCheckpoint``\\ s the pair set to keep lineage flat.
     """
-    pairs = (
+    pairs = checkpoint(
         edges.select(
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
         )
         .filter(F.col("a") < F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+        .distinct(), eager=True)
     id_set = _endpoints(pairs, "a", "b")
     if nodes is not None:
         id_set = union_all([id_set, nodes.select(F.col("id").cast("long"))])
-    id_set = id_set.distinct().localCheckpoint(eager=True)
+    id_set = checkpoint(id_set.distinct(), eager=True)
 
     def fingerprint(df: DataFrame) -> tuple:
         row = df.agg(
@@ -175,19 +140,11 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
         ).collect()[0]
         return (row["n"], int(row["h"] or 0))
 
-    prev = fingerprint(pairs)
-    for _ in range(max_iter):
-        prev_state = pairs
-        pairs = _star_round(pairs, large=True)
-        # non-eager checkpoint: the fingerprint aggregation is the job
-        # that materializes the round's pair set — one job per round
-        # instead of the r13 eager-checkpoint + separate fingerprint pair
-        pairs = _star_round(pairs, large=False).localCheckpoint(eager=False)
-        cur = fingerprint(pairs)
-        _unpersist_checkpoint(prev_state)
-        if cur == prev:
-            break
-        prev = cur
+    # the fingerprint aggregation is the job that materializes each
+    # round's pair set — one job per round
+    pairs = fixpoint(
+        pairs, lambda p: _star_round(_star_round(p, large=True), large=False),
+        fingerprint, max_iter)
     # fixpoint = disjoint stars rooted at component minima: every pair is
     # (root, member); roots map to themselves
     membership = pairs.select(F.col("b").alias("id"), F.col("a").alias("component"))
@@ -197,6 +154,7 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
     )
 
 
+@scoped
 def triangle_count(edges: DataFrame) -> DataFrame:
     """Global triangle count over the undirected simple graph.
 
@@ -211,14 +169,12 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     aliases scan one materialization instead of recomputing the distinct.
     Returns a single row ``(triangles BIGINT)``.
     """
-    und = (
+    und = checkpoint(
         edges.select(
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
         )
         .filter(F.col("a") < F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+        .distinct(), eager=True)
     deg = (
         _endpoints(und, "a", "b")
         .groupBy("id")
@@ -232,15 +188,12 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     ka = F.struct(F.col("da").alias("d"), F.col("a").alias("i"))
     kb = F.struct(F.col("db").alias("d"), F.col("b").alias("i"))
     lower_first = ka < kb
-    oriented = (
-        withd.select(
-            F.when(lower_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-            F.when(lower_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-            F.when(lower_first, kb).otherwise(ka).alias("kv"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    _unpersist_checkpoint(und)
+    oriented = checkpoint(withd.select(
+        F.when(lower_first, F.col("a")).otherwise(F.col("b")).alias("u"),
+        F.when(lower_first, F.col("b")).otherwise(F.col("a")).alias("v"),
+        F.when(lower_first, kb).otherwise(ka).alias("kv"),
+    ), eager=True)
+    free(und)
     o1 = oriented.select(F.col("u").alias("s"), F.col("v").alias("x"),
                          F.col("kv").alias("kx"))
     o2 = oriented.select(F.col("u").alias("s"), F.col("v").alias("y"),
@@ -253,6 +206,7 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     )
 
 
+@scoped
 def pagerank(
     edges: DataFrame, iters: int = 3, damping: float = 0.85,
     weight_col: str | None = None,
@@ -288,7 +242,7 @@ def pagerank(
             .dropDuplicates(["src", "dst"])  # partition-local: hash(src) clusters dups
         )
         w = Window.partitionBy("src")
-        ldeg = links.withColumn("outdeg", F.count(F.lit(1)).over(w)).cache()
+        ldeg = cache(links.withColumn("outdeg", F.count(F.lit(1)).over(w)))
     else:
         # weighted variant: parallel edges sum their weights; contributions
         # are weight-proportional (rank · w / Σw(src)) — same single edge
@@ -300,13 +254,9 @@ def pagerank(
             .groupBy("src", "dst").agg(F.sum("__w").alias("__w"))
         )
         w = Window.partitionBy("src")
-        ldeg = links.withColumn("outdeg", F.sum("__w").over(w) / F.col("__w")) \
-                    .cache()
-    nodes = (
-        _endpoints(ldeg)
-        .distinct()  # leaves hashpartitioning(id) in place for the rank joins
-        .cache()
-    )
+        ldeg = cache(links.withColumn("outdeg", F.sum("__w").over(w) / F.col("__w")))
+    # distinct leaves hashpartitioning(id) in place for the rank joins
+    nodes = cache(_endpoints(ldeg).distinct())
     # materialize now: a cache whose plan is already final exposes its
     # partitioning to every later join (an in-flight one does not).
     # Deliberately SERIAL (r15 measured a 2-thread overlap of these two
@@ -348,12 +298,9 @@ def pagerank(
             ).alias("rank"),
         )
         if (i + 1) % 8 == 0 and i + 1 < iters:
-            ranks = ranks.localCheckpoint(eager=True)
-    # detach the result from the internal caches before releasing them
-    out = ranks.localCheckpoint(eager=True)
-    ldeg.unpersist()
-    nodes.unpersist()
-    return out
+            ranks = checkpoint(ranks, eager=True)
+    # detach the result from the internal caches, which the scope frees
+    return checkpoint(ranks, eager=True)
 
 
 def pagerank_oracle_sql(
@@ -407,6 +354,7 @@ def pagerank_oracle_sql(
     return "\n".join(parts)
 
 
+@scoped
 def hits(edges: DataFrame, iters: int = 3) -> DataFrame:
     """HITS hubs-and-authorities (Kleinberg 1999) by fixed-round mutual
     recursion: ``auth ∝ Σ_{j→i} hub(j)``, ``hub ∝ Σ_{i→j} auth(j)``,
@@ -430,17 +378,11 @@ def hits(edges: DataFrame, iters: int = 3) -> DataFrame:
     """
     spark = edges.sparkSession
     num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    links = (
+    links = cache(
         edges.select("src", "dst")
         .repartition(num_partitions, "src")
-        .dropDuplicates(["src", "dst"])
-        .cache()
-    )
-    nodes = (
-        _endpoints(links)
-        .distinct()
-        .cache()
-    )
+        .dropDuplicates(["src", "dst"]))
+    nodes = cache(_endpoints(links).distinct())
     links.count()
     nodes.count()
     hub = nodes.withColumn("hub", F.lit(1.0))
@@ -452,29 +394,23 @@ def hits(edges: DataFrame, iters: int = 3) -> DataFrame:
             .groupBy("id")
             .agg(F.sum("c").alias("raw"))
         )
-        prev_auth = auth
-        auth = (
+        free(auth)
+        auth = checkpoint(
             nodes.join(a_raw, "id", "left")
-            .select("id", F.coalesce(F.col("raw"), F.lit(0.0)).alias("auth"))
-            .localCheckpoint(eager=True)
-        )
-        _unpersist_checkpoint(prev_auth)
+            .select("id", F.coalesce(F.col("raw"), F.lit(0.0)).alias("auth")), eager=True)
         h_raw = (
             links.join(auth, links.dst == auth.id)
             .select(F.col("src").alias("id"), F.col("auth").alias("c"))
             .groupBy("id")
             .agg(F.sum("c").alias("raw"))
         )
-        prev_hub = hub
-        hub = (
+        free(hub)
+        hub = checkpoint(
             nodes.join(h_raw, "id", "left")
-            .select("id", F.coalesce(F.col("raw"), F.lit(0.0)).alias("hub"))
-            .localCheckpoint(eager=True)
-        )
-        _unpersist_checkpoint(prev_hub)
+            .select("id", F.coalesce(F.col("raw"), F.lit(0.0)).alias("hub")), eager=True)
     a_tot = auth.agg(F.sum("auth").alias("t_a"))
     h_tot = hub.agg(F.sum("hub").alias("t_h"))
-    out = (
+    return checkpoint(
         auth.join(hub, "id")
         .crossJoin(F.broadcast(a_tot))
         .crossJoin(F.broadcast(h_tot))
@@ -482,14 +418,7 @@ def hits(edges: DataFrame, iters: int = 3) -> DataFrame:
             "id",
             (F.col("auth") / F.col("t_a")).alias("auth"),
             (F.col("hub") / F.col("t_h")).alias("hub"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    _unpersist_checkpoint(auth)
-    _unpersist_checkpoint(hub)
-    links.unpersist()
-    nodes.unpersist()
-    return out
+        ), eager=True)
 
 
 def hits_oracle_sql(
@@ -531,6 +460,7 @@ FROM a{iters} a JOIN h{iters} h ON h.id = a.id"""
     return "\n".join(parts)
 
 
+@scoped
 def personalized_pagerank(
     edges: DataFrame,
     seeds: Sequence[int],
@@ -561,12 +491,8 @@ def personalized_pagerank(
         .dropDuplicates(["src", "dst"])
     )
     w = Window.partitionBy("src")
-    ldeg = links.withColumn("outdeg", F.count(F.lit(1)).over(w)).cache()
-    nodes = (
-        _endpoints(ldeg)
-        .distinct()
-        .cache()
-    )
+    ldeg = cache(links.withColumn("outdeg", F.count(F.lit(1)).over(w)))
+    nodes = cache(_endpoints(ldeg).distinct())
     ldeg.count()
     nodes.count()
     seed_mass = F.when(
@@ -591,11 +517,8 @@ def personalized_pagerank(
             ).alias("rank"),
         )
         if (i + 1) % 8 == 0 and i + 1 < iters:
-            ranks = ranks.localCheckpoint(eager=True)
-    out = ranks.localCheckpoint(eager=True)
-    ldeg.unpersist()
-    nodes.unpersist()
-    return out
+            ranks = checkpoint(ranks, eager=True)
+    return checkpoint(ranks, eager=True)
 
 
 def personalized_pagerank_oracle_sql(
@@ -639,6 +562,7 @@ def personalized_pagerank_oracle_sql(
     return "\n".join(parts)
 
 
+@scoped
 def label_propagation(edges: DataFrame, iters: int = 3) -> DataFrame:
     """Community detection by synchronous label propagation, made
     deterministic (classic LPA breaks ties randomly): every node starts
@@ -662,7 +586,7 @@ def label_propagation(edges: DataFrame, iters: int = 3) -> DataFrame:
     """
     spark = edges.sparkSession
     num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    sym = _symmetric(edges).repartition(num_partitions, "dst").cache()
+    sym = cache(_symmetric(edges).repartition(num_partitions, "dst"))
     sym.count()  # materialized cache exposes its partitioning to the loop
     # every node appears as src (both directions are materialized), so src
     # alone enumerates the node set; labels₀ is derived per-plan from the
@@ -691,10 +615,8 @@ def label_propagation(edges: DataFrame, iters: int = 3) -> DataFrame:
             .select("id", F.col("best.c").alias("community"))
         )
         if (i + 1) % 8 == 0 and i + 1 < iters:
-            labels = labels.localCheckpoint(eager=True)
-    out = labels.localCheckpoint(eager=True)
-    sym.unpersist()
-    return out
+            labels = checkpoint(labels, eager=True)
+    return checkpoint(labels, eager=True)
 
 
 def label_propagation_oracle_sql(
@@ -734,6 +656,7 @@ l{k} AS (
     return "\n".join(parts)
 
 
+@scoped
 def k_core(edges: DataFrame, k: int, max_iter: int = 100) -> DataFrame:
     """Nodes of the k-core: the maximal subgraph where every node has
     undirected degree ≥ k. Returns ``(id BIGINT, degree BIGINT)`` with the
@@ -752,10 +675,7 @@ def k_core(edges: DataFrame, k: int, max_iter: int = 100) -> DataFrame:
     the engine evaluates it once instead of inlining the whole chain into
     an exponentially-expanded scan tree).
     """
-    sym = _symmetric(edges).localCheckpoint(eager=True)
-    surv = _k_core_peel(sym, k, max_iter)
-    if surv is not sym:
-        _unpersist_checkpoint(sym)
+    surv = _k_core_peel(checkpoint(_symmetric(edges), eager=True), k, max_iter)
     return (
         surv.groupBy("src")
         .agg(F.count(F.lit(1)).alias("degree"))
@@ -764,35 +684,22 @@ def k_core(edges: DataFrame, k: int, max_iter: int = 100) -> DataFrame:
     )
 
 
+@scoped
 def _k_core_peel(sym: DataFrame, k: int, max_iter: int) -> DataFrame:
     """Degree-peel an already-symmetric edge relation to its k-core
-    fixpoint; returns the surviving symmetric relation,
-    ``localCheckpoint``-ed. The input is NOT unpersisted (the caller owns
-    it) — this is what lets :func:`coreness` thread level k's shrinking
-    output into the level-(k+1) peel instead of re-peeling the full graph.
+    fixpoint; returns the surviving symmetric relation, checkpointed. The
+    input belongs to the caller's scope, so the peel never frees it —
+    this is what lets :func:`coreness` thread level k's shrinking output
+    into the level-(k+1) peel instead of re-peeling the full graph.
     """
-    prev_edges = sym.count()
-    first = True
-    for _ in range(max_iter):
-        prev_state = sym
+    def peel(sym: DataFrame) -> DataFrame:
         deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
         keep = deg.filter(F.col("degree") >= int(k)).select("src")
-        # non-eager checkpoint: the convergence count materializes the
-        # round (one job instead of two — r14); the predecessor is freed
-        # only after that job has run
-        sym = (
-            sym.join(keep, "src", "left_semi")
-            .join(keep.withColumnRenamed("src", "dst"), "dst", "left_semi")
-            .localCheckpoint(eager=False)
-        )
-        cur = sym.count()
-        if not first:
-            _unpersist_checkpoint(prev_state)
-        first = False
-        if cur == prev_edges:
-            break
-        prev_edges = cur
-    return sym
+        return (sym.join(keep, "src", "left_semi")
+                .join(keep.withColumnRenamed("src", "dst"), "dst", "left_semi"))
+
+    # the convergence count materializes each round: one job per round
+    return fixpoint(sym, peel, lambda df: df.count(), max_iter)
 
 
 def k_core_oracle_sql(edges_sql: str, k: int, rounds: int,
@@ -860,6 +767,7 @@ def transitive_closure(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     return minplus_closure(edges, keep_self=False, max_iter=max_iter)
 
 
+@scoped
 def minplus_closure(
     edges: DataFrame, keep_self: bool = False, max_iter: int = 20,
     max_depth: int | None = None, weight_col: str | None = None,
@@ -893,11 +801,8 @@ def minplus_closure(
         )
     if not keep_self:
         base = base.filter(F.col("src") != F.col("dst"))
-    r = (
-        base.groupBy("src", "dst")
-        .agg(F.min("depth").alias("depth"))
-        .localCheckpoint(eager=False)  # materialized by the fingerprint below
-    )
+    # materialized by the fixpoint's first fingerprint
+    r = checkpoint(base.groupBy("src", "dst").agg(F.min("depth").alias("depth")))
     if weight_col is not None:
         # min-plus correctness requires non-negative, non-null weights —
         # NULLs silently vanish into the min() aggregates and a negative
@@ -919,8 +824,7 @@ def minplus_closure(
         ).collect()[0]
         return (row["n"], int(row["d"] or 0))
 
-    prev = fingerprint(r)
-    for _ in range(max_iter):
+    def double(r: DataFrame) -> DataFrame:
         left = r.select(
             F.col("src").alias("a"), F.col("dst").alias("m"),
             F.col("depth").alias("d1"),
@@ -937,22 +841,11 @@ def minplus_closure(
             doubled = doubled.filter(F.col("src") != F.col("dst"))
         if max_depth is not None:
             doubled = doubled.filter(F.col("depth") <= max_depth)
-        prev_state = r
-        # non-eager checkpoint + fingerprint-as-materializer: one job per
-        # doubling round instead of two (r14); free the predecessor only
-        # after the fingerprint job has materialized the new state
-        r = (
-            union_all([r, doubled])
-            .groupBy("src", "dst")
-            .agg(F.min("depth").alias("depth"))
-            .localCheckpoint(eager=False)
-        )
-        cur = fingerprint(r)
-        _unpersist_checkpoint(prev_state)
-        if cur == prev:
-            break
-        prev = cur
-    return r
+        return (union_all([r, doubled]).groupBy("src", "dst")
+                .agg(F.min("depth").alias("depth")))
+
+    # the fingerprint job materializes each doubling round: one job per round
+    return fixpoint(r, double, fingerprint, max_iter)
 
 
 def bipartite_projection(edges: DataFrame, min_count: int = 1,
@@ -1211,6 +1104,7 @@ def strongly_connected_components(edges: DataFrame, method: str = "auto",
     raise ValueError(f"unknown SCC method {method!r}")
 
 
+@scoped
 def _scc_closure(base: DataFrame, max_iter: int = 20) -> DataFrame:
     nodes = (
         _endpoints(base)
@@ -1226,9 +1120,7 @@ def _scc_closure(base: DataFrame, max_iter: int = 20) -> DataFrame:
     # bounded by cycle length ~30, the extra per-round passes over R (the
     # anti-join and the two-sided composition) cost more than the smaller
     # candidate set saves. Revisit only for graphs with large SCCs.
-    reach = base.localCheckpoint(eager=False)  # materialized by the count
-    prev_n = reach.count()
-    for _ in range(max_iter):
+    def double(reach: DataFrame) -> DataFrame:
         doubled = (
             reach.select(F.col("src").alias("a"), F.col("dst").alias("m"))
             .join(
@@ -1238,16 +1130,11 @@ def _scc_closure(base: DataFrame, max_iter: int = 20) -> DataFrame:
             .select(F.col("a").alias("src"), F.col("b").alias("dst"))
             .filter(F.col("src") != F.col("dst"))
         )
-        prev_state = reach
-        # non-eager checkpoint: the convergence count materializes the
-        # round's reach set — one job per round instead of two (r14);
-        # the predecessor is freed only after that job has run
-        reach = union_all([reach, doubled]).distinct().localCheckpoint(eager=False)
-        n = reach.count()
-        _unpersist_checkpoint(prev_state)
-        if n == prev_n:
-            break
-        prev_n = n
+        return union_all([reach, doubled]).distinct()
+
+    # the convergence count materializes each round's reach set (and the
+    # first count the initial checkpoint): one job per round
+    reach = fixpoint(checkpoint(base), double, lambda df: df.count(), max_iter)
     # transpose-intersect: (v, m) survives iff v reaches m AND m reaches v
     mutual = reach.join(
         reach.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
@@ -1263,10 +1150,10 @@ def _scc_closure(base: DataFrame, max_iter: int = 20) -> DataFrame:
     )
 
 
+@scoped
 def _scc_coloring(base: DataFrame, max_peel_rounds: int = 10_000,
                   max_prop_iter: int = 10_000,
-                  stats: dict | None = None,
-                  _dense_sweeps: bool = False) -> DataFrame:
+                  stats: dict | None = None) -> DataFrame:
     """FW-BW coloring; see :func:`strongly_connected_components`.
 
     Invariants driving convergence (each is an emptiness probe on the
@@ -1285,8 +1172,7 @@ def _scc_coloring(base: DataFrame, max_peel_rounds: int = 10_000,
     The first delta attempt materialized the update set separately
     (3 jobs/round) and LOST ~1.5x on the round-latency-bound bench
     fixture; the flag form is why the delta is free there and a win
-    when data volume dominates (sf≫1). ``_dense_sweeps=True`` restores
-    the r12 dense form (diagnostic A/B hook, like ``stats``).
+    when data volume dominates (sf≫1).
 
     Before each FW-BW round, TRIM to fixpoint (Slota et al. 2014's
     Multistep prelude): a node with in-degree 0 or out-degree 0 in the
@@ -1302,12 +1188,10 @@ def _scc_coloring(base: DataFrame, max_peel_rounds: int = 10_000,
     """
     # non-eager setup: the first trim iteration's count job materializes
     # both (r15 — was 2 eager setup jobs)
-    active_edges = base.localCheckpoint(eager=False)
-    active_nodes = (
+    active_edges = checkpoint(base, eager=False)
+    active_nodes = checkpoint(
         _endpoints(active_edges)
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+        .distinct(), eager=False)
     # settled accumulates as DISJOINT per-step slices (each backed by a
     # checkpoint that already exists: the trim round's trivial set / the
     # peel round's in_scc relation), unioned ONCE at the end — the r13/
@@ -1318,8 +1202,6 @@ def _scc_coloring(base: DataFrame, max_peel_rounds: int = 10_000,
     # is ONE job: the emptiness count that materializes the trivial set
     # AND, through lineage, the round's non-eager actives (r15).
     settled_parts: list = []
-    slice_ck: list = []   # slice-backing checkpoints, freed after the
-    #                       final union materializes
     pend_free: list = []  # superseded actives — freeable only once the
     #                       NEXT materializing job has run
     fw_bw_rounds = trim_iters = 0
@@ -1347,32 +1229,29 @@ def _scc_coloring(base: DataFrame, max_peel_rounds: int = 10_000,
             )
             # non-eager: the emptiness count materializes the round's
             # trivial set — one job per trim iteration instead of two (r14)
-            trivial = active_nodes.join(
-                keep, "id", "left_anti").localCheckpoint(eager=False)
+            trivial = checkpoint(active_nodes.join(
+                keep, "id", "left_anti"), eager=False)
             n_triv = trivial.count()
             # that one job also materialized this round's actives —
             # the previous round's state is now safe to free
             for df in pend_free:
-                _unpersist_checkpoint(df)
+                free(df)
             pend_free = []
             if n_triv == 0:
-                _unpersist_checkpoint(trivial)
+                free(trivial)
                 break
             trim_iters += 1
             settled_parts.append(
                 trivial.select("id", F.col("id").alias("scc")))
-            slice_ck.append(trivial)
             old_nodes, old_edges = active_nodes, active_edges
-            active_nodes = active_nodes.join(
-                trivial, "id", "left_anti").localCheckpoint(eager=False)
-            active_edges = (
+            active_nodes = checkpoint(active_nodes.join(
+                trivial, "id", "left_anti"), eager=False)
+            active_edges = checkpoint(
                 active_edges.join(trivial.withColumnRenamed("id", "src"),
                                   "src", "left_anti")
                 .join(trivial.withColumnRenamed("id", "dst"),
                       "dst", "left_anti")
-                .select("src", "dst")
-                .localCheckpoint(eager=False)
-            )
+                .select("src", "dst"), eager=False)
             pend_free = [old_nodes, old_edges]
         if active_nodes.limit(1).count() == 0:
             break
@@ -1384,15 +1263,13 @@ def _scc_coloring(base: DataFrame, max_peel_rounds: int = 10_000,
         # dropped, so only flagged colors are pushed; the per-round cost
         # stays two jobs (checkpoint + cached emptiness probe), the
         # probe replacing the dense form's sum-fingerprint collect.
-        colors = active_nodes.select(
+        colors = checkpoint(active_nodes.select(
             "id", F.col("id").alias("color"),
-            F.lit(True).alias("chg")).localCheckpoint(eager=True)
+            F.lit(True).alias("chg")), eager=True)
         for _ in range(max_prop_iter):
-            frontier_side = colors if _dense_sweeps \
-                else colors.filter(F.col("chg"))
             mins = (
                 active_edges.join(
-                    frontier_side.select(F.col("id").alias("src"), "color"),
+                    colors.filter(F.col("chg")).select(F.col("id").alias("src"), "color"),
                     "src")
                 .groupBy(F.col("dst").alias("id"))
                 .agg(F.min("color").alias("_nc"))
@@ -1402,18 +1279,16 @@ def _scc_coloring(base: DataFrame, max_peel_rounds: int = 10_000,
             # round's colors AND answers the fixpoint test (max over the
             # chg flags — r14; the r13 form paid a checkpoint job plus a
             # probe job). The predecessor is freed only after that job.
-            colors = (
+            colors = checkpoint(
                 colors.join(mins, "id", "left")
                 .select(
                     "id",
                     F.least(F.col("color"), F.col("_nc")).alias("color"),
                     F.coalesce(F.col("_nc") < F.col("color"),
-                               F.lit(False)).alias("chg"))
-                .localCheckpoint(eager=False)
-            )
+                               F.lit(False)).alias("chg")), eager=False)
             any_chg = colors.agg(
                 F.max(F.col("chg").cast("int"))).collect()[0][0]
-            _unpersist_checkpoint(old)
+            free(old)
             if not any_chg:
                 break
         # 2. backward sweep inside each color class: grow from the root
@@ -1423,16 +1298,12 @@ def _scc_coloring(base: DataFrame, max_peel_rounds: int = 10_000,
         # since every id carries exactly one active color the reached
         # set needs a distinct + anti-join, not a min-aggregation over
         # the whole relation. Two jobs per round, like the forward sweep.
-        in_scc = colors.filter(F.col("id") == F.col("color")).select(
-            "id", "color", F.lit(True).alias("new")).localCheckpoint(
-            eager=True
-        )
+        in_scc = checkpoint(colors.filter(F.col("id") == F.col("color")).select(
+            "id", "color", F.lit(True).alias("new")), eager=True)
         while True:
-            grow_side = in_scc if _dense_sweeps \
-                else in_scc.filter(F.col("new"))
             add = (
                 active_edges.join(
-                    grow_side.select(
+                    in_scc.filter(F.col("new")).select(
                         F.col("id").alias("dst"), F.col("color").alias("_wc")
                     ),
                     "dst",
@@ -1446,57 +1317,39 @@ def _scc_coloring(base: DataFrame, max_peel_rounds: int = 10_000,
             )
             old = in_scc
             # same one-job merge as the forward sweep (r14)
-            in_scc = (
+            in_scc = checkpoint(
                 union_all([in_scc.select("id", "color", F.lit(False).alias("new")),
                            add.select("id", "color", F.lit(True).alias("new"))],
-                          by_name=True)
-                .localCheckpoint(eager=False)
-            )
+                          by_name=True), eager=False)
             any_new = in_scc.agg(
                 F.max(F.col("new").cast("int"))).collect()[0][0]
-            _unpersist_checkpoint(old)
+            free(old)
             if not any_new:
                 break
         # the materialized in_scc relation BACKS its settled slice —
         # no re-checkpoint of the accumulator (r15, see setup comment)
         settled_parts.append(in_scc.select("id", F.col("color").alias("scc")))
-        slice_ck.append(in_scc)
         # 3. peel: drop settled nodes and their incident edges (non-eager
         # — the next peel round's first trim count materializes them)
         ids = in_scc.select("id")
         old_nodes, old_edges = active_nodes, active_edges
-        active_nodes = active_nodes.join(ids, "id", "left_anti").localCheckpoint(
-            eager=False
-        )
-        active_edges = (
+        active_nodes = checkpoint(active_nodes.join(ids, "id", "left_anti"), eager=False)
+        active_edges = checkpoint(
             active_edges.join(ids.withColumnRenamed("id", "src"), "src", "left_anti")
             .join(ids.withColumnRenamed("id", "dst"), "dst", "left_anti")
-            .select("src", "dst")
-            .localCheckpoint(eager=False)
-        )
+            .select("src", "dst"), eager=False)
         # colors was only read by the (now fully materialized) backward
         # sweep — freeable immediately; the actives wait for the next job
-        _unpersist_checkpoint(colors)
+        free(colors)
         pend_free = [old_nodes, old_edges]
     if stats is not None:
         stats["fw_bw_rounds"] = fw_bw_rounds
         stats["trim_iters"] = trim_iters
     if not settled_parts:
-        for df in pend_free:
-            _unpersist_checkpoint(df)
-        _unpersist_checkpoint(active_nodes)
-        _unpersist_checkpoint(active_edges)
         return local_df(base.sparkSession, [], "id long, scc long")
-    # ONE self-contained checkpoint for the caller (as before), then the
-    # slice-backing and residual-active checkpoints are freed
-    out = union_all(settled_parts).localCheckpoint(eager=True)
-    for df in slice_ck:
-        _unpersist_checkpoint(df)
-    for df in pend_free:
-        _unpersist_checkpoint(df)
-    _unpersist_checkpoint(active_nodes)
-    _unpersist_checkpoint(active_edges)
-    return out
+    # ONE self-contained checkpoint for the caller; the scope frees the
+    # slice-backing and residual-active checkpoints
+    return checkpoint(union_all(settled_parts), eager=True)
 
 
 def closeness_centrality(edges: DataFrame, max_iter: int = 20,
@@ -1530,6 +1383,7 @@ def closeness_centrality(edges: DataFrame, max_iter: int = 20,
     )
 
 
+@scoped
 def square_count(edges: DataFrame, max_degree: int | None = None) -> DataFrame:
     """Global 4-cycle (square) count over the undirected simple graph —
     with :func:`triangle_count` the standard motif pair a graph-shaped
@@ -1544,7 +1398,7 @@ def square_count(edges: DataFrame, max_degree: int | None = None) -> DataFrame:
     (and the same candidate-bound caveat) as ``bipartite_projection``.
     Returns a single row ``(squares BIGINT)``.
     """
-    sym = _symmetric(edges).localCheckpoint(eager=True)
+    sym = checkpoint(_symmetric(edges), eager=True)
     wedge_base = sym
     if max_degree is not None:
         wv = Window.partitionBy("src")  # src = the wedge pivot (via)
@@ -1625,6 +1479,7 @@ def incremental_connected_components(labels: DataFrame,
     return union_all([updated_old, fresh], by_name=True)
 
 
+@scoped
 def local_clustering(edges: DataFrame,
                      max_degree: int | None = None) -> DataFrame:
     """Per-node local clustering coefficient over the undirected simple
@@ -1640,7 +1495,7 @@ def local_clustering(edges: DataFrame,
     ``max_degree`` caps the wedge pivot exactly as in
     :func:`square_count`. Returns ``(id, degree, triangles, lcc_permille)``.
     """
-    sym = _symmetric(edges).localCheckpoint(eager=True)
+    sym = checkpoint(_symmetric(edges), eager=True)
     deg = sym.groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).alias("degree")
     )
@@ -1684,6 +1539,7 @@ def local_clustering(edges: DataFrame,
     )
 
 
+@scoped
 def k_truss(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
     """Edges of the k-truss: the maximal subgraph where every edge closes
     at least ``k-2`` triangles. Returns ``(a BIGINT, b BIGINT,
@@ -1705,29 +1561,26 @@ def k_truss(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
     ``k_core(edges, k-1)`` (cheap, provably lossless for the k-truss) to
     shrink the relation before peeling starts.
     """
-    und = (
+    und = checkpoint(
         edges.select(F.least("src", "dst").alias("a"),
                      F.greatest("src", "dst").alias("b"))
         .filter(F.col("a") < F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+        .distinct(), eager=True)
     support = _k_truss_peel(und, k, max_iter)
-    _unpersist_checkpoint(und)
     return support.select("a", "b", F.col("support").cast("long"))
 
 
+@scoped
 def _k_truss_peel(und: DataFrame, k: int, max_iter: int) -> DataFrame:
     """Support-peel an already-canonical ``(a < b)`` edge relation to its
     k-truss fixpoint; returns the surviving ``(a, b, support)`` relation,
-    ``localCheckpoint``-ed. The input is NOT unpersisted (the caller owns
-    it) — this is what lets :func:`trussness` thread level k's shrinking
-    output into the level-(k+1) peel instead of re-peeling the full graph.
+    checkpointed. The input belongs to the caller's scope, so the peel
+    never frees it — this is what lets :func:`trussness` thread level k's
+    shrinking output into the level-(k+1) peel instead of re-peeling the
+    full graph.
     """
-    prev_n = und.count()
-    support = None
-    first = True
-    for _ in range(max_iter):
+    def peel(state: DataFrame) -> DataFrame:
+        und = state.select("a", "b")
         e1 = und.select(F.col("a").alias("x"), F.col("b").alias("y"))
         e2 = und.select(F.col("a").alias("y"), F.col("b").alias("z"))
         tri = (
@@ -1741,26 +1594,15 @@ def _k_truss_peel(und: DataFrame, k: int, max_iter: int) -> DataFrame:
                        tri.select(F.col("x").alias("a"), F.col("z").alias("b"))], by_name=True)
             .groupBy("a", "b").agg(F.count(F.lit(1)).alias("support"))
         )
-        # non-eager checkpoint: the convergence count materializes the
-        # round (one job instead of two — r14); the superseded state is
-        # freed only after that job has run
-        kept = (
+        return (
             und.join(sup, ["a", "b"], "left")
             .select("a", "b",
                     F.coalesce("support", F.lit(0)).alias("support"))
             .filter(F.col("support") >= int(k) - 2)
-            .localCheckpoint(eager=False)
         )
-        cur = kept.count()
-        if not first:
-            _unpersist_checkpoint(support)
-        first = False
-        und = kept.select("a", "b")
-        support = kept
-        if cur == prev_n:
-            break
-        prev_n = cur
-    return support
+
+    # the convergence count materializes each round: one job per round
+    return fixpoint(und, peel, lambda df: df.count(), max_iter)
 
 
 def k_truss_oracle_sql(edges_sql: str, k: int, rounds: int,
@@ -1799,6 +1641,7 @@ FROM tr{rounds} e JOIN sup{rounds} s ON e.a = s.a AND e.b = s.b""")
     return "\n".join(parts)
 
 
+@scoped
 def maximal_independent_set(edges: DataFrame, seed: int = 7,
                             max_rounds: int = 64) -> DataFrame:
     """Deterministic Luby maximal independent set over the undirected
@@ -1816,11 +1659,8 @@ def maximal_independent_set(edges: DataFrame, seed: int = 7,
     :func:`mis_oracle_sql` (fixed unroll; rounds past convergence are
     no-ops because the active set is empty).
     """
-    sym = _symmetric(edges).localCheckpoint(eager=True)
-    active_nodes = (
-        sym.select(F.col("src").alias("id")).distinct()
-        .localCheckpoint(eager=True)
-    )
+    sym = checkpoint(_symmetric(edges), eager=True)
+    active_nodes = checkpoint(sym.select(F.col("src").alias("id")).distinct(), eager=True)
     mis_parts = []
     for r in range(1, max_rounds + 1):
         if active_nodes.limit(1).count() == 0:
@@ -1842,14 +1682,13 @@ def maximal_independent_set(edges: DataFrame, seed: int = 7,
             F.min(F.struct(F.col("dp").alias("p"),
                            F.col("dst").alias("i"))).alias("nmin"))
         winners = (
-            withp.join(nbr_min, withp.id == nbr_min.src, "left")
+            checkpoint(withp.join(nbr_min, withp.id == nbr_min.src, "left")
             .filter(
                 F.col("nmin").isNull()
                 | (F.struct(F.col("p"), F.col("id").alias("i"))
                    < F.col("nmin"))
             )
-            .select("id")
-            .localCheckpoint(eager=True)
+            .select("id"), eager=True)
         )
         mis_parts.append(winners.select("id", F.lit(r).cast("long").alias("round")))
         # deactivate winners and their neighbors
@@ -1858,13 +1697,15 @@ def maximal_independent_set(edges: DataFrame, seed: int = 7,
             sym.join(winners.withColumnRenamed("id", "src"), "src",
                      "left_semi").select(F.col("dst").alias("id"))
         ], by_name=True).distinct()
-        nxt = active_nodes.join(removed, "id", "left_anti").localCheckpoint(eager=True)
-        _unpersist_checkpoint(active_nodes)
+        nxt = checkpoint(active_nodes.join(removed, "id", "left_anti"), eager=True)
+        free(active_nodes)
         active_nodes = nxt
-        sym = sym.join(active_nodes.withColumnRenamed("id", "src"), "src",
-                       "left_semi") \
-                 .join(active_nodes.withColumnRenamed("id", "dst"), "dst",
-                       "left_semi").localCheckpoint(eager=True)
+        nxt = checkpoint(
+            sym.join(active_nodes.withColumnRenamed("id", "src"), "src", "left_semi")
+            .join(active_nodes.withColumnRenamed("id", "dst"), "dst", "left_semi"),
+            eager=True)
+        free(sym)
+        sym = nxt
     if not mis_parts:  # no edges → no rounds ran; empty typed result
         spark = edges.sparkSession
         return local_df(spark, [], "id BIGINT, round BIGINT")
@@ -1910,6 +1751,7 @@ def mis_oracle_sql(edges_sql: str, seed: int = 7, rounds: int = 24,
     return "\n".join(parts)
 
 
+@scoped
 def maximal_matching(edges: DataFrame, seed: int = 7,
                      max_rounds: int = 64) -> DataFrame:
     """Deterministic greedy maximal matching (Luby-style local minima on
@@ -1930,12 +1772,10 @@ def maximal_matching(edges: DataFrame, seed: int = 7,
     twin: :func:`matching_oracle_sql` (fixed unroll; rounds past
     convergence are no-ops on the empty active set).
     """
-    und = (
+    und = checkpoint(
         _symmetric(edges)
         .filter(F.col("src") < F.col("dst"))
-        .select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .localCheckpoint(eager=False)
-    )
+        .select(F.col("src").alias("a"), F.col("dst").alias("b")), eager=False)
     n_active = und.count()  # materializes the checkpoint — one job
     parts = []
     for r in range(1, max_rounds + 1):
@@ -1958,25 +1798,21 @@ def maximal_matching(edges: DataFrame, seed: int = 7,
         # an emptiness probe plus two eager checkpoints). A non-empty
         # active set always selects at least the global minimum edge, so
         # the count of the NEXT active set doubles as the loop test.
-        sel = (
+        sel = checkpoint(
             wp.join(nmin.select(F.col("node").alias("a"),
                                 F.col("nm").alias("na")), "a")
             .join(nmin.select(F.col("node").alias("b"),
                               F.col("nm").alias("nb")), "b")
             .filter((key == F.col("na")) & (key == F.col("nb")))
-            .select("a", "b")
-            .localCheckpoint(eager=False)
-        )
+            .select("a", "b"), eager=False)
         parts.append(sel.select("a", "b", F.lit(r).cast("long").alias("round")))
         matched = _endpoints(sel, "a", "b", "node").distinct()
-        nxt = (
+        nxt = checkpoint(
             und.join(matched.withColumnRenamed("node", "a"), "a", "left_anti")
             .join(matched.withColumnRenamed("node", "b"), "b", "left_anti")
-            .select("a", "b")
-            .localCheckpoint(eager=False)
-        )
+            .select("a", "b"), eager=False)
         n_active = nxt.count()
-        _unpersist_checkpoint(und)
+        free(und)
         und = nxt
     if not parts:
         return local_df(edges.sparkSession, [], "a BIGINT, b BIGINT, round BIGINT")
@@ -2101,6 +1937,7 @@ def harmonic_centrality(edges: DataFrame, max_iter: int = 20,
     )
 
 
+@scoped
 def minimum_spanning_forest(edges: DataFrame, weight_col: str = "weight",
                             max_iter: int = 20,
                             driver_contract_max: int = 500_000) -> DataFrame:
@@ -2121,22 +1958,18 @@ def minimum_spanning_forest(edges: DataFrame, weight_col: str = "weight",
     it is itself iterative. Cross edges at least halve per round; the
     loop ends when none remain.
     """
-    canon = (
+    canon = checkpoint(
         edges.select(
             F.least("src", "dst").alias("a"),
             F.greatest("src", "dst").alias("b"),
             F.col(weight_col).cast("long").alias("w"),
         )
         .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b").agg(F.min("w").alias("w"))
-        .localCheckpoint(eager=True)
-    )
-    comp = (
+        .groupBy("a", "b").agg(F.min("w").alias("w")), eager=True)
+    comp = checkpoint(
         _endpoints(canon, "a", "b")
         .distinct()
-        .select("id", F.col("id").alias("comp"))
-        .localCheckpoint(eager=True)
-    )
+        .select("id", F.col("id").alias("comp")), eager=True)
     forest_parts = []
     for _ in range(max_iter):
         lab = (
@@ -2154,7 +1987,7 @@ def minimum_spanning_forest(edges: DataFrame, weight_col: str = "weight",
         bids = union_all([lab.select(F.col("ca").alias("c"), "a", "b", "w", "ca", "cb"),
                           lab.select(F.col("cb").alias("c"), "a", "b", "w", "ca", "cb")],
                          by_name=True)
-        picked = (
+        picked = checkpoint(
             bids.groupBy("c")
             .agg(F.min(F.struct(
                 F.col("w").alias("w"), F.col("a").alias("a"),
@@ -2163,9 +1996,7 @@ def minimum_spanning_forest(edges: DataFrame, weight_col: str = "weight",
             .select(F.col("m.a").alias("a"), F.col("m.b").alias("b"),
                     F.col("m.w").alias("w"), F.col("m.ca").alias("ca"),
                     F.col("m.cb").alias("cb"))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
+            .distinct(), eager=False)
         # ONE evaluation of the component-label join per round: its count
         # materializes the checkpoint, doubles as the cross-edge emptiness
         # test (a non-empty cross set always yields ≥ 1 picked edge), and
@@ -2206,12 +2037,10 @@ def minimum_spanning_forest(edges: DataFrame, weight_col: str = "weight",
             merged = local_df(picked.sparkSession, mapping, "id long, component long")
         else:
             merged = connected_components(cedges)  # (id=old comp, component=new)
-        nxt = (
+        nxt = checkpoint(
             comp.join(merged.withColumnRenamed("id", "comp"), "comp", "left")
-            .select("id", F.coalesce("component", F.col("comp")).alias("comp"))
-            .localCheckpoint(eager=True)
-        )
-        _unpersist_checkpoint(comp)
+            .select("id", F.coalesce("component", F.col("comp")).alias("comp")), eager=True)
+        free(comp)
         comp = nxt
     if not forest_parts:
         return canon.filter(F.lit(False)).select(
@@ -2220,6 +2049,7 @@ def minimum_spanning_forest(edges: DataFrame, weight_col: str = "weight",
         "a", "b", F.col("w").alias("weight"))
 
 
+@scoped
 def modularity_scaled(edges: DataFrame, labels: DataFrame) -> DataFrame:
     """Exact integer modularity per community: for an undirected graph with
     m canonical edges and a ``(id, community)`` assignment, returns one row
@@ -2236,13 +2066,11 @@ def modularity_scaled(edges: DataFrame, labels: DataFrame) -> DataFrame:
     on a 100 TB graph, where sampling-free exact evaluation is otherwise
     fragile in floating point.
     """
-    und = (
+    und = checkpoint(
         edges.select(F.least("src", "dst").alias("a"),
                      F.greatest("src", "dst").alias("b"))
         .filter(F.col("a") < F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+        .distinct(), eager=True)
     la = labels.select(F.col("id").alias("a"), F.col("community").alias("ca"))
     lb = labels.select(F.col("id").alias("b"), F.col("community").alias("cb"))
     lab = und.join(la, "a").join(lb, "b")
@@ -2275,6 +2103,7 @@ def modularity_scaled(edges: DataFrame, labels: DataFrame) -> DataFrame:
     )
 
 
+@scoped
 def greedy_modularity_moves(edges: DataFrame, rounds: int = 3) -> DataFrame:
     """Louvain-style local moves, deterministic and synchronous: every node
     simultaneously evaluates joining each neighboring community by EXACT
@@ -2296,10 +2125,10 @@ def greedy_modularity_moves(edges: DataFrame, rounds: int = 3) -> DataFrame:
     (node, neighbor-community) aggregation, one argmax — all keyed
     shuffles, state checkpointed.
     """
-    sym = _symmetric(edges).localCheckpoint(eager=True)
+    sym = checkpoint(_symmetric(edges), eager=True)
     m = sym.count() // 2
-    deg = sym.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("k")).localCheckpoint(eager=True)
+    deg = checkpoint(sym.groupBy(F.col("src").alias("id")).agg(
+        F.count(F.lit(1)).alias("k")), eager=True)
     labels = deg.select("id", F.col("id").alias("community"))
     for _round in range(rounds):
         lab_s = labels.select(F.col("id").alias("src"),
@@ -2372,15 +2201,13 @@ def greedy_modularity_moves(edges: DataFrame, rounds: int = 3) -> DataFrame:
             .filter(F.col("__nmin").isNull() | (F.col("__p") < F.col("__nmin")))
             .select("id")
         )
-        nxt = (
+        nxt = checkpoint(
             labels.select("id")
             .join(best.join(movers, "id", "left_semi"), "id", "left")
             .join(cur, "id")
             .select("id",
-                    F.coalesce("community", F.col("__cur")).alias("community"))
-            .localCheckpoint(eager=True)
-        )
-        _unpersist_checkpoint(labels)
+                    F.coalesce("community", F.col("__cur")).alias("community")), eager=True)
+        free(labels)
         labels = nxt
     return labels
 
@@ -2450,6 +2277,7 @@ gl0 AS MATERIALIZED (SELECT id, id AS community FROM gdeg)"""]
     return "\n".join(parts)
 
 
+@scoped
 def shortest_path_counts(edges: DataFrame, max_iter: int = 100) -> DataFrame:
     """All-pairs shortest-path COUNTS over a directed simple graph:
     ``(src, dst, depth, sigma)`` — depth = min hops, sigma = number of
@@ -2465,12 +2293,11 @@ def shortest_path_counts(edges: DataFrame, max_iter: int = 100) -> DataFrame:
     ``max_iter`` costs nothing after convergence — unlike the DOUBLING
     closure this frontier is linear, one round per hop).
     """
-    base_ck: list = []
-    base = _prep_edge_rel(edges, ckpts=base_ck)
-    first = base.select(
+    base = _prep_edge_rel(edges)
+    first = checkpoint(base.select(
         "src", "dst", F.lit(1).cast("long").alias("depth"),
         F.lit(1).cast("long").alias("sigma"),
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     n = first.count()
     slices = [first]
     seen_rows = n
@@ -2493,45 +2320,33 @@ def shortest_path_counts(edges: DataFrame, max_iter: int = 100) -> DataFrame:
     # O(levels²), and the per-level broadcast rebuilds from one flat
     # LogicalRDD instead of an ever-larger union (r15, ADVICE item)
     since_collapse = 0
-    collapse_ck: list = []
     for k in range(2, max_iter + 2):
         if n == 0:
             break
         fr = F.broadcast(frontier) if n <= _BCAST_STATE_MAX_ROWS else frontier
         sn = F.broadcast(settled_keys) \
             if seen_rows <= _BCAST_STATE_MAX_ROWS else settled_keys
-        nxt = (
+        nxt = checkpoint(
             fr.join(ej, "dst")
             .groupBy("src", F.col("_to").alias("dst"))
             .agg(F.sum("sigma").alias("sigma"))
             .filter(F.col("src") != F.col("dst"))
             .join(sn, ["src", "dst"], "left_anti")
-            .select("src", "dst", F.lit(k).cast("long").alias("depth"), "sigma")
-            .localCheckpoint(eager=False)
-        )
+            .select("src", "dst", F.lit(k).cast("long").alias("depth"), "sigma"), eager=False)
         n = nxt.count()
         if n == 0:
-            _unpersist_checkpoint(nxt)  # empty break-round slice
             break
         slices.append(nxt)
         settled_keys = union_all([settled_keys, nxt.select("src", "dst")], by_name=True)
         seen_rows += n
         since_collapse += 1
         if since_collapse >= _SEEN_COLLAPSE_LEVELS:
-            settled_keys = settled_keys.localCheckpoint(eager=True)
-            collapse_ck.append(settled_keys)
+            settled_keys = checkpoint(settled_keys, eager=True)
             since_collapse = 0
         frontier = nxt
-    # one self-contained checkpoint for the caller (freeable with a single
-    # _unpersist_checkpoint, as before); the per-level slices are freed here
-    out = union_all(slices, by_name=True).localCheckpoint(eager=True)
-    for sl in slices:
-        _unpersist_checkpoint(sl)
-    for df in collapse_ck:
-        _unpersist_checkpoint(df)
-    for df in base_ck:
-        _unpersist_checkpoint(df)
-    return out
+    # one self-contained checkpoint for the caller; the scope frees the
+    # per-level slices, the collapsed settled sets and the edge relation
+    return checkpoint(union_all(slices, by_name=True), eager=True)
 
 
 def stress_centrality(edges: DataFrame, max_iter: int = 100) -> DataFrame:
@@ -2565,6 +2380,7 @@ def stress_centrality(edges: DataFrame, max_iter: int = 100) -> DataFrame:
     )
 
 
+@scoped
 def community_conductance(edges: DataFrame, labels: DataFrame) -> DataFrame:
     """Exact integer conductance per community — the cut-quality metric
     that complements :func:`modularity_scaled` (Kannan, Vempala & Vetta
@@ -2579,13 +2395,11 @@ def community_conductance(edges: DataFrame, labels: DataFrame) -> DataFrame:
     labels, one community-keyed aggregation; the edge total ``2m`` rides
     as a Python scalar (one count job), never a per-row subquery.
     """
-    und = (
+    und = checkpoint(
         edges.select(F.least("src", "dst").alias("a"),
                      F.greatest("src", "dst").alias("b"))
         .filter(F.col("a") < F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+        .distinct(), eager=True)
     la = labels.select(F.col("id").alias("a"), F.col("community").alias("ca"))
     lb = labels.select(F.col("id").alias("b"), F.col("community").alias("cb"))
     lab = und.join(la, "a").join(lb, "b")
@@ -2655,6 +2469,7 @@ LEFT JOIN cd_vol v ON n.community = v.community
 LEFT JOIN cd_cut c ON n.community = c.community"""
 
 
+@scoped
 def shortest_path_tree(edges: DataFrame, sources: "list[int]",
                        max_iter: int = 20) -> DataFrame:
     """BFS shortest-path tree from each source with deterministic parent
@@ -2675,31 +2490,27 @@ def shortest_path_tree(edges: DataFrame, sources: "list[int]",
     by construction).
     """
     spark = edges.sparkSession
-    e = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
-    frontier = (
+    e = checkpoint(edges.select("src", "dst").distinct(), eager=True)
+    frontier = checkpoint(
         local_df(spark, [(int(s),) for s in sources], "id BIGINT")
         .distinct()
-        .select(F.col("id").alias("root"), F.col("id").alias("id"))
-        .localCheckpoint(eager=True)
-    )
-    settled = frontier.select("root", "id").localCheckpoint(eager=True)
+        .select(F.col("id").alias("root"), F.col("id").alias("id")), eager=True)
+    settled = checkpoint(frontier.select("root", "id"), eager=True)
     parts = []
     for depth in range(1, max_iter + 1):
         if frontier.limit(1).count() == 0:
             break
-        nxt = (
+        nxt = checkpoint(
             frontier.join(e.withColumnRenamed("src", "id"), "id")
             .select("root", F.col("dst").alias("id"),
                     F.col("id").alias("__p"))
             .join(settled, ["root", "id"], "left_anti")
             .groupBy("root", "id")
-            .agg(F.min("__p").alias("parent"))
-            .localCheckpoint(eager=True)
-        )
+            .agg(F.min("__p").alias("parent")), eager=True)
         parts.append(nxt.select(
             "root", "id", F.lit(depth).cast("long").alias("depth"), "parent"))
-        settled = union_all([settled, nxt.select("root", "id")],
-                            by_name=True).localCheckpoint(eager=True)
+        settled = checkpoint(union_all([settled, nxt.select("root", "id")],
+                            by_name=True), eager=True)
         frontier = nxt.select("root", "id")
     if not parts:
         return local_df(spark, [], "root BIGINT, id BIGINT, depth BIGINT, parent BIGINT")
@@ -2736,6 +2547,7 @@ WHERE n.depth > 0
 GROUP BY n.root, n.id, n.depth"""
 
 
+@scoped
 def reciprocity(edges: DataFrame) -> DataFrame:
     """Directed-graph reciprocity (Garlaschelli & Loffredo 2004): the
     fraction of directed edges whose reverse also exists, as integer
@@ -2749,9 +2561,8 @@ def reciprocity(edges: DataFrame) -> DataFrame:
     (left_semi — the probe never materializes pair payloads), two scalar
     counts folded into a single-row result.
     """
-    e = (edges.select("src", "dst")
-         .filter(F.col("src") != F.col("dst")).distinct()
-         .localCheckpoint(eager=True))
+    e = (checkpoint(edges.select("src", "dst")
+         .filter(F.col("src") != F.col("dst")).distinct(), eager=True))
     rec = e.join(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
         ["src", "dst"], "left_semi")
@@ -2784,6 +2595,7 @@ SELECT (SELECT COUNT(*) FROM rc_e) AS n_edges,
             ELSE 0 END AS BIGINT) AS reciprocity_permille"""
 
 
+@scoped
 def wl_colors(edges: DataFrame, rounds: int = 2,
               labels: DataFrame | None = None) -> DataFrame:
     """1-dimensional Weisfeiler–Leman color refinement (Weisfeiler &
@@ -2804,17 +2616,16 @@ def wl_colors(edges: DataFrame, rounds: int = 2,
     land every 8th round only — the r14 change that removed a per-round
     eager job + full |V| materialization): a caller that triggers MANY
     actions on the result recomputes those tail rounds per action, so
-    ``df = wl_colors(...).localCheckpoint()`` first when reusing it.
+    checkpoint ``wl_colors(...)`` first when reusing it.
     """
-    sym = _symmetric(edges).localCheckpoint(eager=True)
+    sym = checkpoint(_symmetric(edges), eager=True)
     if labels is not None:
         colors = labels.select(
             "id", F.md5(F.col("label").cast("string")).alias("color"))
     else:
         colors = sym.groupBy(F.col("src").alias("id")).agg(
             F.md5(F.count(F.lit(1)).cast("string")).alias("color"))
-    colors = colors.localCheckpoint(eager=True)
-    ck = [colors]
+    colors = checkpoint(colors, eager=True)
     for i in range(rounds):
         nbr = (
             sym.join(colors.select(F.col("id").alias("dst"),
@@ -2838,12 +2649,9 @@ def wl_colors(edges: DataFrame, rounds: int = 2,
         # paid an eager checkpoint job + a full |V| materialization per
         # round (pagerank's loop discipline, applied here in r14)
         if (i + 1) % 8 == 0 and i + 1 < rounds:
-            colors = colors.localCheckpoint(eager=True)
-            ck.append(colors)
-    # free superseded checkpoints only — the LAST one backs the returned
-    # (possibly lazy) plan and must stay live for the caller's action
-    for df in ck[:-1]:
-        _unpersist_checkpoint(df)
+            colors = checkpoint(colors, eager=True)
+    # the scope frees the superseded checkpoints; the LAST one backs the
+    # returned (possibly lazy) plan and stays live for the caller's action
     return colors
 
 
@@ -2933,6 +2741,7 @@ SELECT CAST({int(k)} AS BIGINT) AS k, CAST(n_rich AS BIGINT) AS n_rich,
 FROM rb_cnt, rb_e"""
 
 
+@scoped
 def diameter_double_sweep(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     """Double-sweep diameter lower bound (Magnien, Latapy & Habib 2009 —
     the standard cheap estimator, exact on trees and usually tight in
@@ -2947,7 +2756,7 @@ def diameter_double_sweep(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     :func:`shortest_path_tree`); the two single-row pivots (min id,
     argmax depth) are bounded driver scalars, not data collections.
     """
-    sym = _symmetric(edges).localCheckpoint(eager=True)
+    sym = checkpoint(_symmetric(edges), eager=True)
     start_row = sym.agg(F.min("src").alias("m")).collect()[0]
     if start_row["m"] is None:
         return local_df(
@@ -3107,6 +2916,7 @@ SELECT u.a, u.b, CAST(COALESCE(w.c, 0) AS BIGINT) AS embeddedness
 FROM eb_und u LEFT JOIN eb_w w ON u.a = w.a AND u.b = w.b"""
 
 
+@scoped
 def coreness(edges: DataFrame, k_max: int = 8,
              max_iter: int = 100) -> DataFrame:
     """Full core decomposition: every non-isolated node's core number
@@ -3124,36 +2934,25 @@ def coreness(edges: DataFrame, k_max: int = 8,
     ``k_max`` ≥ the graph's degeneracy, which the error reports how to
     find); the guard too peels only the last level's output.
     """
-    sym = _symmetric(edges).localCheckpoint(eager=True)
-    surv = _k_core_peel(sym, 1, max_iter)
-    base = (surv.select("src").distinct()
-            .select(F.col("src").alias("id"))
-            .localCheckpoint(eager=True))
+    surv = _k_core_peel(checkpoint(_symmetric(edges), eager=True), 1, max_iter)
+    base = checkpoint(surv.select("src").distinct()
+                      .select(F.col("src").alias("id")), eager=True)
     out = base.withColumn("coreness", F.lit(1).cast("long"))
-    cur_ckpt = surv
     for k in range(2, k_max + 2):
-        surv = _k_core_peel(cur_ckpt, k, max_iter)
+        prev, surv = surv, _k_core_peel(surv, k, max_iter)
         if k == k_max + 1:
-            overflow = bool(surv.limit(1).count())
-            if surv is not cur_ckpt:
-                _unpersist_checkpoint(surv)
-            if cur_ckpt is not sym:
-                _unpersist_checkpoint(cur_ckpt)
-            _unpersist_checkpoint(sym)
-            if overflow:
+            if surv.limit(1).count():
                 raise ValueError(
                     f"coreness: the {k_max + 1}-core is non-empty — "
                     "raise k_max to at least the graph's degeneracy")
             break
         ck = (surv.select("src").distinct()
               .select(F.col("src").alias("id"), F.lit(1).alias("__in")))
-        out = out.join(ck, "id", "left").select(
+        out = checkpoint(out.join(ck, "id", "left").select(
             "id",
             (F.col("coreness") + F.coalesce("__in", F.lit(0)))
-            .cast("long").alias("coreness")).localCheckpoint(eager=True)
-        if cur_ckpt is not sym:
-            _unpersist_checkpoint(cur_ckpt)
-        cur_ckpt = surv
+            .cast("long").alias("coreness")), eager=True)
+        free(prev)
     return out
 
 
@@ -3172,6 +2971,7 @@ FROM ({k_core_oracle_sql(edges_sql, 1, rounds)}) c1
 {joins}"""
 
 
+@scoped
 def landmark_distances(edges: DataFrame, n_landmarks: int = 4,
                        max_iter: int = 20) -> DataFrame:
     """Distances from the ``n_landmarks`` highest-degree nodes to every
@@ -3194,7 +2994,7 @@ def landmark_distances(edges: DataFrame, n_landmarks: int = 4,
     """
     if n_landmarks <= 0:
         raise ValueError("n_landmarks must be positive")
-    e = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
+    e = checkpoint(edges.select("src", "dst").distinct(), eager=True)
     deg = (
         _endpoints(e)
         .groupBy("id").agg(F.count(F.lit(1)).alias("deg"))
@@ -3205,27 +3005,25 @@ def landmark_distances(edges: DataFrame, n_landmarks: int = 4,
     spark = edges.sparkSession
     if not marks:
         return local_df(spark, [], "landmark BIGINT, id BIGINT, depth BIGINT")
-    frontier = local_df(
+    frontier = checkpoint(local_df(
         spark, [(m, m) for m in marks], "landmark BIGINT, id BIGINT"
-    ).localCheckpoint(eager=True)
+    ), eager=True)
     settled = frontier
     levels = [frontier.select(
         "landmark", "id", F.lit(0).cast("long").alias("depth"))]
     for depth in range(1, max_iter + 1):
         if frontier.limit(1).count() == 0:
             break
-        nxt = (
+        nxt = checkpoint(
             frontier.join(e.withColumnRenamed("src", "id"), "id")
             .select("landmark", F.col("dst").alias("id"))
             .join(settled, ["landmark", "id"], "left_anti")
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
+            .distinct(), eager=True)
         levels.append(nxt.select(
             "landmark", "id", F.lit(depth).cast("long").alias("depth")))
-        settled = union_all([settled, nxt], by_name=True).localCheckpoint(eager=True)
+        settled = checkpoint(union_all([settled, nxt], by_name=True), eager=True)
         frontier = nxt
-    return union_all(levels, by_name=True).localCheckpoint(eager=True)
+    return checkpoint(union_all(levels, by_name=True), eager=True)
 
 
 def landmark_distances_sql(edges_sql: str, n_landmarks: int = 4,
@@ -3293,6 +3091,7 @@ JOIN lm_d b ON b.id = p.v AND b.landmark = a.landmark
 GROUP BY p.u, p.v"""
 
 
+@scoped
 def greedy_coloring(edges: DataFrame, max_iter: int = 64,
                     seed: int = 0) -> DataFrame:
     """Distance-1 graph coloring by parallel Jones–Plassmann (1993):
@@ -3322,19 +3121,16 @@ def greedy_coloring(edges: DataFrame, max_iter: int = 64,
         edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .filter(F.col("a") != F.col("b"))
     )
-    adj = (
+    adj = checkpoint(
         union_all([und, und.select(F.col("b").alias("a"), F.col("a").alias("b"))],
                   by_name=True)
-        .distinct().localCheckpoint(eager=True)
-    )
+        .distinct(), eager=True)
     pri = F.conv(F.substring(F.md5(F.concat_ws(
         "|", F.lit(f"color{seed}"), F.col("id").cast("string"))), 1, 15),
         16, 10).cast("long")
-    nodes = (
+    nodes = checkpoint(
         adj.select(F.col("a").alias("id")).distinct()
-        .select("id", pri.alias("pri"))
-        .localCheckpoint(eager=True)
-    )
+        .select("id", pri.alias("pri")), eager=True)
     colored = local_df(spark, [], "id BIGINT, color BIGINT, round BIGINT")
     uncolored = nodes
     for rnd in range(1, max_iter + 1):
@@ -3361,15 +3157,14 @@ def greedy_coloring(edges: DataFrame, max_iter: int = 64,
             .groupBy(ready.id)
             .agg(F.collect_set("c").alias("used"))
         )
-        newly = used.select(
+        newly = checkpoint(used.select(
             "id",
             F.expr("array_min(array_except("
                    "sequence(1, size(used) + 1), used))").alias("color"),
             F.lit(rnd).cast("long").alias("round"),
-        ).localCheckpoint(eager=True)
-        colored = union_all([colored, newly], by_name=True).localCheckpoint(eager=True)
-        uncolored = uncolored.join(newly.select("id"), "id", "left_anti") \
-            .localCheckpoint(eager=True)
+        ), eager=True)
+        colored = checkpoint(union_all([colored, newly], by_name=True), eager=True)
+        uncolored = checkpoint(uncolored.join(newly.select("id"), "id", "left_anti"), eager=True)
     remaining = uncolored.limit(1).count()
     if remaining:
         raise AssertionError(
@@ -3576,65 +3371,7 @@ _GN_AUTO_EDGE_LIMIT = 5_000_000
 _GN_AUTO_PIVOTS = 64
 
 
-from pyspark.sql.classic.dataframe import (  # noqa: E402 — subclass base
-    DataFrame as _ClassicDataFrame,
-)
-
-
-class _DeferredDataFrame(_ClassicDataFrame):
-    """A DataFrame whose plan is produced by ``thunk()`` on FIRST use
-    (guide §1.2: don't compute things you throw away).
-
-    :func:`girvan_newman_split`'s ``labels`` output needs a driver-side
-    iterative :func:`connected_components` run that cannot be expressed
-    as one lazy Catalyst plan, so before r15 every caller paid that loop
-    eagerly inside the call — including callers that consume only
-    ``removed`` (the bench's removal-sequence entries, any pipeline that
-    re-labels later). This proxy defers the loop until any DataFrame
-    attribute is touched; the materialized result is computed once and
-    every subsequent access delegates to it, so a consumer (the ``gnlab``
-    gate) sees exactly the rows/schema the eager form produced.
-
-    Implementation: the classic PySpark DataFrame keeps its state in
-    ``_jdf``/``_session``/``_sc`` instance attributes set by
-    ``__init__``; this subclass skips that ``__init__`` and serves the
-    same names as properties, materializing on ``_jdf`` access —
-    every public DataFrame method reads ``self._jdf``, so any operation
-    triggers (and then permanently reuses) the thunk's result.
-    """
-
-    def __new__(cls, session, thunk):
-        # the classic DataFrame's __new__ explicitly invokes
-        # __init__(jdf, sql_ctx) — bypass it, our state is (session, thunk)
-        return object.__new__(cls)
-
-    def __init__(self, session, thunk):
-        # deliberately NOT calling DataFrame.__init__ — _jdf is deferred
-        self.__dict__["_lazy_thunk"] = thunk
-        self.__dict__["_lazy_df"] = None
-        self.__dict__["_lazy_session"] = session
-        self.__dict__["is_cached"] = False
-        self.__dict__["_support_repr_html"] = False
-
-    def _lazy_materialize(self) -> DataFrame:
-        if self.__dict__["_lazy_df"] is None:
-            self.__dict__["_lazy_df"] = self.__dict__["_lazy_thunk"]()
-            self.__dict__["_lazy_thunk"] = None
-        return self.__dict__["_lazy_df"]
-
-    @property
-    def _jdf(self):
-        return self._lazy_materialize()._jdf
-
-    @property
-    def _session(self):
-        return self.__dict__["_lazy_session"]
-
-    @property
-    def _sc(self):
-        return self.__dict__["_lazy_session"]._sc
-
-
+@scoped
 def girvan_newman_split(edges: DataFrame, n_removals: int = 1,
                         max_iter: int = 100,
                         n_pivots: int | None = None, seed: int = 0,
@@ -3724,14 +3461,13 @@ def girvan_newman_split(edges: DataFrame, n_removals: int = 1,
     # non-eager e0: all_nodes' eager checkpoint job materializes it (r14);
     # und0 is likewise materialized by its first consumer (the dispatch
     # count, the modularity baseline, or round 1's edge prep)
-    e0 = edges.select("src", "dst").localCheckpoint(eager=False)
+    e0 = checkpoint(edges.select("src", "dst"), eager=False)
     # node set from the RAW edges — a node whose only edges are
     # self-loops must still appear in the labels output
-    all_nodes = _endpoints(e0).distinct().localCheckpoint(eager=True)
+    all_nodes = checkpoint(_endpoints(e0).distinct(), eager=True)
     und0 = e0.filter(F.col("src") != F.col("dst"))
-    und0 = union_all([und0, und0.select(F.col("dst").alias("src"),
-                                        F.col("src").alias("dst"))]).distinct() \
-        .localCheckpoint(eager=False)
+    und0 = checkpoint(union_all([und0, und0.select(F.col("dst").alias("src"),
+                                        F.col("src").alias("dst"))]).distinct(), eager=False)
     und = und0
     if method == "exact":
         n_pivots = None
@@ -3774,7 +3510,7 @@ def girvan_newman_split(edges: DataFrame, n_removals: int = 1,
     # r15 (guide §1.2 — don't compute things you throw away): the
     # removal sequence never reads the labels, so all label work is
     # DEFERRED into the returned labels DataFrame (computed on first
-    # access, see _DeferredDataFrame) unless pick="modularity" consumes
+    # access, see loopstate.Deferred) unless pick="modularity" consumes
     # labels internally every round. Concretely: the exact path's full
     # CC init runs only when a second round (or modularity scoring)
     # needs it, the FINAL round's incremental comp update moves into
@@ -3788,49 +3524,58 @@ def girvan_newman_split(edges: DataFrame, n_removals: int = 1,
     def _ensure_comp():
         nonlocal comp
         if comp is None:
-            comp = connected_components(und0, nodes=all_nodes) \
-                .localCheckpoint(eager=True)
+            comp = checkpoint(connected_components(und0, nodes=all_nodes), eager=True)
+
+    def _split(comp, und, a):
+        """comp after removing an edge at ``a``: CC re-run over ``a``'s
+        component X alone; returns (new comp, X's ids, X's edges)."""
+        comp_a = comp.filter(F.col("id") == a) \
+            .select("component").collect()[0][0]
+        x_ids = checkpoint(comp.filter(F.col("component") == comp_a)
+                           .select("id"), eager=True)
+        sub = checkpoint(und.join(x_ids.select(F.col("id").alias("src")),
+                                  "src", "left_semi"), eager=True)
+        new_comp = checkpoint(union_all(
+            [comp.filter(F.col("component") != comp_a),
+             connected_components(sub, nodes=x_ids)], by_name=True), eager=True)
+        return new_comp, x_ids, sub
+
+    def _top(eb: DataFrame) -> list:
+        return (eb.filter(F.col("src") < F.col("dst"))
+                .orderBy(eb_micro.desc(), F.col("src").asc(), F.col("dst").asc())
+                .limit(1).collect())
+
+    @scoped
+    def _sampled_top(und: DataFrame) -> list:
+        # max_iter+1 hops, silently truncated — exactly the depth the
+        # exact branch's closure settles (its frontier loop runs
+        # range(2, max_iter+2)), keeping the two modes' path sets
+        # identical at any diameter. The round's BFS state is freed
+        # when this scope returns the collected row.
+        return _top(_sampled_betweenness(
+            und, n_pivots, seed, max_iter + 1, scale=True, pivots=None,
+            horizon=True, want_edges=True))
 
     if n_pivots is None:
         C = shortest_path_counts(und, max_iter=max_iter)
-        eb_cache = edge_betweenness(und, closure=C) \
-            .localCheckpoint(eager=True)
-        _unpersist_checkpoint(C)
+        eb_cache = checkpoint(edge_betweenness(und, closure=C), eager=True)
+        free(C)
         if not defer_labels:
             _ensure_comp()
     for r in range(n_rounds):
         last = r == n_rounds - 1
-        if n_pivots is not None:
-            ck: list = []
-            # max_iter+1 hops, silently truncated — exactly the depth
-            # the exact branch's closure settles (its frontier loop runs
-            # range(2, max_iter+2)), keeping the two modes' path sets
-            # identical at any diameter
-            eb = edge_betweenness_sampled(
-                und, n_pivots=n_pivots, seed=seed, max_iter=max_iter + 1,
-                horizon=True, _ckpts=ck)
-            top = (eb.filter(F.col("src") < F.col("dst"))
-                   .orderBy(eb_micro.desc(),
-                            F.col("src").asc(), F.col("dst").asc())
-                   .limit(1).collect())
-            for c in ck:
-                _unpersist_checkpoint(c)
-        else:
-            top = (eb_cache.filter(F.col("src") < F.col("dst"))
-                   .orderBy(eb_micro.desc(),
-                            F.col("src").asc(), F.col("dst").asc())
-                   .limit(1).collect())
+        top = _sampled_top(und) if n_pivots is not None else _top(eb_cache)
         if not top:
             break
         a, b, score = top[0]["src"], top[0]["dst"], top[0]["betweenness"]
         removed.append((r, a, b, float(score)))
         prev = und
-        und = und.filter(
+        und = checkpoint(und.filter(
             ~((F.col("src") == a) & (F.col("dst") == b))
             & ~((F.col("src") == b) & (F.col("dst") == a))
-        ).localCheckpoint(eager=True)
+        ), eager=True)
         if prev is not und0:  # und0 backs the modularity scoring
-            _unpersist_checkpoint(prev)
+            free(prev)
         if n_pivots is None:
             if last and defer_labels:
                 # nothing downstream reads comp or eb_cache eagerly —
@@ -3842,31 +3587,23 @@ def girvan_newman_split(edges: DataFrame, n_removals: int = 1,
             _ensure_comp()
             # affected component X = a's component BEFORE the removal
             # (b shares it — they shared an edge)
-            comp_a = comp.filter(F.col("id") == a) \
-                .select("component").collect()[0][0]
-            x_ids = comp.filter(F.col("component") == comp_a) \
-                .select("id").localCheckpoint(eager=True)
-            sub = und.join(x_ids.select(F.col("id").alias("src")),
-                           "src", "left_semi").localCheckpoint(eager=True)
-            cc_sub = connected_components(sub, nodes=x_ids)
-            new_comp = union_all([comp.filter(F.col("component") != comp_a), cc_sub],
-                                 by_name=True).localCheckpoint(eager=True)
-            _unpersist_checkpoint(comp)
+            new_comp, x_ids, sub = _split(comp, und, a)
+            free(comp)
             comp = new_comp
             if not last:
                 # eb_cache serves ONLY the next round's argmax — on the
                 # final round the update is dead work in every mode (r15)
                 C = shortest_path_counts(sub, max_iter=max_iter)
                 eb_sub = edge_betweenness(sub, closure=C)
-                new_cache = union_all(
+                new_cache = checkpoint(union_all(
                     [eb_cache.join(x_ids.select(F.col("id").alias("src")),
                                    "src", "left_anti"), eb_sub],
-                    by_name=True).localCheckpoint(eager=True)
-                _unpersist_checkpoint(C)
-                _unpersist_checkpoint(eb_cache)
+                    by_name=True), eager=True)
+                free(C)
+                free(eb_cache)
                 eb_cache = new_cache
-            _unpersist_checkpoint(sub)
-            _unpersist_checkpoint(x_ids)
+            free(sub)
+            free(x_ids)
         if pick == "modularity":
             q = _q_from_labels(comp) if n_pivots is None else _q_scaled(und)
             if q > best_q:
@@ -3888,26 +3625,15 @@ def girvan_newman_split(edges: DataFrame, n_removals: int = 1,
         # exact mode with a deferred final round: the thunk applies the
         # final removal's incremental comp update (or, when no
         # incremental state was ever built — single-round calls — one
-        # CC over the final cut). und/comp/all_nodes are live
-        # checkpoints the thunk closes over; same min-id labeling as
-        # the eager form, computed on first access only.
+        # CC over the final cut). und/comp/all_nodes stay live until
+        # the thunk runs; same min-id labeling as the eager form,
+        # computed on first access only.
         def _labels_exact(und_f=und, comp_f=comp, a_f=pending_a):
             if comp_f is None:
                 return connected_components(und_f, nodes=all_nodes)
-            comp_a = comp_f.filter(F.col("id") == a_f) \
-                .select("component").collect()[0][0]
-            x_ids = comp_f.filter(F.col("component") == comp_a) \
-                .select("id").localCheckpoint(eager=True)
-            sub = und_f.join(x_ids.select(F.col("id").alias("src")),
-                             "src", "left_semi").localCheckpoint(eager=True)
-            out = union_all([comp_f.filter(F.col("component") != comp_a),
-                             connected_components(sub, nodes=x_ids)],
-                            by_name=True).localCheckpoint(eager=True)
-            _unpersist_checkpoint(sub)
-            _unpersist_checkpoint(x_ids)
-            return out
+            return _split(comp_f, und_f, a_f)[0]
 
-        labels = _DeferredDataFrame(spark, _labels_exact)
+        labels = Deferred(spark, _labels_exact, [und, comp, all_nodes])
     elif n_pivots is None and comp is not None:
         # the incrementally-maintained labels ARE connected_components
         # of the final cut (same min-id labeling over the same
@@ -3916,9 +3642,9 @@ def girvan_newman_split(edges: DataFrame, n_removals: int = 1,
     elif defer_labels:
         # sampled mode (or an exact call whose loop never removed an
         # edge): one CC over the final cut, on first access
-        labels = _DeferredDataFrame(
-            spark,
-            lambda und_f=und: connected_components(und_f, nodes=all_nodes))
+        labels = Deferred(
+            spark, lambda und_f=und: connected_components(und_f, nodes=all_nodes),
+            [und, all_nodes])
     else:
         labels = connected_components(und, nodes=all_nodes)
     return rem_df, labels
@@ -3937,8 +3663,7 @@ _SEEN_COLLAPSE_LEVELS = 32
 #: this is a runtime-stats decision, not an estimate: small levels join
 #: with ZERO exchanges; levels above the bound fall back to the
 #: co-partitioned sort-merge path against the cached edge relation.
-_BCAST_STATE_MAX_ROWS = int(os.environ.get(
-    "SPARK_GRAFT_BCAST_STATE_MAX", "1000000"))
+_BCAST_STATE_MAX_ROWS = 1_000_000
 
 
 #: edge-relation rows above which the BFS loops pay one extra shuffle to
@@ -3952,53 +3677,40 @@ _BCAST_STATE_MAX_ROWS = int(os.environ.get(
 #: (columnar decode per scan > the tiny local exchange it saves), while
 #: the exchange it avoids grows linearly with |E| — the same
 #: runtime-stats auto-dispatch pattern as SCC's closure/coloring 5M bound.
-_EDGE_CACHE_MIN_ROWS = int(os.environ.get(
-    "SPARK_GRAFT_BFS_EDGE_CACHE_MIN", str(50_000_000)))
+_EDGE_CACHE_MIN_ROWS = 50_000_000
 
 
-def _prep_edge_rel(edges: DataFrame, ckpts: "list | None" = None,
-                   dedup: bool = True) -> DataFrame:
+def _prep_edge_rel(edges: DataFrame, dedup: bool = True) -> DataFrame:
     """The loop-invariant edge relation for iterative BFS passes:
     ``(src, dst)``, self-loops dropped, optionally deduped, materialized
-    with ONE job (non-eager localCheckpoint whose first action is the
-    count that drives the size dispatch below).
+    with ONE job (non-eager checkpoint whose first action is the count
+    that drives the size dispatch below).
 
     Above ``_EDGE_CACHE_MIN_ROWS`` the relation is additionally
     repartitioned on ``src``, sorted and ``cache``\\ d so the per-level
     joins are exchange- and sort-free on the edge side (see the constant's
     rationale); the underlying checkpoint stays alive as the cache's
     recompute source (cache eviction re-reads the checkpoint blocks, never
-    the original input). Both live relations are appended to ``ckpts``
-    (when given) for the caller to free.
+    the original input). Both are owned by the caller's scope.
     """
     e = (edges.filter(F.col("src") != F.col("dst"))
          .select("src", "dst"))
     if dedup:
         e = e.distinct()
-    e = e.localCheckpoint(eager=False)
+    e = checkpoint(e, eager=False)
     n = e.count()
-    if ckpts is not None:
-        ckpts.append(e)
     if n >= _EDGE_CACHE_MIN_ROWS:
         spark = edges.sparkSession
         num_partitions = int(
             spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        e = (e.repartition(num_partitions, "src")
-             .sortWithinPartitions("src", "dst").cache())
-        # mark as OURS to free: _unpersist_checkpoint only ever issues a
-        # CacheManager-level unpersist on relations tagged this way, so a
-        # caller-cached relation with a canonically-equal plan can never
-        # be dropped by the loop cleanup (r15, ADVICE item)
-        e._graft_cached = True
+        e = cache(e.repartition(num_partitions, "src")
+                  .sortWithinPartitions("src", "dst"))
         e.count()
-        if ckpts is not None:
-            ckpts.append(e)
     return e
 
 
 def _pivot_sigma_bfs(e: DataFrame, pivots: DataFrame, max_iter: int,
-                     horizon: bool = False,
-                     ckpts: "list | None" = None):
+                     horizon: bool = False):
     """Forward σ-accumulating multi-source BFS from a pivot relation:
     per-level checkpointed slices of the k·|V|-bounded relation
     ``(s, id, sigma)`` with slice index = depth = d(s, id) and sigma =
@@ -4021,18 +3733,15 @@ def _pivot_sigma_bfs(e: DataFrame, pivots: DataFrame, max_iter: int,
     the remaining exchanges entirely. The anti-join's settled side is
     re-checkpointed every ``_SEEN_COLLAPSE_LEVELS`` levels so
     deep-diameter graphs pay linear, not quadratic, plan work. Every
-    live checkpoint is appended to ``ckpts`` (when given) for the
-    caller to free after materializing its result. ``horizon=True``
+    checkpoint is owned by the caller's scope. ``horizon=True``
     truncates at ``max_iter`` hops — bounded-horizon semantics (only
     paths of ≤ max_iter hops count) — otherwise an unsettled frontier
     raises.
     """
-    frontier = pivots.select(
+    frontier = checkpoint(pivots.select(
         F.col("id").alias("s"), "id",
-        F.lit(1).cast("long").alias("sigma")).localCheckpoint(eager=False)
+        F.lit(1).cast("long").alias("sigma")), eager=False)
     n = frontier.count()
-    if ckpts is not None:
-        ckpts.append(frontier)
     slices = [frontier]
     counts = [n]
     # the anti-join's settled side grows by one union branch per level;
@@ -4050,16 +3759,12 @@ def _pivot_sigma_bfs(e: DataFrame, pivots: DataFrame, max_iter: int,
             break
         fr = F.broadcast(frontier) if n <= _BCAST_STATE_MAX_ROWS else frontier
         sn = F.broadcast(seen) if seen_rows <= _BCAST_STATE_MAX_ROWS else seen
-        nxt = (
+        nxt = checkpoint(
             fr.join(ej, "id")
             .select("s", F.col("dst").alias("id"), "sigma")
             .join(sn, ["s", "id"], "left_anti")
-            .groupBy("s", "id").agg(F.sum("sigma").alias("sigma"))
-            .localCheckpoint(eager=False)
-        )
+            .groupBy("s", "id").agg(F.sum("sigma").alias("sigma")), eager=False)
         n = nxt.count()
-        if ckpts is not None:
-            ckpts.append(nxt)
         if n == 0:
             break
         slices.append(nxt)
@@ -4068,9 +3773,7 @@ def _pivot_sigma_bfs(e: DataFrame, pivots: DataFrame, max_iter: int,
         seen_rows += n
         since_collapse += 1
         if since_collapse >= _SEEN_COLLAPSE_LEVELS:
-            seen = seen.localCheckpoint(eager=True)
-            if ckpts is not None:
-                ckpts.append(seen)
+            seen = checkpoint(seen, eager=True)
             since_collapse = 0
         frontier = nxt
     else:
@@ -4083,8 +3786,7 @@ def _pivot_sigma_bfs(e: DataFrame, pivots: DataFrame, max_iter: int,
 
 
 def _brandes_backward(slices: list, counts: list, e: DataFrame,
-                      want_edges: bool,
-                      ckpts: "list | None" = None):
+                      want_edges: bool):
     """Brandes' level-synchronous backward accumulation over the pivot
     BFS slices ``slices[d](s, id, sigma)``: from the deepest layer
     upward, per level one edge join between adjacent depth slices and
@@ -4108,10 +3810,9 @@ def _brandes_backward(slices: list, counts: list, e: DataFrame,
     the SAME job that checkpoints the level's δ (non-eager checkpoint
     under an eager one) — one job per level instead of two. Per-level
     δ checkpoints stay live (both parts lists reference them through
-    lineage-truncated plans, so freeing early would lose data); they
-    are appended to ``ckpts`` (when given) for the caller to free
-    after materializing its result. ~diameter rounds; no driver-side
-    values at all.
+    lineage-truncated plans, so freeing early would lose data); the
+    caller's scope frees them once its result no longer reads them.
+    ~diameter rounds; no driver-side values at all.
     """
     maxd = len(slices) - 1
     node_parts: list = []
@@ -4140,9 +3841,7 @@ def _brandes_backward(slices: list, counts: list, e: DataFrame,
             # executing the 3-way join twice (the backward pass's
             # dominant work at scale). Non-eager: the δ checkpoint's
             # materializing job below computes it as a side effect.
-            terms = terms.localCheckpoint(eager=False)
-            if ckpts is not None:
-                ckpts.append(terms)
+            terms = checkpoint(terms, eager=False)
             edge_parts.append(
                 terms.groupBy(F.col("id").alias("src"), "dst")
                 .agg(F.sum("__term").alias("delta")))
@@ -4150,27 +3849,23 @@ def _brandes_backward(slices: list, counts: list, e: DataFrame,
             F.sum("__term").alias("delta"))
         if counts[d] <= _BCAST_STATE_MAX_ROWS:
             contrib = F.broadcast(contrib)
-        delta = (
+        delta = checkpoint(
             lvl.select("s", "id")
             .join(contrib, ["s", "id"], "left")
             .select("s", "id",
-                    F.coalesce("delta", F.lit(0.0)).alias("delta"))
-            .localCheckpoint(eager=True)
-        )
+                    F.coalesce("delta", F.lit(0.0)).alias("delta")), eager=True)
         delta_rows = counts[d]
-        if ckpts is not None:
-            ckpts.append(delta)
         if d > 0:  # depth 0 is the pivot itself (v = s: excluded)
             node_parts.append(delta)
     return node_parts, edge_parts
 
 
+@scoped
 def betweenness_sampled(edges: DataFrame, n_pivots: int = 16,
                         seed: int = 0, max_iter: int = 100,
                         scale: bool = True,
                         pivots: DataFrame | None = None,
-                        horizon: bool = False,
-                        _ckpts: "list | None" = None) -> DataFrame:
+                        horizon: bool = False) -> DataFrame:
     """k-pivot sampled Brandes betweenness (Brandes & Pich 2007,
     "Centrality Estimation in Large Networks"): the production estimator
     for graphs where the all-pairs σ closure behind
@@ -4204,68 +3899,24 @@ def betweenness_sampled(edges: DataFrame, n_pivots: int = 16,
     so scores stay the restricted sum; pivot ids not in the graph are
     ignored. ``horizon=True`` truncates the BFS at ``max_iter`` hops
     instead of erroring (bounded-horizon betweenness). ``scale=False``
-    returns the raw ``Σ_{s∈S} δ_s(v)``. ``_ckpts`` (internal) collects
-    every live checkpoint for eager callers to free. Returns ``(id,
+    returns the raw ``Σ_{s∈S} δ_s(v)``. Returns ``(id,
     betweenness DOUBLE)`` for nodes with positive score. Float by
     necessity, so the estimator is unit-tested against a replica; the
     restricted-sum route carries a driver hash gate on the chain
     fixture where σ=1 makes it integer-exact (`graph_similarity` op
     `betws`).
     """
-    spark = edges.sparkSession
-    # self-contained mode: with no caller-managed checkpoint list, collect
-    # the BFS state locally and free it after materializing the result —
-    # otherwise at exactly the scale where _prep_edge_rel caches (≥50M
-    # edge rows) the cache would pin executor storage for the rest of the
-    # session (r15, ADVICE item)
-    own = _ckpts is None
-    ck: list = [] if own else _ckpts
-
-    def _done(out: DataFrame) -> DataFrame:
-        if own:
-            out = out.localCheckpoint(eager=True)
-            for df in ck:
-                _unpersist_checkpoint(df)
-        return out
-
-    e = _prep_edge_rel(edges, ckpts=ck)
-    nodes = _endpoints(e).distinct()
-    n = nodes.count()
-    if n == 0:
-        return _done(local_df(spark, [], "id BIGINT, betweenness DOUBLE"))
-    if pivots is not None:
-        pick = (pivots.select("id").distinct().join(nodes, "id")
-                .localCheckpoint(eager=False))
-    else:
-        if n_pivots <= 0:
-            raise ValueError("n_pivots must be positive")
-        pick = nodes.orderBy(
-            F.md5(F.concat_ws("|", F.lit(f"piv{seed}"),
-                              F.col("id").cast("string"))).asc(),
-            F.col("id").asc()).limit(int(n_pivots)) \
-            .localCheckpoint(eager=False)
-    ck.append(pick)
-    k = pick.count()
-    if k == 0:
-        return _done(local_df(spark, [], "id BIGINT, betweenness DOUBLE"))
-    slices, counts = _pivot_sigma_bfs(e, pick, max_iter, horizon=horizon,
-                                      ckpts=ck)
-    node_parts, _ = _brandes_backward(slices, counts, e, want_edges=False,
-                                      ckpts=ck)
-    if not node_parts:
-        return _done(local_df(spark, [], "id BIGINT, betweenness DOUBLE"))
-    factor = float(n) / k if scale else 1.0
-    return _done(union_all(node_parts, by_name=True).groupBy("id")
-                 .agg((F.sum("delta") * F.lit(factor)).alias("betweenness"))
-                 .filter(F.col("betweenness") > 0))
+    return checkpoint(_sampled_betweenness(
+        edges, n_pivots, seed, max_iter, scale, pivots, horizon,
+        want_edges=False), eager=True)
 
 
+@scoped
 def edge_betweenness_sampled(edges: DataFrame, n_pivots: int = 16,
                              seed: int = 0, max_iter: int = 100,
                              scale: bool = True,
                              pivots: DataFrame | None = None,
-                             horizon: bool = False,
-                             _ckpts: "list | None" = None) -> DataFrame:
+                             horizon: bool = False) -> DataFrame:
     """k-pivot sampled EDGE betweenness — Brandes & Pich 2007 pivot
     sampling applied to Brandes 2008's edge-betweenness accumulation:
     ``êb(u→v) = (n/k) · Σ_{s∈S} δ_s(u,v)`` with the per-edge dependency
@@ -4295,57 +3946,55 @@ def edge_betweenness_sampled(edges: DataFrame, n_pivots: int = 16,
     Pivot choice, determinism, float policy: exactly
     :func:`betweenness_sampled` (seeded-md5 top-k, no RNG in
     operators; float by necessity → unit-tested, not hash-gated).
-    ``_ckpts`` (internal) collects every live checkpoint for callers
-    that consume the result eagerly and want to free the BFS state —
-    :func:`girvan_newman_split` uses it per removal round. Returns
+    Returns
     ``(src, dst, betweenness DOUBLE)`` for edges with positive score.
     """
+    return checkpoint(_sampled_betweenness(
+        edges, n_pivots, seed, max_iter, scale, pivots, horizon,
+        want_edges=True), eager=True)
+
+
+def _sampled_betweenness(edges: DataFrame, n_pivots: int, seed: int,
+                         max_iter: int, scale: bool,
+                         pivots: DataFrame | None, horizon: bool,
+                         want_edges: bool) -> DataFrame:
+    """The shared body of :func:`betweenness_sampled` (node scores) and
+    :func:`edge_betweenness_sampled` (``want_edges``: edge scores). The
+    result is lazy over the BFS and backward-pass checkpoints, which the
+    caller's scope owns."""
     spark = edges.sparkSession
-    empty = "src BIGINT, dst BIGINT, betweenness DOUBLE"
-    # self-contained mode when no caller-managed list is given — same
-    # rationale as betweenness_sampled (free the ≥50M-row edge cache)
-    own = _ckpts is None
-    ck: list = [] if own else _ckpts
-
-    def _done(out: DataFrame) -> DataFrame:
-        if own:
-            out = out.localCheckpoint(eager=True)
-            for df in ck:
-                _unpersist_checkpoint(df)
-        return out
-
-    e = _prep_edge_rel(edges, ckpts=ck)
+    key = ["src", "dst"] if want_edges else ["id"]
+    schema = ", ".join(f"{c} BIGINT" for c in key) + ", betweenness DOUBLE"
+    e = _prep_edge_rel(edges)
     nodes = _endpoints(e).distinct()
     n = nodes.count()
     if n == 0:
-        return _done(local_df(spark, [], empty))
+        return local_df(spark, [], schema)
     if pivots is not None:
-        pick = (pivots.select("id").distinct().join(nodes, "id")
-                .localCheckpoint(eager=False))
+        pick = checkpoint(pivots.select("id").distinct().join(nodes, "id"))
     else:
         if n_pivots <= 0:
             raise ValueError("n_pivots must be positive")
-        pick = nodes.orderBy(
+        pick = checkpoint(nodes.orderBy(
             F.md5(F.concat_ws("|", F.lit(f"piv{seed}"),
                               F.col("id").cast("string"))).asc(),
-            F.col("id").asc()).limit(int(n_pivots)) \
-            .localCheckpoint(eager=False)
-    ck.append(pick)
+            F.col("id").asc()).limit(int(n_pivots)))
     k = pick.count()
     if k == 0:
-        return _done(local_df(spark, [], empty))
-    slices, counts = _pivot_sigma_bfs(e, pick, max_iter, horizon=horizon,
-                                      ckpts=ck)
-    _, edge_parts = _brandes_backward(slices, counts, e, want_edges=True,
-                                      ckpts=ck)
-    if not edge_parts:
-        return _done(local_df(spark, [], empty))
+        return local_df(spark, [], schema)
+    slices, counts = _pivot_sigma_bfs(e, pick, max_iter, horizon=horizon)
+    node_parts, edge_parts = _brandes_backward(slices, counts, e,
+                                               want_edges=want_edges)
+    parts = edge_parts if want_edges else node_parts
+    if not parts:
+        return local_df(spark, [], schema)
     factor = float(n) / k if scale else 1.0
-    return _done(union_all(edge_parts, by_name=True).groupBy("src", "dst")
-                 .agg((F.sum("delta") * F.lit(factor)).alias("betweenness"))
-                 .filter(F.col("betweenness") > 0))
+    return (union_all(parts, by_name=True).groupBy(*key)
+            .agg((F.sum("delta") * F.lit(factor)).alias("betweenness"))
+            .filter(F.col("betweenness") > 0))
 
 
+@scoped
 def hyperball_registers(edges: DataFrame, rounds: int = 3, p: int = 4,
                         nodes: DataFrame | None = None,
                         with_rounds: bool = False) -> DataFrame:
@@ -4382,13 +4031,13 @@ def hyperball_registers(edges: DataFrame, rounds: int = 3, p: int = 4,
     """
     from judy_graph_db_spark.operators.sketch import _HLL_W, _h60
 
-    e = edges.select("src", "dst").localCheckpoint(eager=True)
+    e = checkpoint(edges.select("src", "dst"), eager=True)
     if nodes is None:
         nodes = _endpoints(e).distinct()
     else:
         nodes = nodes.select("id").distinct()
     h = _h60(F.col("id"), "hll")
-    regs = nodes.select(
+    regs = checkpoint(nodes.select(
         "id",
         (h % (1 << p)).alias("bucket"),
         F.when(F.shiftright(h, p) % (1 << _HLL_W) == 0,
@@ -4396,7 +4045,7 @@ def hyperball_registers(edges: DataFrame, rounds: int = 3, p: int = 4,
         .otherwise(F.lit(_HLL_W + 1)
                    - F.length(F.bin(F.shiftright(h, p) % (1 << _HLL_W))))
         .alias("max_rho"),
-    ).localCheckpoint(eager=True)
+    ), eager=True)
     snapshots = [regs]
     for _ in range(rounds):
         contrib = (
@@ -4404,20 +4053,16 @@ def hyperball_registers(edges: DataFrame, rounds: int = 3, p: int = 4,
                                "max_rho"), "dst")
             .select(F.col("src").alias("id"), "bucket", "max_rho")
         )
-        nxt = (
+        nxt = checkpoint(
             union_all([regs, contrib], by_name=True)
             .groupBy("id", "bucket")
-            .agg(F.max("max_rho").alias("max_rho"))
-            .localCheckpoint(eager=True)
-        )
+            .agg(F.max("max_rho").alias("max_rho")), eager=True)
         snapshots.append(nxt)
         regs = nxt
     if with_rounds:
         return union_all([snap.select(F.lit(r).cast("long").alias("round"),
                                       "id", "bucket", "max_rho")
                           for r, snap in enumerate(snapshots)], by_name=True)
-    for snap in snapshots[:-1]:
-        _unpersist_checkpoint(snap)
     return regs
 
 
@@ -4469,6 +4114,7 @@ def effective_diameter(nf: dict, alpha: float = 0.9) -> float:
     return float(max(nf))
 
 
+@scoped
 def directed_triangle_census(edges: DataFrame) -> DataFrame:
     """Directed triangle census: motif-instance counts of the two directed
     triangle classes (Milo et al. 2002 network motifs; Wasserman & Faust's
@@ -4492,15 +4138,13 @@ def directed_triangle_census(edges: DataFrame) -> DataFrame:
     """
     e = edges.select("src", "dst").filter(F.col("src") != F.col("dst")) \
         .distinct()
-    und = (
+    und = checkpoint(
         e.groupBy(
             F.least("src", "dst").alias("a"),
             F.greatest("src", "dst").alias("b"))
         .agg(
             F.max((F.col("src") < F.col("dst")).cast("long")).alias("fwd"),
-            F.max((F.col("src") > F.col("dst")).cast("long")).alias("bwd"))
-        .localCheckpoint(eager=True)
-    )
+            F.max((F.col("src") > F.col("dst")).cast("long")).alias("bwd")), eager=True)
     deg = (
         _endpoints(und, "a", "b")
         .groupBy("id").agg(F.count(F.lit(1)).alias("d"))
@@ -4516,15 +4160,13 @@ def directed_triangle_census(edges: DataFrame) -> DataFrame:
     lower_first = ka < kb
     # u→v in (degree, id) order; fwd/bwd stay keyed to the (min-id → max-id)
     # direction so classification below is orientation-independent
-    oriented = (
+    oriented = checkpoint(
         withd.select(
             F.when(lower_first, F.col("a")).otherwise(F.col("b")).alias("u"),
             F.when(lower_first, F.col("b")).otherwise(F.col("a")).alias("v"),
             F.when(lower_first, kb).otherwise(ka).alias("kv"),
-            "fwd", "bwd")
-        .localCheckpoint(eager=True)
-    )
-    _unpersist_checkpoint(und)
+            "fwd", "bwd"), eager=True)
+    free(und)
     o1 = oriented.select(F.col("u").alias("s"), F.col("v").alias("x"),
                          F.col("kv").alias("kx"),
                          F.col("fwd").alias("f1"), F.col("bwd").alias("b1"))
@@ -4592,7 +4234,7 @@ def _path_end_distances(psym: DataFrame, max_rounds: int = 64,
         F.count(F.lit(1)).alias("d"))
     # init: one step along each directed edge; direction u's continuation
     # is u's other neighbor (interior nodes have exactly two)
-    st = (
+    st = checkpoint(
         psym.join(nbr.withColumnRenamed("src", "dst"), "dst")
         .select(
             F.col("src").alias("v"), F.col("dst").alias("u"),
@@ -4601,9 +4243,7 @@ def _path_end_distances(psym: DataFrame, max_rounds: int = 64,
             F.col("dst").alias("at"),
             F.when(F.col("n1") == F.col("src"), F.col("n2"))
             .otherwise(F.col("n1")).alias("nxt"),
-        )
-        .localCheckpoint(eager=True)
-    )
+        ), eager=True)
     prev_nonterm = -1
     for _ in range(max_rounds):
         nonterm = st.filter(~F.col("term")).count()
@@ -4617,7 +4257,7 @@ def _path_end_distances(psym: DataFrame, max_rounds: int = 64,
                         F.col("dist").alias("d2"),
                         F.col("at").alias("at2"), F.col("nxt").alias("n2x"))
         prev = st
-        st = (
+        st = checkpoint(
             st.join(hop, ["at", "nxt"], "left")
             .select(
                 "v", "u",
@@ -4629,10 +4269,8 @@ def _path_end_distances(psym: DataFrame, max_rounds: int = 64,
                 .otherwise(F.col("at2")).alias("at"),
                 F.when(F.col("term"), F.col("nxt"))
                 .otherwise(F.col("n2x")).alias("nxt"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        _unpersist_checkpoint(prev)
+            ), eager=True)
+        free(prev)
     else:
         raise RuntimeError("_path_end_distances: walk did not terminate — "
                            "input is not a disjoint union of simple paths")
@@ -4643,6 +4281,7 @@ def _path_end_distances(psym: DataFrame, max_rounds: int = 64,
     return union_all([inner.join(ends.select("id"), "id", "left_anti"), ends], by_name=True)
 
 
+@scoped
 def onion_layers(edges: DataFrame, max_iter: int = 10000) -> DataFrame:
     """Onion decomposition (Hébert-Dufresne, Grochow & Allard 2016):
     refines coreness with the PEELING WAVE each node leaves in — layer 1
@@ -4676,7 +4315,7 @@ def onion_layers(edges: DataFrame, max_iter: int = 10000) -> DataFrame:
     zero-degree nodes of the input edge relation are absent only if they
     appear in no edge at all.
     """
-    sym_all = _symmetric(edges).localCheckpoint(eager=True)
+    sym_all = checkpoint(_symmetric(edges), eager=True)
     deg0 = sym_all.groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).alias("d"))
     # cheap pre-check: one global degree aggregate decides whether the
@@ -4693,10 +4332,10 @@ def onion_layers(edges: DataFrame, max_iter: int = 10000) -> DataFrame:
         # EVERY component is a path or a cycle — closed form only, no
         # CC pass and no wave loop. Cycle nodes are the walks that never
         # reach an endpoint (absent from _path_end_distances' result).
-        pl = _path_end_distances(sym_all, allow_cycles=True).select(
+        pl = checkpoint(_path_end_distances(sym_all, allow_cycles=True).select(
             "id", F.lit(1).cast("long").alias("coreness"),
             (F.col("end_dist") + 1).cast("long").alias("layer")
-        ).localCheckpoint(eager=True)
+        ), eager=True)
         w_p = int(pl.agg(F.max("layer")).collect()[0][0] or 0)
         if w_p:
             out_parts.append(pl)
@@ -4717,31 +4356,30 @@ def onion_layers(edges: DataFrame, max_iter: int = 10000) -> DataFrame:
         comp = connected_components(sym_all)
         cstat = (comp.join(deg0, "id").groupBy("component")
                  .agg(F.max("d").alias("dmax"), F.min("d").alias("dmin")))
-        d2n = (comp.join(cstat.filter(F.col("dmax") <= 2), "component")
-               .select("id", "dmin").localCheckpoint(eager=True))
+        d2n = (checkpoint(comp.join(cstat.filter(F.col("dmax") <= 2), "component")
+               .select("id", "dmin"), eager=True))
 
         # paths: layer = 1 + distance to nearest endpoint, coreness 1
         pn = d2n.filter(F.col("dmin") == 1).select("id")
         if pn.limit(1).count():
-            psym = sym_all.join(pn.withColumnRenamed("id", "src"),
-                                "src", "left_semi").localCheckpoint(eager=True)
-            pl = _path_end_distances(psym).select(
+            psym = checkpoint(sym_all.join(pn.withColumnRenamed("id", "src"),
+                                "src", "left_semi"), eager=True)
+            pl = checkpoint(_path_end_distances(psym).select(
                 "id", F.lit(1).cast("long").alias("coreness"),
                 (F.col("end_dist") + 1).cast("long").alias("layer")
-            ).localCheckpoint(eager=True)
+            ), eager=True)
             w_p = int(pl.agg(F.max("layer")).collect()[0][0] or 0)
             out_parts.append(pl)
-            _unpersist_checkpoint(psym)
+            free(psym)
 
         has_cycles = bool(d2n.filter(F.col("dmin") == 2).limit(1).count())
 
         # residual: components with a degree-≥3 node run the wave loop
         rn = (comp.join(cstat.filter(F.col("dmax") >= 3), "component")
               .select("id"))
-        sym = sym_all.join(rn.withColumnRenamed("id", "src"),
-                           "src", "left_semi").localCheckpoint(eager=True)
-    nodes = sym.select(F.col("src").alias("id")).distinct() \
-        .localCheckpoint(eager=True)
+        sym = checkpoint(sym_all.join(rn.withColumnRenamed("id", "src"),
+                           "src", "left_semi"), eager=True)
+    nodes = checkpoint(sym.select(F.col("src").alias("id")).distinct(), eager=True)
     r_parts = []  # (peel_df, k, local_wave)
     k = 0
     wave = 0
@@ -4757,22 +4395,18 @@ def onion_layers(edges: DataFrame, max_iter: int = 10000) -> DataFrame:
                 break
             k = max(k, int(row["m"]))
             wave += 1
-            peel = degall.filter(F.col("d") <= k).select("id") \
-                .localCheckpoint(eager=True)
+            peel = checkpoint(degall.filter(F.col("d") <= k).select("id"), eager=True)
             r_parts.append((peel, k, wave))
             prev_n, prev_s = nodes, sym
-            nodes = nodes.join(peel, "id", "left_anti") \
-                .localCheckpoint(eager=True)
-            sym = (
+            nodes = checkpoint(nodes.join(peel, "id", "left_anti"), eager=True)
+            sym = checkpoint(
                 sym.join(peel.withColumnRenamed("id", "src"),
                          "src", "left_anti")
                 .join(peel.withColumnRenamed("id", "dst"),
                       "dst", "left_anti")
-                .select("src", "dst")
-                .localCheckpoint(eager=True)
-            )
-            _unpersist_checkpoint(prev_n)
-            _unpersist_checkpoint(prev_s)
+                .select("src", "dst"), eager=True)
+            free(prev_n)
+            free(prev_s)
         else:
             raise RuntimeError(
                 f"onion_layers: no fixpoint in {max_iter} waves")
@@ -4803,6 +4437,7 @@ def onion_layers(edges: DataFrame, max_iter: int = 10000) -> DataFrame:
     return union_all(out_parts, by_name=True)
 
 
+@scoped
 def trussness(edges: DataFrame, k_max: int = 8,
               max_iter: int = 50) -> DataFrame:
     """Full truss decomposition (Cohen 2008): every canonical edge's truss
@@ -4822,37 +4457,28 @@ def trussness(edges: DataFrame, k_max: int = 8,
     would mislabel the densest community cores); the guard too peels
     only the last level's output.
     """
-    und = (
+    und = checkpoint(
         edges.select(F.least("src", "dst").alias("a"),
                      F.greatest("src", "dst").alias("b"))
         .filter(F.col("a") < F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+        .distinct(), eager=True)
     out = und.withColumn("trussness", F.lit(2).cast("long"))
-    cur, cur_ckpt = und, und  # previous level's surviving edge set
+    tk = und  # previous level's surviving edge set
     for k in range(3, k_max + 2):
-        tk = _k_truss_peel(cur, k, max_iter)
+        prev, tk = tk, _k_truss_peel(tk.select("a", "b"), k, max_iter)
         if k == k_max + 1:
-            overflow = bool(tk.limit(1).count())
-            _unpersist_checkpoint(tk)
-            if cur_ckpt is not und:
-                _unpersist_checkpoint(cur_ckpt)
-            _unpersist_checkpoint(und)
-            if overflow:
+            if tk.limit(1).count():
                 raise ValueError(
                     f"trussness: the {k_max + 1}-truss is non-empty — "
                     "raise k_max to at least the graph's maximum "
                     "trussness")
             break
-        out = out.join(tk.select("a", "b", F.lit(1).alias("__in")),
+        out = checkpoint(out.join(tk.select("a", "b", F.lit(1).alias("__in")),
                        ["a", "b"], "left").select(
             "a", "b",
             (F.col("trussness") + F.coalesce("__in", F.lit(0)))
-            .cast("long").alias("trussness")).localCheckpoint(eager=True)
-        if cur_ckpt is not und:
-            _unpersist_checkpoint(cur_ckpt)
-        cur, cur_ckpt = tk.select("a", "b"), tk
+            .cast("long").alias("trussness")), eager=True)
+        free(prev)
     return out
 
 

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from judy_graph_db_spark.functions.text import WORD_TOKEN_RE
+from judy_graph_db_spark.loopstate import checkpoint, scoped
 from judy_graph_db_spark.schema import local_df
 
 __all__ = ["bpe_train", "bpe_train_oracle_sql", "bpe_encode",
@@ -242,6 +243,7 @@ def _select_disjoint_merges(rows, max_batch: int, window_full: bool):
     return out
 
 
+@scoped
 def bpe_train(docs: DataFrame, n_merges: int, text_col: str = "text",
               end_of_word: str = "</w>",
               strategy: str = "auto", min_word_freq: int = 1,
@@ -325,7 +327,7 @@ def bpe_train(docs: DataFrame, n_merges: int, text_col: str = "text",
     if strategy == "auto":
         strategy = "local" if n_merges > 32 else "relational"
     spark = docs.sparkSession
-    words = (
+    words = checkpoint(
         docs.select(
             F.explode(
                 F.regexp_extract_all(
@@ -341,9 +343,7 @@ def bpe_train(docs: DataFrame, n_merges: int, text_col: str = "text",
                 F.expr("regexp_extract_all(word, '.', 0)"),
                 F.array(F.lit(end_of_word)),
             ),
-        )
-        .localCheckpoint(eager=True)
-    )
+        ), eager=True)
     if strategy == "local":
         n_words = words.count()
         if n_words > max_collect_rows:
@@ -429,8 +429,7 @@ def bpe_train(docs: DataFrame, n_merges: int, text_col: str = "text",
             # disjoint symbols ⇒ the chained folds commute and equal
             # sequential application; one projection, one job per round
             folded = _merge_fold(folded, a, b)
-        words = words.withColumn("syms", folded) \
-                     .localCheckpoint(eager=True)
+        words = checkpoint(words.withColumn("syms", folded), eager=True)
     merges_df = local_df(
         spark, merges or [], "rank long, a string, b string, count long"
     )

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from judy_graph_db_spark.operators.similarity import norm
+from judy_graph_db_spark.loopstate import checkpoint
 from judy_graph_db_spark.schema import union_all
 
 #: broadcast the materialized (id, cluster) assignment into the
@@ -44,13 +45,10 @@ _BCAST_CLUSTERS_MAX_ROWS = 10_000_000
 
 #: corpus rows above which semantic_dedup materializes its k-means
 #: assignment once instead of letting the plan's three references
-#: recompute it (env-tunable; see the dispatch comment in
-#: :func:`semantic_dedup` — at sf0.1 the checkpoint measured 0.71-0.76×,
-#: at corpus scale the recompute is three full k-means passes)
-import os as _os
-
-_SEMDEDUP_CKPT_MIN_ROWS = int(_os.environ.get(
-    "SPARK_GRAFT_SEMDEDUP_CKPT_MIN", str(5_000_000)))
+#: recompute it (see the dispatch comment in :func:`semantic_dedup` —
+#: at sf0.1 the checkpoint measured 0.71-0.76×, at corpus scale the
+#: recompute is three full k-means passes)
+_SEMDEDUP_CKPT_MIN_ROWS = 5_000_000
 
 
 def _sqdist(vec_col: str, cent_col: str, dim: int):
@@ -189,7 +187,7 @@ def semantic_dedup(embeddings: DataFrame, clusters: DataFrame | None = None,
         clusters = kmeans_assign(embeddings, k, iters, dim, id_col, vec_col,
                                  target_cluster_size=target_cluster_size)
         if embeddings.count() >= _SEMDEDUP_CKPT_MIN_ROWS:
-            clusters = clusters.localCheckpoint(eager=False)
+            clusters = checkpoint(clusters, eager=False)
             # a checkpoint scan carries no size statistics — the measured
             # count restores the broadcast strategy when it fits
             if clusters.count() <= _BCAST_CLUSTERS_MAX_ROWS:

@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from judy_graph_db_spark.functions.text import token_count
+from judy_graph_db_spark.loopstate import checkpoint
 from judy_graph_db_spark.schema import union_all
 
 
@@ -171,7 +172,7 @@ def _token_prefix(df: DataFrame, id_col: str, text_col: str,
     )
     # Pin the partitioning so the subtotal branch and the join-back branch
     # observe identical __pid assignments (one materialization, two readers).
-    parted = parted.localCheckpoint(eager=True)
+    parted = checkpoint(parted, eager=True)
     # Offsets, relationally: the exclusive prefix sum of the per-partition
     # subtotals. The window runs over ≤ num_partitions rows — trivially
     # single-task safe — and the result is broadcast back.
@@ -624,15 +625,13 @@ def dsir_weights(docs: DataFrame, target: DataFrame,
             F.expr("transform(slice(__toks, 1, greatest(size(__toks) - 1,"
                    " 0)), (x, i) -> concat(x, ' ', __toks[i + 1]))"),
         )).alias("term"))
-    feats = (
+    feats = checkpoint(  # feeds the LMs AND the doc scores
         grams.select(
             id_col,
             (_h60(F.col("term"), f"dsir{seed}") % int(n_features))
             .alias("bucket"))
         .groupBy(id_col, "bucket")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=True)  # feeds the LMs AND the doc scores
-    )
+        .agg(F.count(F.lit(1)).alias("tf")), eager=True)
     raw_c = feats.groupBy("bucket").agg((F.sum("tf") + 1).alias("c_r"))
     tgt_c = (
         feats.join(target.select(F.col(id_col)).distinct(), id_col,
@@ -1667,7 +1666,7 @@ def web_corpus_funnel(docs: DataFrame, blocked_domains=(),
     # non-eager: the first consumer's action (winners aggregation / the
     # near-dup branch / the caller's own action) materializes it — one
     # corpus pass, no separate checkpoint job (r14)
-    flags = out.drop(text_col).localCheckpoint(eager=False)
+    flags = checkpoint(out.drop(text_col), eager=False)
     winners = (flags.filter(surv).groupBy("__h")
                .agg(F.min(id_col).alias("__win")))
     flags = flags.join(winners, "__h", "left").withColumn(
@@ -1808,10 +1807,10 @@ def emit_training_sequences(pieces: DataFrame, vocab: DataFrame,
     # don't recompute; the encode is the pipeline's dominant cost at
     # scale). Non-eager: the prefix sum's internal materialization job
     # computes it as a side effect.
-    local = ids.select(
+    local = checkpoint(ids.select(
         F.col(id_col), F.col("token_id"),
         (F.row_number().over(wdoc) - 1).alias("__li")
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     counts = local.groupBy(id_col).agg(
         (F.count(F.lit(1)) + 1).alias("__n"))  # +1 for the EOD token
     pre = _token_prefix(counts, id_col, id_col, None,

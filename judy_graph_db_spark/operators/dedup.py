@@ -18,19 +18,17 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from judy_graph_db_spark.loopstate import checkpoint, scoped
 from judy_graph_db_spark.schema import local_df, union_all
 
 SHINGLE_LEN = 8
 SHINGLE_STRIDE = 4
 
-import os as _os  # noqa: E402
-
 #: corpus rows above which simhash_neardup_pairs materializes the
 #: signature relation once instead of letting the band self-join's two
 #: sides recompute the corpus-wide signature pass (see the dispatch
 #: comment there; the unconditional checkpoint measured 0.87× at sf0.1)
-_SIMHASH_CKPT_MIN_ROWS = int(_os.environ.get(
-    "SPARK_GRAFT_SIMHASH_CKPT_MIN", str(5_000_000)))
+_SIMHASH_CKPT_MIN_ROWS = 5_000_000
 NUM_HASHES = 8
 BAND_ROWS = 4  # 8 hashes / 4 rows = 2 bands
 
@@ -177,6 +175,7 @@ def minhash_lsh_candidates(docs: DataFrame, text_col: str = "text",
     )
 
 
+@scoped
 def dedup_clusters(docs: DataFrame, text_col: str = "text",
                    id_col: str = "doc_id",
                    num_hashes: int = NUM_HASHES, band_rows: int = BAND_ROWS,
@@ -210,9 +209,8 @@ def dedup_clusters(docs: DataFrame, text_col: str = "text",
     pairs = candidates if candidates is not None else minhash_lsh_candidates(
         docs, text_col, id_col, num_hashes, band_rows, max_bucket_size
     )
-    edges = pairs.select(F.col("doc_a").alias("src"),
-                         F.col("doc_b").alias("dst")) \
-        .localCheckpoint(eager=True)
+    edges = checkpoint(pairs.select(F.col("doc_a").alias("src"),
+                                    F.col("doc_b").alias("dst")), eager=True)
     # Runtime-stats dispatch (the analytics MSF pattern): near-dup pair
     # graphs are SPARSE — a healthy corpus yields far fewer pairs than
     # docs — so when the pair set fits comfortably on the driver a local
@@ -341,11 +339,11 @@ def simhash_neardup_pairs(docs: DataFrame, text_col: str = "text",
     # BOTH self-join sides. At sf0.1 an unconditional eager checkpoint
     # A/B'd 0.87× — the pass is cheap there and the checkpoint round-trip
     # dominates — so the materialization only happens above a corpus-size
-    # bound (env-tunable), where the duplicated pass is two full corpus
+    # bound, where the duplicated pass is two full corpus
     # scans. One count job on the (typically cached) input decides.
     sigs = simhash_signatures(docs, text_col, id_col, bits)
     if docs.count() >= _SIMHASH_CKPT_MIN_ROWS:
-        sigs = sigs.localCheckpoint(eager=True)
+        sigs = checkpoint(sigs, eager=True)
     band_arr = F.array(
         *[F.substring("sig", b * band_bits + 1, band_bits) for b in range(n_bands)]
     )
@@ -923,26 +921,24 @@ def jaccard_similarity_join(docs: DataFrame, threshold_permille: int = 500,
     t = int(threshold_permille)
     if not 0 < t <= 1000:
         raise ValueError("threshold_permille must be in 1..1000")
-    toks = (
+    toks = checkpoint(
         with_shingles(docs.select(id_col, text_col), text_col)
         .select(F.col(id_col).alias("id"),
                 F.explode("shingles").alias("tok"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+        .distinct(), eager=True)
     wdf = Window.partitionBy("tok")
     wdoc = Window.partitionBy("id").orderBy("df", "tok")
     wsz = Window.partitionBy("id")
     # checkpointed: the prefix filter AND the size relation both read it —
     # without the pin the df/rank windows run once per reader
-    ranked = toks.select(
+    ranked = checkpoint(toks.select(
         "id", "tok",
         F.count(F.lit(1)).over(wdf).alias("df"),
     ).select(
         "id", "tok",
         F.row_number().over(wdoc).alias("pos"),
         F.count(F.lit(1)).over(wsz).alias("sz"),
-    ).localCheckpoint(eager=True)
+    ), eager=True)
     cand = _ppjoin_candidates(ranked, t)
     sizes = ranked.groupBy("id").agg(F.max("sz").alias("sz"))
     ta = toks.select(F.col("id").alias("doc_a"), "tok")

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from judy_graph_db_spark.operators.analytics import _unpersist_checkpoint
+from judy_graph_db_spark.loopstate import cache, checkpoint, scoped
 from judy_graph_db_spark.schema import union_all
 
 
@@ -49,6 +49,7 @@ def sample_neighbors(edges: DataFrame, k: int, seed: int = 0) -> DataFrame:
     )
 
 
+@scoped
 def random_walks(edges: DataFrame, length: int = 3, seed: int = 0,
                  starts: DataFrame | None = None,
                  num_partitions: int | None = None) -> DataFrame:
@@ -65,11 +66,9 @@ def random_walks(edges: DataFrame, length: int = 3, seed: int = 0,
     spark = edges.sparkSession
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    adj = (
+    adj = cache(
         edges.select("src", "dst").distinct()
-        .repartition(num_partitions, "src")
-        .cache()
-    )
+        .repartition(num_partitions, "src"))
     adj.count()  # materialize so the per-step joins see the partitioning
     if starts is None:
         starts = adj.select(F.col("src").alias("id")).distinct()
@@ -80,7 +79,6 @@ def random_walks(edges: DataFrame, length: int = 3, seed: int = 0,
         "walk_id", F.lit(0).cast("long").alias("step"),
         F.col("cur").alias("node"),
     )]
-    hops: list = []
     for s in range(1, length + 1):
         h = _edge_hash(
             seed, F.col("walk_id"), F.lit(s), F.col("src"), F.col("dst")
@@ -100,19 +98,15 @@ def random_walks(edges: DataFrame, length: int = 3, seed: int = 0,
         # checkpoint instead of paying an eager job per hop (r15; the
         # shortest_path_counts idiom). Each hop's checkpoint is read
         # twice (next hop's join + the output union) without recompute.
-        frontier = step.localCheckpoint(eager=False)
-        hops.append(frontier)
+        frontier = checkpoint(step, eager=False)
         steps.append(
             frontier.select(
                 "walk_id", F.lit(s).cast("long").alias("step"),
                 F.col("cur").alias("node"),
             )
         )
-    result = union_all(steps, by_name=True).localCheckpoint(eager=True)
-    adj.unpersist()
-    for h_df in hops:
-        _unpersist_checkpoint(h_df)
-    return result
+    # the scope frees adj and the hop checkpoints
+    return checkpoint(union_all(steps, by_name=True), eager=True)
 
 
 def random_walks_oracle_sql(edges_sql: str, length: int = 3, seed: int = 0,
@@ -223,6 +217,7 @@ FROM sg_sh s JOIN sg_w c ON s.walk_id = c.walk_id AND s.step = c.step
 GROUP BY s.center, c.node"""
 
 
+@scoped
 def sampled_negatives(pairs: DataFrame, freqs: DataFrame, k: int = 3,
                       seed: int = 0, n_bins: int = 1 << 12,
                       num_partitions: int | None = None) -> DataFrame:
@@ -263,11 +258,9 @@ def sampled_negatives(pairs: DataFrame, freqs: DataFrame, k: int = 3,
     if bad:
         raise ValueError("sampled_negatives: freqs must be positive "
                          "and non-null")
-    parted = (
+    parted = checkpoint(  # pin __pid for both readers
         base.repartitionByRange(num_partitions, F.col("node"))
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)  # pin __pid for both readers
-    )
+        .withColumn("__pid", F.spark_partition_id()), eager=True)
     totals = parted.groupBy("__pid").agg(F.sum("freq").alias("__pt"))
     w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
     offsets = totals.select(
@@ -422,6 +415,7 @@ FROM nfa_fr fr JOIN ({feats_sql}) ft ON fr.node = ft.{id_col}
 GROUP BY fr.id"""
 
 
+@scoped
 def metapath_walks(edges: DataFrame, metapath: "list[str]",
                    length: int | None = None, seed: int = 0,
                    starts: DataFrame | None = None,
@@ -449,12 +443,10 @@ def metapath_walks(edges: DataFrame, metapath: "list[str]",
     if num_partitions is None:
         num_partitions = int(
             spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    adj = (
+    adj = cache(
         edges.select("src", "dst", F.col(label_col).alias("__lbl"))
         .distinct()
-        .repartition(num_partitions, "src")
-        .cache()
-    )
+        .repartition(num_partitions, "src"))
     adj.count()
     if starts is None:
         starts = (adj.filter(F.col("__lbl") == metapath[0])
@@ -478,13 +470,11 @@ def metapath_walks(edges: DataFrame, metapath: "list[str]",
             .agg(F.min("pick").alias("pick"))
             .select("walk_id", F.col("pick.d").alias("cur"))
         )
-        frontier = step.localCheckpoint(eager=True)
+        frontier = checkpoint(step, eager=True)
         steps.append(frontier.select(
             "walk_id", F.lit(s).cast("long").alias("step"),
             F.col("cur").alias("node")))
-    result = union_all(steps, by_name=True).localCheckpoint(eager=True)
-    adj.unpersist()
-    return result
+    return checkpoint(union_all(steps, by_name=True), eager=True)
 
 
 def metapath_walks_oracle_sql(edges_sql: str, metapath: "list[str]",
@@ -527,6 +517,7 @@ mw0 AS ({w0})"""]
     return "\n".join(parts)
 
 
+@scoped
 def weighted_random_walks(edges: DataFrame, weight_col: str = "weight",
                           length: int = 3, seed: int = 0,
                           starts: DataFrame | None = None,
@@ -563,16 +554,14 @@ def weighted_random_walks(edges: DataFrame, weight_col: str = "weight",
     ws = Window.partitionBy("src").orderBy("dst") \
         .rowsBetween(Window.unboundedPreceding, -1)
     wt = Window.partitionBy("src")
-    adj = (
+    adj = cache(
         base.select(
             "src", "dst",
             F.coalesce(F.sum("__w").over(ws), F.lit(0)).alias("lo"),
             F.sum("__w").over(wt).alias("W"),
             F.col("__w"))
         .withColumn("hi", F.col("lo") + F.col("__w"))
-        .repartition(num_partitions, "src")
-        .cache()
-    )
+        .repartition(num_partitions, "src"))
     adj.count()
     if starts is None:
         starts = adj.select(F.col("src").alias("id")).distinct()
@@ -593,13 +582,11 @@ def weighted_random_walks(edges: DataFrame, weight_col: str = "weight",
                     & (F.col("__h") < F.col("hi")))
             .select("walk_id", F.col("dst").alias("cur"))
         )
-        frontier = step.localCheckpoint(eager=True)
+        frontier = checkpoint(step, eager=True)
         steps.append(frontier.select(
             "walk_id", F.lit(s).cast("long").alias("step"),
             F.col("cur").alias("node")))
-    result = union_all(steps, by_name=True).localCheckpoint(eager=True)
-    adj.unpersist()
-    return result
+    return checkpoint(union_all(steps, by_name=True), eager=True)
 
 
 def weighted_walks_oracle_sql(edges_sql: str, length: int = 3,
@@ -645,6 +632,7 @@ ww0 AS ({w0})"""]
     return "\n".join(parts)
 
 
+@scoped
 def sample_non_edges(edges: DataFrame, k: int = 3, seed: int = 0,
                      n_buckets: int = 64) -> DataFrame:
     """Deterministic NON-edge sampling — the negative examples a link-
@@ -668,7 +656,7 @@ def sample_non_edges(edges: DataFrame, k: int = 3, seed: int = 0,
 
     if k < 1:
         raise ValueError("k must be positive")
-    sym = _symmetric(edges).localCheckpoint(eager=True)
+    sym = checkpoint(_symmetric(edges), eager=True)
     nodes = sym.select(F.col("src").alias("node")).distinct()
     nb = int(n_buckets)
     bnodes = nodes.select(
@@ -731,6 +719,7 @@ FROM ne_c c LEFT JOIN ne_sym e ON c.src = e.src AND c.dst = e.dst
 WHERE e.src IS NULL"""
 
 
+@scoped
 def node2vec_walks(edges: DataFrame, length: int = 3, seed: int = 0,
                    w_return: int = 1, w_common: int = 4, w_far: int = 2,
                    starts: DataFrame | None = None) -> DataFrame:
@@ -766,7 +755,7 @@ def node2vec_walks(edges: DataFrame, length: int = 3, seed: int = 0,
                     ("w_far", w_far)):
         if int(v) <= 0:
             raise ValueError(f"node2vec_walks: {name} must be positive")
-    adj = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
+    adj = checkpoint(edges.select("src", "dst").distinct(), eager=True)
     probe = adj.select(F.col("src").alias("p_src"),
                        F.col("dst").alias("p_dst"))
     if starts is None:
@@ -808,11 +797,11 @@ def node2vec_walks(edges: DataFrame, length: int = 3, seed: int = 0,
             .select("walk_id", F.col("cur").alias("prev"),
                     F.col("dst").alias("cur"))
         )
-        frontier = step.localCheckpoint(eager=True)
+        frontier = checkpoint(step, eager=True)
         steps.append(frontier.select(
             "walk_id", F.lit(s).cast("long").alias("step"),
             F.col("cur").alias("node")))
-    return union_all(steps, by_name=True).localCheckpoint(eager=True)
+    return checkpoint(union_all(steps, by_name=True), eager=True)
 
 
 def node2vec_walks_oracle_sql(edges_sql: str, length: int = 3,

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from judy_graph_db_spark.loopstate import checkpoint
 from judy_graph_db_spark.schema import union_all
 
 DOT = "aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)), cast(0.0 as double), (acc, v) -> acc + v)"
@@ -188,9 +189,8 @@ def cosine_neardup_pairs(embeddings: DataFrame, threshold_micro: int = 400000,
     # this relation, and without the checkpoint each side re-ran the
     # bucketing aggregation (plane join + collect_list over n·n_planes
     # rows, duplicated in the r14 plan — guide §2.4)
-    e = (embeddings.join(buckets, id_col)
-         .withColumn("_nrm", norm(vec_col, dim))
-         .localCheckpoint(eager=True))
+    e = checkpoint(embeddings.join(buckets, id_col)
+                   .withColumn("_nrm", norm(vec_col, dim)), eager=True)
     a = e.select(F.col(id_col).alias("vec_a"), F.col(vec_col).alias("_emb_a"),
                  F.col("_nrm").alias("_nrm_a"), "bucket")
     b = e.select(F.col(id_col).alias("vec_b"), F.col(vec_col).alias("_emb_b"),
@@ -791,7 +791,7 @@ def bitext_mine(src: DataFrame, tgt: DataFrame, k: int = 4,
         )
     else:
         scored = bitext_scored_pairs(src, tgt, id_col, vec_col, dim)
-    scored = scored.localCheckpoint(eager=True)
+    scored = checkpoint(scored, eager=True)
 
     def topk(qid, cid):
         w = Window.partitionBy(qid).orderBy(
@@ -804,7 +804,7 @@ def bitext_mine(src: DataFrame, tgt: DataFrame, k: int = 4,
     # margin join then reads blocks instead of re-running the src-keyed
     # top-k window over `scored` (r15, guide §2.4; the eager form A/B'd
     # 0.93× — the extra materialization job cost more than the window)
-    fwd = topk("src_id", "tgt_id").localCheckpoint(eager=False)
+    fwd = checkpoint(topk("src_id", "tgt_id"), eager=False)
     bwd = topk("tgt_id", "src_id")
     fs = fwd.groupBy("src_id").agg(
         F.sum("sim_micro").alias("ssum"),

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 # lowercase word tokens — kept in sync with the oracle twin via import
 from judy_graph_db_spark.functions.text import WORD_TOKEN_RE
+from judy_graph_db_spark.loopstate import cache, checkpoint, free, scoped
 from judy_graph_db_spark.schema import local_df, union_all
 
 
@@ -1020,6 +1021,7 @@ def grouped_median_mad(df: DataFrame, group_cols: Sequence[str],
     return med.join(mad, g)
 
 
+@scoped
 def perceptron_train(features: DataFrame, labels: DataFrame,
                      iters: int = 3, lr: int = 1,
                      id_col: str = "doc_id"):
@@ -1053,58 +1055,52 @@ def perceptron_train(features: DataFrame, labels: DataFrame,
     spark = features.sparkSession
     y = (F.col("label").cast("long") * 2 - 1).alias("y")
     lab = labels.select(F.col(id_col), y)
-    f = features.join(lab, id_col).select(
-        id_col, "bucket", F.col("tf").cast("long"), "y").cache()
+    f = cache(features.join(lab, id_col).select(
+        id_col, "bucket", F.col("tf").cast("long"), "y"))
     f.count()
-    try:
-        wt: dict = {}
-        bias = 0
-        errors = []
-        for _ in range(int(iters)):
-            wdf = local_df(spark, list(wt.items()), "bucket long, w long")
-            scores = (
-                f.join(F.broadcast(wdf), "bucket", "left")
-                .groupBy(id_col, "y")
-                .agg(F.coalesce(F.sum(F.col("tf") * F.col("w")),
-                                F.lit(0)).alias("s"))
-            )
-            # checkpoint the misclassified set: the error-count collect
-            # materializes it, and the delta pass then SEMI-JOINS against
-            # the materialized ids instead of re-running the whole
-            # score-join+aggregation a second time (the r13 shape computed
-            # scores twice per iteration — guide §2.4, don't recompute)
-            mis = scores.filter(
-                F.col("y") * (F.lit(bias) + F.col("s")) <= 0
-            ).select(id_col, "y").localCheckpoint(eager=False)
-            st = mis.agg(F.count(F.lit(1)).alias("n"),
-                         F.coalesce(F.sum("y"), F.lit(0)).alias("sy")
-                         ).collect()[0]
-            errors.append(st.n)
-            if st.n == 0:
-                break
-            # the measured error count drives the join strategy: a small
-            # misclassified set broadcasts (no shuffle of the feature
-            # relation at all); a large one falls back to the shuffled
-            # semi-join (guide §3.1 — decide from real counts, not
-            # estimates)
-            mis_ids = mis.select(id_col)
-            if st.n <= 1_000_000:
-                mis_ids = F.broadcast(mis_ids)
-            delta = (
-                f.join(mis_ids, id_col, "left_semi")
-                .groupBy("bucket")
-                .agg(F.sum(F.col("y") * F.col("tf")).alias("d"))
-                .collect()
-            )
-            try:
-                mis._jdf.queryExecution().analyzed().rdd().unpersist(False)
-            except Exception:
-                pass
-            for r in delta:
-                wt[r.bucket] = wt.get(r.bucket, 0) + int(lr) * r.d
-            bias += int(lr) * st.sy
-    finally:
-        f.unpersist()
+    wt: dict = {}
+    bias = 0
+    errors = []
+    for _ in range(int(iters)):
+        wdf = local_df(spark, list(wt.items()), "bucket long, w long")
+        scores = (
+            f.join(F.broadcast(wdf), "bucket", "left")
+            .groupBy(id_col, "y")
+            .agg(F.coalesce(F.sum(F.col("tf") * F.col("w")),
+                            F.lit(0)).alias("s"))
+        )
+        # checkpoint the misclassified set: the error-count collect
+        # materializes it, and the delta pass then SEMI-JOINS against
+        # the materialized ids instead of re-running the whole
+        # score-join+aggregation a second time (the r13 shape computed
+        # scores twice per iteration — guide §2.4, don't recompute)
+        mis = checkpoint(scores.filter(
+            F.col("y") * (F.lit(bias) + F.col("s")) <= 0
+        ).select(id_col, "y"), eager=False)
+        st = mis.agg(F.count(F.lit(1)).alias("n"),
+                     F.coalesce(F.sum("y"), F.lit(0)).alias("sy")
+                     ).collect()[0]
+        errors.append(st.n)
+        if st.n == 0:
+            break
+        # the measured error count drives the join strategy: a small
+        # misclassified set broadcasts (no shuffle of the feature
+        # relation at all); a large one falls back to the shuffled
+        # semi-join (guide §3.1 — decide from real counts, not
+        # estimates)
+        mis_ids = mis.select(id_col)
+        if st.n <= 1_000_000:
+            mis_ids = F.broadcast(mis_ids)
+        delta = (
+            f.join(mis_ids, id_col, "left_semi")
+            .groupBy("bucket")
+            .agg(F.sum(F.col("y") * F.col("tf")).alias("d"))
+            .collect()
+        )
+        free(mis)
+        for r in delta:
+            wt[r.bucket] = wt.get(r.bucket, 0) + int(lr) * r.d
+        bias += int(lr) * st.sy
     wout = local_df(spark, sorted(wt.items()), "bucket long, w long").filter(F.col("w") != 0)
     return wout, bias, errors
 

@@ -34,6 +34,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from judy_graph_db_spark.loopstate import checkpoint, fixpoint, scoped
 from judy_graph_db_spark.schema import union_all
 
 
@@ -382,6 +383,7 @@ def transition_counts(events: DataFrame, key_col: str = "user_id",
     )
 
 
+@scoped
 def time_respecting_reachability(edges: DataFrame, src_col: str = "src",
                                  dst_col: str = "dst", ts_col: str = "ts",
                                  min_wait: int = 0,
@@ -406,11 +408,9 @@ def time_respecting_reachability(edges: DataFrame, src_col: str = "src",
     """
     e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"),
                      F.col(ts_col).cast("long").alias("t"))
-    r = (
+    r = checkpoint(
         e.filter(F.col("src") != F.col("dst"))
-        .groupBy("src", "dst").agg(F.min("t").alias("t_arr"))
-        .localCheckpoint(eager=True)
-    )
+        .groupBy("src", "dst").agg(F.min("t").alias("t_arr")), eager=True)
 
     def fingerprint(df: DataFrame) -> tuple:
         row = df.agg(
@@ -419,8 +419,7 @@ def time_respecting_reachability(edges: DataFrame, src_col: str = "src",
         ).collect()[0]
         return (row["n"], int(row["s"] or 0))
 
-    prev = fingerprint(r)
-    for _ in range(max_iter):
+    def relax(r: DataFrame) -> DataFrame:
         step = (
             r.join(e.select(F.col("src").alias("mid"),
                             F.col("dst").alias("nxt"), "t"),
@@ -430,21 +429,11 @@ def time_respecting_reachability(edges: DataFrame, src_col: str = "src",
             .select("src", F.col("nxt").alias("dst"),
                     F.col("t").alias("t_arr"))
         )
-        prev_state = r
-        r = (
-            union_all([r, step])
-            .groupBy("src", "dst").agg(F.min("t_arr").alias("t_arr"))
-            .localCheckpoint(eager=True)
-        )
-        try:
-            prev_state.unpersist()
-        except Exception:
-            pass
-        cur = fingerprint(r)
-        if cur == prev:
-            break
-        prev = cur
-    return r
+        return (union_all([r, step])
+                .groupBy("src", "dst").agg(F.min("t_arr").alias("t_arr")))
+
+    # the fingerprint job materializes each round: one job per round
+    return fixpoint(r, relax, fingerprint, max_iter)
 
 
 def time_respecting_reachability_sql(edges_sql: str, min_wait: int = 0,

@@ -46,6 +46,7 @@ from typing import Iterator
 from pyspark.sql import DataFrame, functions as F
 
 from judy_graph_db_spark.functions.text import WORD_TOKEN_RE
+from judy_graph_db_spark.loopstate import checkpoint, free, scoped
 from judy_graph_db_spark.schema import union_all
 
 __all__ = [
@@ -215,6 +216,7 @@ def unigram_segment_words(words: DataFrame, costed_vocab: DataFrame,
     return words.mapInPandas(run, schema=out_schema)
 
 
+@scoped
 def unigram_train(docs: DataFrame, rounds: int = 2,
                   max_piece_len: int = 4, seed_size: int = 512,
                   vocab_size: int | None = None, text_col: str = "text",
@@ -235,11 +237,10 @@ def unigram_train(docs: DataFrame, rounds: int = 2,
     over the |distinct words| relation; the segmentation itself is a
     shuffle-free broadcast mapInPandas pass.
     """
-    words = _word_table(docs, text_col, min_word_freq) \
-        .localCheckpoint(eager=True)
+    words = checkpoint(_word_table(docs, text_col, min_word_freq), eager=True)
     vocab = unigram_seed_vocab(docs, max_piece_len, seed_size,
                                text_col, min_word_freq)
-    costed = with_piece_costs(vocab).localCheckpoint(eager=True)
+    costed = checkpoint(with_piece_costs(vocab), eager=True)
     chars = vocab.filter(F.length("piece") == 1).select("piece")
     for _ in range(int(rounds)):
         seg = unigram_segment_words(words, costed, max_piece_len)
@@ -259,12 +260,9 @@ def unigram_train(docs: DataFrame, rounds: int = 2,
             multi = (multi.orderBy(F.col("cnt").desc(), F.col("piece").asc())
                      .limit(max(0, int(vocab_size) - n_chars)))
         prev = costed
-        costed = with_piece_costs(union_all([kept_chars, multi], by_name=True)) \
-            .localCheckpoint(eager=True)
-        try:
-            prev.unpersist()
-        except Exception:  # noqa: BLE001, S110 — best-effort cache release
-            pass
+        costed = checkpoint(with_piece_costs(
+            union_all([kept_chars, multi], by_name=True)), eager=True)
+        free(prev)
     return costed
 
 

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from judy_graph_db_spark.graph import Graph
+from judy_graph_db_spark import loopstate
 from judy_graph_db_spark.operators.adjacency import nodes_scan
 from judy_graph_db_spark.plans.pattern import E, N, Pattern
 from judy_graph_db_spark.schema import EDGE_COLS, local_df, union_all
@@ -280,7 +281,7 @@ def _walk_several(g: Graph, bindings: DataFrame, espec: E, cur: str, nxt: str,
         if use_visited:
             stepped = stepped.join(union_all(visited_parts), prev_cols + ["_cur"], "left_anti")
         if materialize_rounds:
-            fresh = stepped.localCheckpoint(eager=True)
+            fresh = loopstate.checkpoint(stepped, eager=True)
             if fresh.isEmpty():
                 break  # frontier dried up (stopRecursion early-succeed/fail)
         else:

@@ -41,6 +41,7 @@ from judy_graph_db_spark.streaming.pathio import (fs_delete, fs_exists,
 
 from pyspark.sql import DataFrame, functions as F
 
+from judy_graph_db_spark import loopstate
 from judy_graph_db_spark.operators.temporal import scd2_merge
 
 
@@ -186,6 +187,7 @@ def foreach_batch_scd2(stream: DataFrame, store: str,
     if retain_versions < 1:
         raise ValueError("retain_versions must be >= 1")
 
+    @loopstate.scoped  # frees the batch's checkpoints once it is folded
     def handle(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         latest = _latest_version(store)
@@ -218,10 +220,9 @@ def foreach_batch_scd2(stream: DataFrame, store: str,
         )
         # current = open slice only, so every valid_to IS NOT NULL row in
         # the merge output is NEWLY closed by this fold
-        merged = scd2_merge(prev_open, updates, key_col=key_col,
-                            value_cols=vals, ts_col=ts_col,
-                            delete_col=delete_col) \
-            .localCheckpoint(eager=True)
+        merged = loopstate.checkpoint(
+            scd2_merge(prev_open, updates, key_col=key_col, value_cols=vals,
+                       ts_col=ts_col, delete_col=delete_col), eager=True)
         new_version = 0 if latest is None else latest + 1
         merged.filter(F.col("valid_to").isNotNull()).write.mode(
             "overwrite").parquet(

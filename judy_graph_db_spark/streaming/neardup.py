@@ -46,6 +46,7 @@ from judy_graph_db_spark.streaming.pathio import (fs_delete, fs_exists,
 
 from pyspark.sql import DataFrame, functions as F
 
+from judy_graph_db_spark import loopstate
 from judy_graph_db_spark.operators.dedup import (BAND_ROWS, NUM_HASHES,
                                                  band_hashes,
                                                  minhash_signatures)
@@ -177,6 +178,7 @@ def compact_store(spark, store: str,
     return n
 
 
+@loopstate.scoped
 def fold_neardup_batch(batch: DataFrame, batch_id: int, store: str,
                        ck_id: str = "",
                        id_col: str = "doc_id", text_col: str = "text",
@@ -194,8 +196,9 @@ def fold_neardup_batch(batch: DataFrame, batch_id: int, store: str,
         return None  # replayed micro-batch — already folded
     prev = read_buckets(spark, store)
 
-    rows = band_rows_of(batch, id_col, text_col, num_hashes, band_rows) \
-        .localCheckpoint(eager=True)
+    rows = loopstate.checkpoint(
+        band_rows_of(batch, id_col, text_col, num_hashes, band_rows),
+        eager=True)
     batch_min = rows.groupBy("band_idx", "band_hash") \
         .agg(F.min("doc_id").alias("batch_keep"))
     if prev is not None:

@@ -36,6 +36,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, functions as F
 
+from judy_graph_db_spark import loopstate
 from judy_graph_db_spark.streaming.neardup import (_complete_slices,
                                                    _latest_meta,
                                                    fold_neardup_batch,
@@ -68,6 +69,7 @@ def foreach_batch_web_corpus(stream: DataFrame, store: str,
     from judy_graph_db_spark.operators.curation import web_corpus_funnel
     from judy_graph_db_spark.streaming.neardup import compact_store
 
+    @loopstate.scoped  # frees the batch's checkpoints once it is folded
     def handle(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         ck_id = replay_id if replay_id is not None else (checkpoint or "")
@@ -75,8 +77,9 @@ def foreach_batch_web_corpus(stream: DataFrame, store: str,
             batch, blocked_domains=blocked_domains, keep_langs=keep_langs,
             neardup=False, id_col=id_col, text_col=text_col,
             url_col=url_col)
-        surv = wf.filter(F.col("keep")).select(id_col, url_col, text_col) \
-            .localCheckpoint(eager=True)
+        surv = loopstate.checkpoint(
+            wf.filter(F.col("keep")).select(id_col, url_col, text_col),
+            eager=True)
         version = fold_neardup_batch(surv, batch_id, store, ck_id,
                                      id_col=id_col, text_col=text_col)
         if version is None:

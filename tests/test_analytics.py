@@ -5,6 +5,7 @@ tiny graphs — the parity-plus surface the reference leaves TODO
 import duckdb
 from pyspark.sql import functions as F
 
+from judy_graph_db_spark import loopstate
 from judy_graph_db_spark.operators import analytics as AN
 
 
@@ -1917,19 +1918,20 @@ def test_pivot_sigma_bfs_deep_chain_collapses_seen(spark):
     yields the restricted closed form delta_0(v) = n-1-v."""
     n = 201
     e = edges_df(spark, [(i, i + 1) for i in range(n - 1)])
-    ck: list = []
     piv = e.sparkSession.createDataFrame([(0,)], "id long")
-    slices, counts = AN._pivot_sigma_bfs(
-        AN._prep_edge_rel(e.select("src", "dst")), piv,
-        max_iter=n + 5, ckpts=ck)
-    assert sum(counts) == n and len(slices) == n
-    for depth, (sl, cnt) in enumerate(zip(slices, counts)):
-        rows = sl.collect()
-        assert len(rows) == cnt
-        assert all(r["s"] == 0 and r["id"] == depth and r["sigma"] == 1
-                   for r in rows)
-    for c in ck:
-        AN._unpersist_checkpoint(c)
+
+    @loopstate.scoped  # frees the BFS state on return
+    def check_levels():
+        slices, counts = AN._pivot_sigma_bfs(
+            AN._prep_edge_rel(e.select("src", "dst")), piv, max_iter=n + 5)
+        assert sum(counts) == n and len(slices) == n
+        for depth, (sl, cnt) in enumerate(zip(slices, counts)):
+            rows = sl.collect()
+            assert len(rows) == cnt
+            assert all(r["s"] == 0 and r["id"] == depth and r["sigma"] == 1
+                       for r in rows)
+
+    check_levels()
     # forward+backward across one collapse boundary: 40 levels
     m = 41
     e2 = edges_df(spark, [(i, i + 1) for i in range(m - 1)])

@@ -7,6 +7,7 @@ actually exercised by the suite."""
 
 from pyspark.sql import functions as F
 
+from judy_graph_db_spark import loopstate
 from judy_graph_db_spark.operators import analytics as AN
 from judy_graph_db_spark.operators import clustering as CL
 from judy_graph_db_spark.operators import dedup as D
@@ -48,14 +49,13 @@ def test_simhash_ckpt_branch_row_identical(spark, monkeypatch):
 def test_bfs_edge_cache_branch_row_identical(spark, monkeypatch):
     """Forces the >=50M-row repartition+sort+cache branch of
     _prep_edge_rel (never active on local fixtures otherwise) and checks
-    betweenness is unchanged — and that the operator frees its own cache
-    (self-contained _ckpts=None path).
+    betweenness is unchanged — and that the operator's scope owns and
+    frees that cache.
 
     The cleanup check is exact and names its targets by RDD id: the
-    state the forced prep persisted (its checkpoint and the tagged
-    cache's column buffers) must be unregistered when the operator
-    returns, and the tagged cache's blocks gone from every block
-    manager. Raw persistent-RDD counts would race GC of the weak-valued
+    state the forced prep persisted (its checkpoint and the cache's
+    column buffers) must be unregistered when the operator returns, and
+    the cache's blocks gone from every block manager. Raw persistent-RDD counts would race GC of the weak-valued
     map and non-blocking unpersists."""
     import random
 
@@ -72,7 +72,9 @@ def test_bfs_edge_cache_branch_row_identical(spark, monkeypatch):
     base = {r["id"]: r["betweenness"]
             for r in AN.betweenness_centrality(e).collect()}
     monkeypatch.setattr(AN, "_EDGE_CACHE_MIN_ROWS", 1)
-    prepped = []  # (relation, cache RDD id, its partitions, all prep RDD ids)
+    # (relation, owned by the open scope as a cache, cache RDD id, its
+    # partitions, all prep RDD ids)
+    prepped = []
     real_prep = AN._prep_edge_rel
 
     def recording_prep(*args, **kwargs):
@@ -80,7 +82,9 @@ def test_bfs_edge_cache_branch_row_identical(spark, monkeypatch):
         rel = real_prep(*args, **kwargs)
         buffers = (cache_manager.lookupCachedData(rel._jdf).get()
                    .cachedRepresentation().cacheBuilder().cachedColumnBuffers())
-        prepped.append((rel, buffers.id(), buffers.getNumPartitions(),
+        owned = any(d is rel and is_cache
+                    for d, is_cache in loopstate._scopes()[-1])
+        prepped.append((rel, owned, buffers.id(), buffers.getNumPartitions(),
                         persistent_ids() - before))
         return rel
 
@@ -90,12 +94,12 @@ def test_bfs_edge_cache_branch_row_identical(spark, monkeypatch):
     assert set(forced) == set(base)
     assert all(abs(forced[v] - base[v]) < 1e-9 for v in base)
 
-    (rel, cache_rdd, n_parts, prep_rdds), = prepped
-    assert rel._graft_cached
-    # the prep persisted exactly its checkpoint and the tagged cache
+    (rel, owned, cache_rdd, n_parts, prep_rdds), = prepped
+    assert owned
+    # the prep persisted exactly its checkpoint and the cache
     assert cache_rdd in prep_rdds and len(prep_rdds) == 2, prep_rdds
     # both are unregistered, and the cache's blocks are gone everywhere:
-    # the operator frees the tagged cache with a blocking unpersist
+    # the scope frees the cache with a blocking unpersist
     assert cache_manager.lookupCachedData(rel._jdf).isEmpty()
     assert not prep_rdds & persistent_ids()
     block_master = jsc.env().blockManager().master()
