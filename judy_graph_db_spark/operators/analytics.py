@@ -7,16 +7,18 @@ driver-side iterative DataFrame loops — the same shape as the
 variable-length-path loop in ``plans/compiler.py`` (SURVEY.md §4.3).
 
 Scale design (100 TB):
-- every iteration is ONE shuffle keyed on the join column; no driver-side
-  collection anywhere — frontiers stay distributed;
+- every iteration is ONE shuffle keyed on the join column; frontiers
+  stay distributed. The driver collects only 1-row aggregates, argmaxes
+  and ``connected_components`` pair sets of ≤ ``_LOCAL_CC_MAX_PAIRS``;
 - each iteration checkpoints the state DataFrame (``loopstate.checkpoint``)
   so lineage (and the Catalyst plan) stays flat no matter how many rounds
   run; every public operator runs in a ``loopstate.scoped`` scope, which
   frees each checkpoint and cache the call made except those backing its
   result, also when the call raises. Loops free a superseded state with
   ``loopstate.free`` once its successor is materialized;
-- ``connected_components`` pairs hash-min propagation with pointer jumping,
-  giving O(log d) rounds instead of O(d) on long chains;
+- ``connected_components`` above that bound alternates large-star and
+  small-star contraction, giving O(log n) rounds instead of O(d) on long
+  chains;
 - ``triangle_count`` canonicalizes to the ``a < b`` undirected edge set
   first, so each triangle is counted exactly once and the self-joins stay
   half-sized; on skewed degree distributions, AQE skew-join handles the
@@ -106,28 +108,68 @@ def _star_round(pairs: DataFrame, large: bool) -> DataFrame:
     return out if large else out.distinct()
 
 
+#: Largest canonical pair set :func:`connected_components` unions on the
+#: driver; a larger one runs the distributed contraction.
+_LOCAL_CC_MAX_PAIRS = 500_000
+
+
+def _union_find(pairs) -> list:
+    """``(id, min id of its component)`` for every id on ``pairs``."""
+    parent: dict = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return [(x, find(x)) for x in parent]
+
+
+def _local_components(spark, pairs, nodes: DataFrame | None = None) -> DataFrame:
+    """Driver union-find of collected ``pairs`` into a local relation, plus
+    ``(id, id)`` for every edge-less id of ``nodes``."""
+    comp = local_df(spark, _union_find(pairs), "id long, component long")
+    if nodes is None:
+        return comp
+    loners = (nodes.select(F.col("id").cast("long").alias("id")).distinct()
+              .join(comp, "id", "left_anti"))
+    return union_all([comp, loners.select("id", F.col("id").alias("component"))])
+
+
 @scoped
 def connected_components(edges: DataFrame, max_iter: int = 50,
                          nodes: DataFrame | None = None) -> DataFrame:
-    """Connected components via alternating large-star/small-star
-    contraction — the scalable MapReduce formulation (see
-    :func:`_star_round`). Returns ``(id BIGINT, component BIGINT)`` where
-    ``component`` is the minimum node id of the component. By default the
-    node set is every id on a non-self-loop edge; pass ``nodes`` (an ``id``
-    column) to also emit ``(id, id)`` singleton components for edge-less
-    ids — an explicit node table usually has some.
+    """Connected components. Returns ``(id BIGINT, component BIGINT)``
+    where ``component`` is the minimum node id of the component. By
+    default the node set is every id on a non-self-loop edge; pass
+    ``nodes`` (an ``id`` column) to also emit ``(id, id)`` singleton
+    components for edge-less ids — an explicit node table usually has
+    some.
 
-    Convergence test: a whp-exact fingerprint (count + sum of per-pair
-    xxhash64) of the canonical edge set — stationary iff the star set
-    stopped changing; one agg job per round, no join. Each round
-    ``localCheckpoint``\\ s the pair set to keep lineage flat.
+    The plan is chosen once per call by counting the canonical ``a < b``
+    pair checkpoint (the job that materializes it). At most
+    ``_LOCAL_CC_MAX_PAIRS`` pairs are collected and labelled by a driver
+    union-find — small graphs pay job latency, not data. More go through
+    alternating large-star/small-star contraction (see :func:`_star_round`),
+    O(log n) checkpointed rounds of at most ``max_iter``; convergence test:
+    a whp-exact fingerprint (count + sum of per-pair xxhash64) of the pair
+    set, one agg job per round, no join.
     """
     pairs = checkpoint(
         edges.select(
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
         )
         .filter(F.col("a") < F.col("b"))
-        .distinct(), eager=True)
+        .distinct())
+    # one job, no shuffle; no rows reach the driver above the bound
+    if pairs._jdf.queryExecution().toRdd().count() <= _LOCAL_CC_MAX_PAIRS:
+        return _local_components(edges.sparkSession, pairs.collect(), nodes)
+
     id_set = _endpoints(pairs, "a", "b")
     if nodes is not None:
         id_set = union_all([id_set, nodes.select(F.col("id").cast("long"))])
@@ -1437,9 +1479,10 @@ def incremental_connected_components(labels: DataFrame,
     ``labels`` is ``(id, component)`` from a previous run (components
     labeled by their min id — the fixpoint this module produces); the
     update maps each new edge endpoint through its existing label
-    (fresh nodes map to themselves), runs the O(log n) star contraction
+    (fresh nodes map to themselves), runs :func:`connected_components`
     on that QUOTIENT graph — whose size is O(|batch| + touched
-    components), independent of the full graph — and joins the quotient
+    components), independent of the full graph, so a small batch is
+    unioned on the driver — and joins the quotient
     result back. Labels stay min-id-canonical, so iterating per batch is
     associative: the result equals a full recompute over old ∪ new.
 
@@ -1939,8 +1982,7 @@ def harmonic_centrality(edges: DataFrame, max_iter: int = 20,
 
 @scoped
 def minimum_spanning_forest(edges: DataFrame, weight_col: str = "weight",
-                            max_iter: int = 20,
-                            driver_contract_max: int = 500_000) -> DataFrame:
+                            max_iter: int = 20) -> DataFrame:
     """Borůvka minimum spanning forest over an undirected weighted edge
     set: ``(a BIGINT, b BIGINT, weight BIGINT)``, the MST of every
     connected component. Deterministic under ties — the per-component
@@ -1954,9 +1996,9 @@ def minimum_spanning_forest(edges: DataFrame, weight_col: str = "weight",
     the cross-component edge set), the selected edges join the forest,
     and components contract by running :func:`connected_components` on
     the selected COMPONENT-level graph — whose size is O(#components),
-    halving every round, so the inner contraction is cheap even though
-    it is itself iterative. Cross edges at least halve per round; the
-    loop ends when none remain.
+    halving every round, so all but the first rounds of a large run union
+    it on the driver. Cross edges at least halve per round; the loop ends
+    when none remain.
     """
     canon = checkpoint(
         edges.select(
@@ -1999,44 +2041,19 @@ def minimum_spanning_forest(edges: DataFrame, weight_col: str = "weight",
             .distinct(), eager=False)
         # ONE evaluation of the component-label join per round: its count
         # materializes the checkpoint, doubles as the cross-edge emptiness
-        # test (a non-empty cross set always yields ≥ 1 picked edge), and
-        # is exactly the contraction-graph size the driver/distributed
-        # dispatch below needs — the r13 form evaluated the join twice
-        # (an emptiness probe + the eager checkpoint) and ran a third
-        # count job for the dispatch.
+        # test (a non-empty cross set always yields ≥ 1 picked edge) and
+        # sizes the contraction graph below
         n_picked = picked.count()
         if n_picked == 0:
             break
         forest_parts.append(picked.select("a", "b", "w"))
-        # contract on the component-level selected graph (O(#components)).
-        # Runtime-stats dispatch (the SCC `auto` pattern): the selected
-        # relation has ≤ #components rows and halves every round, so once
-        # it fits comfortably on the driver a local union-find beats ~8
-        # latency-bound distributed CC rounds; the first rounds of a
-        # 100 TB run stay distributed.
-        # `driver_contract_max` parameterizes the crossover (0 forces the
-        # distributed branch — the branch a 100 TB run's first rounds take;
-        # equivalence across both branches is pinned by
-        # ``test_msf_distributed_contraction_branch_equivalent``).
-        cedges = picked.select(F.col("ca").alias("src"),
-                               F.col("cb").alias("dst"))
-        if n_picked <= driver_contract_max:
-            parent: dict = {}
-
-            def find(x):
-                while parent.setdefault(x, x) != x:
-                    parent[x] = parent[parent[x]]
-                    x = parent[x]
-                return x
-
-            for row in cedges.collect():
-                ra, rb = find(row["src"]), find(row["dst"])
-                if ra != rb:
-                    parent[max(ra, rb)] = min(ra, rb)
-            mapping = [(c, find(c)) for c in parent]
-            merged = local_df(picked.sparkSession, mapping, "id long, component long")
+        # contract on the component-level selected graph (O(#components)),
+        # sized by the count above: a small one skips connected_components' count
+        cedges = picked.select(F.col("ca").alias("src"), F.col("cb").alias("dst"))
+        if n_picked <= _LOCAL_CC_MAX_PAIRS:
+            merged = _local_components(picked.sparkSession, cedges.collect())
         else:
-            merged = connected_components(cedges)  # (id=old comp, component=new)
+            merged = connected_components(cedges)
         nxt = checkpoint(
             comp.join(merged.withColumnRenamed("id", "comp"), "comp", "left")
             .select("id", F.coalesce("component", F.col("comp")).alias("comp")), eager=True)
@@ -2432,13 +2449,16 @@ def community_conductance(edges: DataFrame, labels: DataFrame) -> DataFrame:
 
 
 def conductance_oracle_sql(edges_sql: str, labels_sql: str) -> str:
-    """ANSI-SQL twin of :func:`community_conductance`."""
-    return f"""WITH cd_e AS (
+    """DuckDB twin of :func:`community_conductance`. The CTEs read more
+    than once are ``MATERIALIZED``: inlined, each reader re-runs
+    ``labels_sql`` (an unrolled label-propagation twin in the
+    ``label_communities`` gate), which ran out of memory at sf0.01."""
+    return f"""WITH cd_e AS MATERIALIZED (
   SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
   FROM ({edges_sql}) WHERE src <> dst
 ),
-cd_l AS (SELECT id, community FROM ({labels_sql})),
-cd_j AS (
+cd_l AS MATERIALIZED (SELECT id, community FROM ({labels_sql})),
+cd_j AS MATERIALIZED (
   SELECT e.a, e.b, la.community AS ca, lb.community AS cb
   FROM cd_e e JOIN cd_l la ON e.a = la.id JOIN cd_l lb ON e.b = lb.id
 ),

@@ -19,7 +19,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from judy_graph_db_spark.loopstate import checkpoint, scoped
-from judy_graph_db_spark.schema import local_df, union_all
+from judy_graph_db_spark.schema import union_all
 
 SHINGLE_LEN = 8
 SHINGLE_STRIDE = 4
@@ -188,9 +188,11 @@ def dedup_clusters(docs: DataFrame, text_col: str = "text",
 
     This is the full shape of corpus dedup at scale: pair emission alone
     under-deletes (A~B, B~C but A≁C must still collapse to one family), so
-    the pairs feed the large-star/small-star component contraction
-    (``analytics.connected_components``, O(log n) rounds). Singleton docs
-    (no candidate pair) are their own cluster. Oracle:
+    the pairs feed ``analytics.connected_components`` — a driver-side
+    union-find on the sparse pair graph of a healthy corpus, the
+    large-star/small-star contraction (O(log n) rounds) on a
+    boilerplate-heavy one. Singleton docs (no candidate pair) are their
+    own cluster. Oracle:
     ``oracle.dedup_clusters_sql`` — an independent recursive-CTE transitive
     closure."""
     from judy_graph_db_spark.operators.analytics import connected_components
@@ -209,31 +211,8 @@ def dedup_clusters(docs: DataFrame, text_col: str = "text",
     pairs = candidates if candidates is not None else minhash_lsh_candidates(
         docs, text_col, id_col, num_hashes, band_rows, max_bucket_size
     )
-    edges = checkpoint(pairs.select(F.col("doc_a").alias("src"),
-                                    F.col("doc_b").alias("dst")), eager=True)
-    # Runtime-stats dispatch (the analytics MSF pattern): near-dup pair
-    # graphs are SPARSE — a healthy corpus yields far fewer pairs than
-    # docs — so when the pair set fits comfortably on the driver a local
-    # union-find replaces ~10 latency-bound distributed CC rounds; a
-    # boilerplate-heavy corpus (or 100 TB) exceeds the guard and stays
-    # on the distributed large-star/small-star path.
-    if edges.count() <= 500_000:
-        parent: dict = {}
-
-        def find(x):
-            while parent.setdefault(x, x) != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for row in edges.collect():
-            ra, rb = find(row["src"]), find(row["dst"])
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        mapping = [(c, find(c)) for c in parent]
-        comp = local_df(docs.sparkSession, mapping, "id long, component long")
-    else:
-        comp = connected_components(edges)
+    comp = connected_components(pairs.select(F.col("doc_a").alias("src"),
+                                             F.col("doc_b").alias("dst")))
     return (
         docs.select(F.col(id_col))
         .join(comp.withColumnRenamed("id", id_col), id_col, "left")

@@ -22,14 +22,10 @@ SLOW_TESTS = frozenset({
     ("test_analytics.py", "test_betweenness_centrality"),
     ("test_analytics.py", "test_betweenness_sampled"),
     ("test_analytics.py", "test_connected_components_long_chain_converges_fast"),
-    ("test_analytics.py", "test_connected_components_random_vs_union_find"),
     ("test_analytics.py", "test_edge_betweenness_sampled"),
-    ("test_analytics.py", "test_girvan_newman_incremental_across_components"),
     ("test_analytics.py", "test_girvan_newman_method_dispatch"),
     ("test_analytics.py", "test_girvan_newman_modularity_peak"),
-    ("test_analytics.py", "test_girvan_newman_sampled_horizon_matches_exact"),
     ("test_analytics.py", "test_girvan_newman_sampled_matches_exact_sequence"),
-    ("test_analytics.py", "test_girvan_newman_splits_barbell"),
     ("test_analytics.py", "test_greedy_coloring"),
     ("test_analytics.py", "test_greedy_modularity_finds_cliques"),
     ("test_analytics.py", "test_greedy_modularity_improves_over_singletons"),
@@ -83,16 +79,13 @@ SLOW_TESTS = frozenset({
     ("test_warc.py", "test_streaming_web_corpus_matches_batch_funnel"),
     ("test_adjacency.py", "test_adjacent_nodes_by_attr"),
     ("test_analytics.py", "test_betweenness_sources_routes_to_pivot_pass"),
-    ("test_analytics.py", "test_connected_components_two_components"),
     ("test_analytics.py", "test_edge_betweenness_sources_routes_to_pivot_pass"),
-    ("test_analytics.py", "test_incremental_cc_matches_full_recompute"),
     ("test_curation.py", "test_pps_systematic_sample"),
     ("test_cypher.py", "test_shortest_paths_strategy_branches_agree_on_cycle"),
     ("test_entry_oracle.py", "test_query_matches_oracle[pattern_2hop]"),
     ("test_entry_oracle.py", "test_query_matches_oracle[persisted_roundtrip]"),
     ("test_manifest.py", "test_manifest_ops_match_live_gate[var_length_paths]"),
     ("test_streaming.py", "test_neardup_store_file_scheme_uri"),
-    ("test_streaming.py", "test_streaming_components_equal_batch"),
     ("test_streaming.py", "test_streaming_mg_fold_bound_holds"),
     ("test_streaming.py", "test_streaming_scd2_compaction"),
     ("test_temporal.py", "test_time_respecting_reachability_matches_oracle"),

@@ -5,12 +5,14 @@ at-scale branch on small fixtures by lowering the module-level bound, so
 the branch that normally activates only on >=5M/50M-row inputs is
 actually exercised by the suite."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from judy_graph_db_spark import loopstate
 from judy_graph_db_spark.operators import analytics as AN
 from judy_graph_db_spark.operators import clustering as CL
 from judy_graph_db_spark.operators import dedup as D
+from judy_graph_db_spark.schema import local_df
 
 
 def _edges(spark, pairs):
@@ -106,3 +108,65 @@ def test_bfs_edge_cache_branch_row_identical(spark, monkeypatch):
     for part in range(n_parts):
         block = spark._jvm.org.apache.spark.storage.RDDBlockId(cache_rdd, part)
         assert block_master.getBlockStatus(block, True).isEmpty(), part
+
+
+def _cc_fixture(seed):
+    """A random multigraph with self-loops, parallel and reversed edges,
+    its canonical pair count, and the min-id labels a Python union-find
+    gives every non-self-loop endpoint."""
+    import random
+
+    rng = random.Random(seed)
+    n = 30
+    rows = [(rng.randrange(n), rng.randrange(n)) for _ in range(25)]
+    rows += [(a, a) for a in rng.sample(range(n), 4)]           # self-loops
+    rows += rng.sample(rows, 5) + [(b, a) for a, b in rng.sample(rows, 5)]
+    canon = {(min(a, b), max(a, b)) for a, b in rows if a != b}
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in canon:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return rows, len(canon), {x: find(x) for x in parent}
+
+
+def _reads_checkpoint(df) -> bool:
+    leaves = df._jdf.queryExecution().withCachedData().collectLeaves()
+    return any(leaves.apply(i).getClass().getSimpleName() == "LogicalRDD"
+               for i in range(leaves.size()))
+
+
+@pytest.mark.parametrize(("seed", "coalesce"), [(5, "true"), (17, "false")])
+@pytest.mark.parametrize("with_nodes", [False, True])
+def test_connected_components_branches_row_identical(spark, monkeypatch,
+                                                     with_nodes, seed, coalesce):
+    """The bound admits the driver union-find at exactly |pairs| and forces
+    the distributed contraction at |pairs| - 1; both give the same rows,
+    and with ``nodes=`` the edge-less ids come out as ``(id, id)``. With
+    AQE partition coalescing off the pair set keeps several partitions."""
+    rows, n_pairs, want = _cc_fixture(seed)
+    e = _edges(spark, rows)
+    nodes = None
+    if with_nodes:
+        extra = [100, 101, *list(want)[:3]]      # two loners, three on edges
+        nodes = local_df(spark, [(x,) for x in extra + extra], "id long")
+        want = {**{x: x for x in extra}, **want}
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, coalesce)
+    try:
+        assert (e.distinct().rdd.getNumPartitions() > 1) == (coalesce == "false")
+        got = {}
+        for bound, distributed in ((n_pairs, False), (n_pairs - 1, True)):
+            monkeypatch.setattr(AN, "_LOCAL_CC_MAX_PAIRS", bound)
+            out = AN.connected_components(e, nodes=nodes)
+            assert _reads_checkpoint(out) == distributed
+            got[bound] = sorted((r["id"], r["component"]) for r in out.collect())
+    finally:
+        spark.conf.set(key, prior)
+    assert got[n_pairs] == got[n_pairs - 1] == sorted(want.items())

@@ -4,6 +4,7 @@ free in the package bypasses ``loopstate``."""
 
 import re
 from pathlib import Path
+from unittest import mock
 
 import pytest
 from pyspark.sql import functions as F
@@ -58,8 +59,16 @@ def _backing(df) -> set:
     return ids
 
 
+def _cc_distributed(e):
+    """connected_components on its distributed branch (the fixture fits
+    the driver union-find otherwise)."""
+    with mock.patch.object(AN, "_LOCAL_CC_MAX_PAIRS", 0):
+        return AN.connected_components(e)
+
+
 OPERATORS = {
     "connected_components": lambda e, d: AN.connected_components(e),
+    "connected_components_distributed": lambda e, d: _cc_distributed(e),
     "transitive_closure": lambda e, d: AN.transitive_closure(e),
     "pagerank": lambda e, d: AN.pagerank(e),
     "scc_closure": lambda e, d: AN.strongly_connected_components(e, "closure"),
