@@ -16,6 +16,10 @@ Scale design (100 TB):
   frees each checkpoint and cache the call made except those backing its
   result, also when the call raises. Loops free a superseded state with
   ``loopstate.free`` once its successor is materialized;
+- every multi-source BFS (``shortest_path_counts``, ``shortest_path_tree``,
+  ``landmark_distances``, the sampled-betweenness forward pass) is one
+  loop, ``_frontier_bfs``: one job per level, the settled set kept as
+  per-level slices, and broadcast hints taken from measured level sizes;
 - ``connected_components`` above that bound alternates large-star and
   small-star contraction, giving O(log n) rounds instead of O(d) on long
   chains;
@@ -32,7 +36,7 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from judy_graph_db_spark.loopstate import (Deferred, cache, checkpoint,
@@ -74,12 +78,9 @@ def _star_round(pairs: DataFrame, large: bool) -> DataFrame:
     window pass (one exchange of the O(|E|) relation) instead of the
     groupBy + join-back formulation, which exchanges it twice — measured
     ~20% faster at sf0.1 and strictly fewer big shuffles at scale. The
-    self-link row per u falls out of the same pass (row_number == 1).
-
-    r15: the per-u minimum comes from ``first(v)`` over the SAME sorted
-    window as the row_number (v is unique within u — adj is built from
-    the distinct canonical pairs — so the first row after the sort IS
-    the min), fusing the round's two Window operators into one
+    self-link row per u falls out of the same pass (row_number == 1), and
+    the minimum is ``first(v)`` over the SAME sorted window (v is unique
+    within u, so the first row after the sort IS the min): one
     Sort+Window pass over the O(|E|) relation.
     """
     adj = union_all([pairs.select(F.col("a").alias("u"), F.col("b").alias("v")),
@@ -1204,10 +1205,10 @@ def _scc_coloring(base: DataFrame, max_peel_rounds: int = 10_000,
     set only grows (empty growth set = fixpoint), and every peel round
     settles at least each color class's root — so the outer loop
     strictly shrinks the active node set and termination is guaranteed
-    without a round budget. Both sweeps propagate DELTAS (r13): a
+    without a round budget. Both sweeps propagate DELTAS: a
     changed/new FLAG rides inside the colors / in-SCC relation, so the
-    per-round edge join probes only last round's frontier, and since r14
-    the round costs exactly ONE job (a non-eager checkpoint whose
+    per-round edge join probes only last round's frontier, and the
+    round costs exactly ONE job (a non-eager checkpoint whose
     materializing aggregation also answers the fixpoint test via a
     max over the flags) — half the dense union-groupBy form's job count,
     with strictly smaller join inputs.
@@ -1229,20 +1230,17 @@ def _scc_coloring(base: DataFrame, max_peel_rounds: int = 10_000,
     "trim_iters": int}`` (test/diagnostic hook).
     """
     # non-eager setup: the first trim iteration's count job materializes
-    # both (r15 — was 2 eager setup jobs)
+    # both
     active_edges = checkpoint(base, eager=False)
     active_nodes = checkpoint(
         _endpoints(active_edges)
         .distinct(), eager=False)
     # settled accumulates as DISJOINT per-step slices (each backed by a
     # checkpoint that already exists: the trim round's trivial set / the
-    # peel round's in_scc relation), unioned ONCE at the end — the r13/
-    # r14 form re-checkpointed the GROWING settled relation every trim
-    # iteration (O(iterations · |settled|) writes; the exact quadratic-
-    # write shape shortest_path_counts shed in r14) and paid 3 eager
-    # checkpoint jobs per trim iteration besides. Now a trim iteration
-    # is ONE job: the emptiness count that materializes the trivial set
-    # AND, through lineage, the round's non-eager actives (r15).
+    # peel round's in_scc relation), unioned ONCE at the end, never
+    # re-checkpointed whole. A trim iteration is ONE job: the emptiness
+    # count that materializes the trivial set AND, through lineage, the
+    # round's non-eager actives.
     settled_parts: list = []
     pend_free: list = []  # superseded actives — freeable only once the
     #                       NEXT materializing job has run
@@ -1251,11 +1249,9 @@ def _scc_coloring(base: DataFrame, max_peel_rounds: int = 10_000,
         # 0. trim: settle degree-0-in-or-out nodes until none remain.
         # One (id)-keyed max-aggregation per iteration computes both
         # degree flags (map-side combined), and its count doubles as the
-        # emptiness check — r12 profiling showed the previous
-        # 2-distinct + 2-anti-join + 2-probe form spent ~6 jobs per
-        # iteration, and chain fixtures run O(chain length / 2)
-        # iterations (the bench fixture: 11), so trim dominated the
-        # coloring wall-time (CHANGELOG item 58)
+        # emptiness check; chain fixtures run O(chain length / 2)
+        # iterations (the bench fixture: 11), so this is the coloring's
+        # hot loop
         while True:
             keep = (
                 union_all([
@@ -1270,7 +1266,7 @@ def _scc_coloring(base: DataFrame, max_peel_rounds: int = 10_000,
                 .select("id")
             )
             # non-eager: the emptiness count materializes the round's
-            # trivial set — one job per trim iteration instead of two (r14)
+            # trivial set — one job per trim iteration
             trivial = checkpoint(active_nodes.join(
                 keep, "id", "left_anti"), eager=False)
             n_triv = trivial.count()
@@ -1300,7 +1296,7 @@ def _scc_coloring(base: DataFrame, max_peel_rounds: int = 10_000,
         fw_bw_rounds += 1
         # 1. forward sweep: color(v) = min id that reaches v (within the
         # active subgraph), by synchronous min propagation along edges.
-        # Delta-frontier form (r13): a `chg` flag rides in the colors
+        # Delta-frontier form: a `chg` flag rides in the colors
         # relation — a node's color can only drop when an in-neighbor's
         # dropped, so only flagged colors are pushed; the per-round cost
         # stays two jobs (checkpoint + cached emptiness probe), the
@@ -1319,8 +1315,7 @@ def _scc_coloring(base: DataFrame, max_peel_rounds: int = 10_000,
             old = colors
             # non-eager checkpoint: ONE aggregation job materializes the
             # round's colors AND answers the fixpoint test (max over the
-            # chg flags — r14; the r13 form paid a checkpoint job plus a
-            # probe job). The predecessor is freed only after that job.
+            # chg flags). The predecessor is freed only after that job.
             colors = checkpoint(
                 colors.join(mins, "id", "left")
                 .select(
@@ -1358,7 +1353,7 @@ def _scc_coloring(base: DataFrame, max_peel_rounds: int = 10_000,
                 .join(in_scc.select("id"), "id", "left_anti")
             )
             old = in_scc
-            # same one-job merge as the forward sweep (r14)
+            # same one-job merge as the forward sweep
             in_scc = checkpoint(
                 union_all([in_scc.select("id", "color", F.lit(False).alias("new")),
                            add.select("id", "color", F.lit(True).alias("new"))],
@@ -1369,7 +1364,7 @@ def _scc_coloring(base: DataFrame, max_peel_rounds: int = 10_000,
             if not any_new:
                 break
         # the materialized in_scc relation BACKS its settled slice —
-        # no re-checkpoint of the accumulator (r15, see setup comment)
+        # no re-checkpoint of the accumulator (see setup comment)
         settled_parts.append(in_scc.select("id", F.col("color").alias("scc")))
         # 3. peel: drop settled nodes and their incident edges (non-eager
         # — the next peel round's first trim count materializes them)
@@ -1837,8 +1832,7 @@ def maximal_matching(edges: DataFrame, seed: int = 7,
             F.min(F.struct("p", "a", "b")).alias("nm"))
         key = F.struct("p", "a", "b")
         # sel is materialized by nxt's count below (non-eager checkpoints
-        # share one job per round — r14; the r13 form paid 3 jobs/round:
-        # an emptiness probe plus two eager checkpoints). A non-empty
+        # share one job per round). A non-empty
         # active set always selects at least the global minimum edge, so
         # the count of the NEXT active set doubles as the loop test.
         sel = checkpoint(
@@ -2301,69 +2295,28 @@ def shortest_path_counts(edges: DataFrame, max_iter: int = 100) -> DataFrame:
     distinct shortest paths (the σ of Brandes' betweenness). Exact
     integers, so unlike fractional betweenness the result hash-gates.
 
-    All-sources simultaneous BFS carrying path counts: frontier k+1 =
-    frontier k ⋈ edges with ``sum(sigma)`` per (src, dst), anti-joined
-    against already-settled pairs (first settlement = min depth, and all
-    depth-k paths arrive in round k, so the sum is complete when written).
-    State is closure-sized — the :func:`transitive_closure` trade; rounds
-    = diameter (the loop exits on an empty frontier, so a generous
-    ``max_iter`` costs nothing after convergence — unlike the DOUBLING
-    closure this frontier is linear, one round per hop).
+    All-sources simultaneous BFS carrying path counts: the depth-1 edges
+    (sigma 1) seed :func:`_frontier_bfs` with ``sum(sigma)`` per (src,
+    dst), so first settlement = min depth and the sum is complete when
+    written. Seeding the edges rather than every src itself skips a
+    level whose only output is the edge set. State is closure-sized —
+    the :func:`transitive_closure` trade; rounds = diameter, up to
+    ``max_iter + 1`` hops, truncated silently (the loop exits on an
+    empty frontier, so a generous ``max_iter`` costs nothing after
+    convergence — unlike the DOUBLING closure this frontier is linear,
+    one round per hop).
     """
     base = _prep_edge_rel(edges)
-    first = checkpoint(base.select(
-        "src", "dst", F.lit(1).cast("long").alias("depth"),
-        F.lit(1).cast("long").alias("sigma"),
-    ), eager=False)
-    n = first.count()
-    slices = [first]
-    seen_rows = n
-    frontier = first
-    # co-partitioned edge side: base is hash(src)-partitioned+sorted+cached
-    # (see _prep_edge_rel), so the per-level join reads it with no Exchange
-    # and no Sort; the measured frontier / settled counts drive broadcast
-    # hints exactly as in _pivot_sigma_bfs (guide §2.4/§3.1). Per level is
-    # ONE job (the count materializing the non-eager checkpoint doubles as
-    # the emptiness probe); the settled side is a union of the per-level
-    # slice checkpoints, never a re-checkpointed whole (O(level) writes per
-    # level, not O(|closure|) — the r14 fix; the r13 form re-checkpointed
-    # the growing settled relation every round).
-    ej = base.select(F.col("src").alias("dst"), F.col("dst").alias("_to"))
-    settled_keys = first.select("src", "dst")
-    # the anti-join's settled side grows by one union branch per level —
-    # re-checkpoint it every _SEEN_COLLAPSE_LEVELS levels (exactly
-    # _pivot_sigma_bfs's scheme) so a deep-diameter graph at the default
-    # max_iter=100 pays O(levels) plan/analysis work per BFS, not
-    # O(levels²), and the per-level broadcast rebuilds from one flat
-    # LogicalRDD instead of an ever-larger union (r15, ADVICE item)
-    since_collapse = 0
-    for k in range(2, max_iter + 2):
-        if n == 0:
-            break
-        fr = F.broadcast(frontier) if n <= _BCAST_STATE_MAX_ROWS else frontier
-        sn = F.broadcast(settled_keys) \
-            if seen_rows <= _BCAST_STATE_MAX_ROWS else settled_keys
-        nxt = checkpoint(
-            fr.join(ej, "dst")
-            .groupBy("src", F.col("_to").alias("dst"))
-            .agg(F.sum("sigma").alias("sigma"))
-            .filter(F.col("src") != F.col("dst"))
-            .join(sn, ["src", "dst"], "left_anti")
-            .select("src", "dst", F.lit(k).cast("long").alias("depth"), "sigma"), eager=False)
-        n = nxt.count()
-        if n == 0:
-            break
-        slices.append(nxt)
-        settled_keys = union_all([settled_keys, nxt.select("src", "dst")], by_name=True)
-        seen_rows += n
-        since_collapse += 1
-        if since_collapse >= _SEEN_COLLAPSE_LEVELS:
-            settled_keys = checkpoint(settled_keys, eager=True)
-            since_collapse = 0
-        frontier = nxt
+    first = base.select(F.col("src").alias("s"), F.col("dst").alias("id"),
+                        F.lit(1).cast("long").alias("sigma"))
+    slices, _ = _frontier_bfs(base, first, max_iter,
+                              F.sum("sigma").alias("sigma"))
     # one self-contained checkpoint for the caller; the scope frees the
     # per-level slices, the collapsed settled sets and the edge relation
-    return checkpoint(union_all(slices, by_name=True), eager=True)
+    return checkpoint(union_all(
+        [sl.select(F.col("s").alias("src"), F.col("id").alias("dst"),
+                   F.lit(d + 1).cast("long").alias("depth"), "sigma")
+         for d, sl in enumerate(slices)], by_name=True), eager=True)
 
 
 def stress_centrality(edges: DataFrame, max_iter: int = 100) -> DataFrame:
@@ -2378,8 +2331,7 @@ def stress_centrality(edges: DataFrame, max_iter: int = 100) -> DataFrame:
     three keyed joins of the closure relation (on v, then on (s,t)) and
     one aggregation. Closure-sized intermediates — the documented trade.
     """
-    # shortest_path_counts already returns a self-contained checkpoint —
-    # re-checkpointing it here only paid a second O(closure) copy (r14)
+    # shortest_path_counts already returns a self-contained checkpoint
     C = shortest_path_counts(edges, max_iter=max_iter)
     a = C.select(F.col("src").alias("s"), F.col("dst").alias("v"),
                  F.col("depth").alias("d1"), F.col("sigma").alias("sig1"))
@@ -2502,39 +2454,23 @@ def shortest_path_tree(edges: DataFrame, sources: "list[int]",
     tie-break), NULL-free since every non-root tree node has one; roots
     are not emitted as members.
 
-    Frontier loop with a global visited set per root: each round is one
-    frontier→edges equi-join + a (root, node) min-struct partial agg +
-    one anti-join against the settled relation — O(frontier) work per
-    round, rounds = eccentricity, same shape the pattern compiler's
-    unbounded repeat uses. ``sources`` is a literal list (broadcast-sized
-    by construction).
+    :func:`_frontier_bfs` from every root with ``min(pred)`` as the
+    level aggregate — O(frontier) work per round, rounds = eccentricity,
+    truncated at ``max_iter``. Self-loops never settle a node, so the
+    loop reads :func:`_prep_edge_rel`. ``sources`` is a literal list
+    (broadcast-sized by construction).
     """
     spark = edges.sparkSession
-    e = checkpoint(edges.select("src", "dst").distinct(), eager=True)
-    frontier = checkpoint(
-        local_df(spark, [(int(s),) for s in sources], "id BIGINT")
-        .distinct()
-        .select(F.col("id").alias("root"), F.col("id").alias("id")), eager=True)
-    settled = checkpoint(frontier.select("root", "id"), eager=True)
-    parts = []
-    for depth in range(1, max_iter + 1):
-        if frontier.limit(1).count() == 0:
-            break
-        nxt = checkpoint(
-            frontier.join(e.withColumnRenamed("src", "id"), "id")
-            .select("root", F.col("dst").alias("id"),
-                    F.col("id").alias("__p"))
-            .join(settled, ["root", "id"], "left_anti")
-            .groupBy("root", "id")
-            .agg(F.min("__p").alias("parent")), eager=True)
-        parts.append(nxt.select(
-            "root", "id", F.lit(depth).cast("long").alias("depth"), "parent"))
-        settled = checkpoint(union_all([settled, nxt.select("root", "id")],
-                            by_name=True), eager=True)
-        frontier = nxt.select("root", "id")
-    if not parts:
+    roots = sorted({int(r) for r in sources})
+    seeds = local_df(spark, [(r, r) for r in roots], "s BIGINT, id BIGINT")
+    slices, _ = _frontier_bfs(_prep_edge_rel(edges), seeds, max_iter,
+                              F.min("pred").alias("parent"))
+    if len(slices) == 1:
         return local_df(spark, [], "root BIGINT, id BIGINT, depth BIGINT, parent BIGINT")
-    return union_all(parts, by_name=True)
+    return union_all(
+        [sl.select(F.col("s").alias("root"), "id",
+                   F.lit(d).cast("long").alias("depth"), "parent")
+         for d, sl in enumerate(slices) if d], by_name=True)
 
 
 def shortest_path_tree_sql(edges_sql: str, sources: "list[int]",
@@ -2633,8 +2569,8 @@ def wl_colors(edges: DataFrame, rounds: int = 2,
     sort; r rounds ⇒ r shuffles, state O(nodes).
 
     The returned plan is LAZY for up to the last 7 rounds (checkpoints
-    land every 8th round only — the r14 change that removed a per-round
-    eager job + full |V| materialization): a caller that triggers MANY
+    land every 8th round only, not one eager job + full |V|
+    materialization per round): a caller that triggers MANY
     actions on the result recomputes those tail rounds per action, so
     checkpoint ``wl_colors(...)`` first when reusing it.
     """
@@ -2665,9 +2601,8 @@ def wl_colors(edges: DataFrame, rounds: int = 2,
         )
         # fixed small round counts stay one LAZY pipeline (the caller's
         # action computes all rounds in one job); checkpoint only every
-        # 8 rounds to bound lineage on long refinements — the r13 form
-        # paid an eager checkpoint job + a full |V| materialization per
-        # round (pagerank's loop discipline, applied here in r14)
+        # 8 rounds to bound lineage on long refinements (pagerank's loop
+        # discipline)
         if (i + 1) % 8 == 0 and i + 1 < rounds:
             colors = checkpoint(colors, eager=True)
     # the scope frees the superseded checkpoints; the LAST one backs the
@@ -2772,8 +2707,8 @@ def diameter_double_sweep(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     to "how deep is this graph" that an exact all-pairs diameter (a full
     closure) cannot afford at 100 TB.
 
-    Two frontier BFS passes (each O(frontier) per round like
-    :func:`shortest_path_tree`); the two single-row pivots (min id,
+    Two :func:`_frontier_bfs` passes (two :func:`shortest_path_tree`
+    calls, O(frontier) per round); the two single-row pivots (min id,
     argmax depth) are bounded driver scalars, not data collections.
     """
     sym = checkpoint(_symmetric(edges), eager=True)
@@ -3003,20 +2938,20 @@ def landmark_distances(edges: DataFrame, n_landmarks: int = 4,
     standard highest-centrality-first heuristic. Returns ``(landmark, id,
     depth)`` INCLUDING the landmark's own depth-0 row.
 
-    One BFS round = frontier-adjacency equi-join + (landmark, id)
-    min-struct partial agg + anti-join against settled — O(frontier) per
-    round, k landmarks ride the same joins (multi-source BFS), rounds
-    bounded by eccentricity. The landmark list itself is a k-row driver
-    collect (bounded by construction).
+    One :func:`_frontier_bfs` over all k landmarks (deduplicated levels,
+    no aggregate) — O(frontier) per round, rounds bounded by
+    eccentricity and truncated at ``max_iter``. The landmark list itself
+    is a k-row driver collect (bounded by construction); degrees count
+    self-loops, as the twin does, so they are taken over the input
+    relation rather than the BFS's self-loop-free one.
 
     Parity-plus vs the reference (depth queries exist only per-source via
     ``***`` closures; SURVEY.md §2.7).
     """
     if n_landmarks <= 0:
         raise ValueError("n_landmarks must be positive")
-    e = checkpoint(edges.select("src", "dst").distinct(), eager=True)
     deg = (
-        _endpoints(e)
+        _endpoints(edges.select("src", "dst").distinct())
         .groupBy("id").agg(F.count(F.lit(1)).alias("deg"))
         .orderBy(F.col("deg").desc(), F.col("id").asc())
         .limit(int(n_landmarks))
@@ -3025,25 +2960,12 @@ def landmark_distances(edges: DataFrame, n_landmarks: int = 4,
     spark = edges.sparkSession
     if not marks:
         return local_df(spark, [], "landmark BIGINT, id BIGINT, depth BIGINT")
-    frontier = checkpoint(local_df(
-        spark, [(m, m) for m in marks], "landmark BIGINT, id BIGINT"
-    ), eager=True)
-    settled = frontier
-    levels = [frontier.select(
-        "landmark", "id", F.lit(0).cast("long").alias("depth"))]
-    for depth in range(1, max_iter + 1):
-        if frontier.limit(1).count() == 0:
-            break
-        nxt = checkpoint(
-            frontier.join(e.withColumnRenamed("src", "id"), "id")
-            .select("landmark", F.col("dst").alias("id"))
-            .join(settled, ["landmark", "id"], "left_anti")
-            .distinct(), eager=True)
-        levels.append(nxt.select(
-            "landmark", "id", F.lit(depth).cast("long").alias("depth")))
-        settled = checkpoint(union_all([settled, nxt], by_name=True), eager=True)
-        frontier = nxt
-    return checkpoint(union_all(levels, by_name=True), eager=True)
+    seeds = local_df(spark, [(m, m) for m in marks], "s BIGINT, id BIGINT")
+    slices, _ = _frontier_bfs(_prep_edge_rel(edges), seeds, max_iter)
+    return checkpoint(union_all(
+        [sl.select(F.col("s").alias("landmark"), "id",
+                   F.lit(d).cast("long").alias("depth"))
+         for d, sl in enumerate(slices)], by_name=True), eager=True)
 
 
 def landmark_distances_sql(edges_sql: str, n_landmarks: int = 4,
@@ -3151,10 +3073,14 @@ def greedy_coloring(edges: DataFrame, max_iter: int = 64,
     nodes = checkpoint(
         adj.select(F.col("a").alias("id")).distinct()
         .select("id", pri.alias("pri")), eager=True)
+    # colored is the union of the per-round slices, re-checkpointed every
+    # _SEEN_COLLAPSE_LEVELS rounds to keep its plan flat; uncolored
+    # shrinks, and its materializing count is also the emptiness test
     colored = local_df(spark, [], "id BIGINT, color BIGINT, round BIGINT")
     uncolored = nodes
+    remaining = nodes.count()
     for rnd in range(1, max_iter + 1):
-        if uncolored.limit(1).count() == 0:
+        if remaining == 0:
             break
         # does an uncolored node still have a higher-priority uncolored
         # neighbor? (priority = (pri, id) lexicographic, collision-safe)
@@ -3183,9 +3109,11 @@ def greedy_coloring(edges: DataFrame, max_iter: int = 64,
                    "sequence(1, size(used) + 1), used))").alias("color"),
             F.lit(rnd).cast("long").alias("round"),
         ), eager=True)
-        colored = checkpoint(union_all([colored, newly], by_name=True), eager=True)
-        uncolored = checkpoint(uncolored.join(newly.select("id"), "id", "left_anti"), eager=True)
-    remaining = uncolored.limit(1).count()
+        colored = union_all([colored, newly], by_name=True)
+        if rnd % _SEEN_COLLAPSE_LEVELS == 0:
+            colored = checkpoint(colored, eager=True)
+        uncolored = checkpoint(uncolored.join(newly.select("id"), "id", "left_anti"))
+        remaining = uncolored.count()
     if remaining:
         raise AssertionError(
             f"greedy_coloring: nodes uncolored after {max_iter} rounds — "
@@ -3272,8 +3200,8 @@ def betweenness_centrality(edges: DataFrame,
     restricted sum (unit-tested equal to the closure composition), but
     over the k·|V| pivot BFS relation; the all-pairs closure is never
     materialized (the b-leg of the triple join inherently reads the
-    whole closure, so merely filtering the s-leg never shrank the
-    state — the r12 fix mirrors :func:`edge_betweenness`'s).
+    whole closure, so merely filtering the s-leg never shrinks the
+    state; :func:`edge_betweenness` routes its ``sources=`` the same way).
     ``max_iter`` keeps the closure path's ≤ max_iter+1-hop horizon
     convention, truncating at the bound instead of erroring. With
     ``closure=`` given, the triple join runs as before (right when the
@@ -3478,7 +3406,7 @@ def girvan_newman_split(edges: DataFrame, n_removals: int = 1,
     # "key not found" (seen on the 7-label tpch_graph edges view) —
     # checkpointing the bare (src, dst) projection up front gives every
     # downstream checkpoint a plain LogicalRDD base
-    # non-eager e0: all_nodes' eager checkpoint job materializes it (r14);
+    # non-eager e0: all_nodes' eager checkpoint job materializes it;
     # und0 is likewise materialized by its first consumer (the dispatch
     # count, the modularity baseline, or round 1's edge prep)
     e0 = checkpoint(edges.select("src", "dst"), eager=False)
@@ -3527,7 +3455,7 @@ def girvan_newman_split(edges: DataFrame, n_removals: int = 1,
     # per-edge sums, same micro-rounded tie-break).
     eb_cache = None   # (src, dst, betweenness) over the CURRENT und
     comp = None       # (id, component) over all_nodes for the CURRENT und
-    # r15 (guide §1.2 — don't compute things you throw away): the
+    # (guide §1.2 — don't compute things you throw away): the
     # removal sequence never reads the labels, so all label work is
     # DEFERRED into the returned labels DataFrame (computed on first
     # access, see loopstate.Deferred) unless pick="modularity" consumes
@@ -3568,9 +3496,8 @@ def girvan_newman_split(edges: DataFrame, n_removals: int = 1,
     @scoped
     def _sampled_top(und: DataFrame) -> list:
         # max_iter+1 hops, silently truncated — exactly the depth the
-        # exact branch's closure settles (its frontier loop runs
-        # range(2, max_iter+2)), keeping the two modes' path sets
-        # identical at any diameter. The round's BFS state is freed
+        # exact branch's shortest_path_counts settles, keeping the two
+        # modes' path sets identical at any diameter. The round's BFS state is freed
         # when this scope returns the collected row.
         return _top(_sampled_betweenness(
             und, n_pivots, seed, max_iter + 1, scale=True, pivots=None,
@@ -3612,7 +3539,7 @@ def girvan_newman_split(edges: DataFrame, n_removals: int = 1,
             comp = new_comp
             if not last:
                 # eb_cache serves ONLY the next round's argmax — on the
-                # final round the update is dead work in every mode (r15)
+                # final round the update is dead work in every mode
                 C = shortest_path_counts(sub, max_iter=max_iter)
                 eb_sub = edge_betweenness(sub, closure=C)
                 new_cache = checkpoint(union_all(
@@ -3670,9 +3597,10 @@ def girvan_newman_split(edges: DataFrame, n_removals: int = 1,
     return rem_df, labels
 
 
-#: re-checkpoint the pivot-BFS settled set every this many levels —
-#: bounds the anti-join plan depth on deep-diameter graphs while keeping
-#: the extra full-relation writes to 1/32 of rounds
+#: re-checkpoint a growing union of per-level slices (the frontier BFS's
+#: settled set, greedy_coloring's colored set) every this many levels —
+#: bounds the plan depth on deep-diameter graphs while keeping the extra
+#: full-relation writes to 1/32 of rounds
 _SEEN_COLLAPSE_LEVELS = 32
 
 #: broadcast a per-level BFS state relation (frontier / settled set /
@@ -3729,79 +3657,63 @@ def _prep_edge_rel(edges: DataFrame, dedup: bool = True) -> DataFrame:
     return e
 
 
-def _pivot_sigma_bfs(e: DataFrame, pivots: DataFrame, max_iter: int,
-                     horizon: bool = False):
-    """Forward σ-accumulating multi-source BFS from a pivot relation:
-    per-level checkpointed slices of the k·|V|-bounded relation
-    ``(s, id, sigma)`` with slice index = depth = d(s, id) and sigma =
-    σ_s(id) — all pivots riding the same frontier joins (the
-    :func:`landmark_distances` scheme with a ``sum(sigma)`` instead of
-    a min; one settled depth slice per BFS level, anti-joined so first
-    settlement = min depth and the σ sum is complete when written).
-    Returns ``(slices, counts)``: the per-level DataFrames and their
-    EXACT row counts (level = list index = depth) — each level
-    materializes with ONE job (non-eager localCheckpoint whose first
-    action is the count, which doubles as the emptiness test; the r13
-    form paid a second probe job per level). Empty levels are neither
-    appended nor re-scanned.
+def _frontier_bfs(e: DataFrame, seeds: DataFrame, max_iter: int,
+                  agg: Column | None = None):
+    """The multi-source frontier BFS every BFS-shaped operator here runs:
+    per-level checkpointed slices of a relation keyed ``(s, id)``, where
+    ``s`` is the source a row belongs to and ``id`` a node reached from
+    it. ``seeds(s, id, …)`` is level 0 — each source itself, at hop
+    distance = slice index, or (:func:`shortest_path_counts`) its
+    out-edges, one hop further. Level k+1 is level k ⋈ ``e`` on ``id``,
+    minus the rows that return to ``s`` and every settled ``(s, id)``
+    (left anti-join: first settlement = min depth), then grouped by
+    ``(s, id)`` with ``agg`` — or deduplicated when ``agg`` is None. ``agg`` reads the joined rows: the frontier's own columns, with
+    ``id`` the new node and ``pred`` the frontier node it was reached
+    from. All depth-k paths arrive in round k, so an aggregate such as
+    ``sum(sigma)`` (σ_s(id), the Brandes path count) or ``min(pred)``
+    (a deterministic BFS-tree parent) is complete when written.
 
-    Join strategy per level (guide §2.4/§3.1): ``e`` comes from
-    :func:`_prep_edge_rel` — hash(src)-partitioned, sorted, cached — so
-    the edge side of the frontier⋈edges join needs no Exchange and no
-    Sort at any scale; when the measured frontier (or settled set) is
-    ≤ ``_BCAST_STATE_MAX_ROWS`` it is additionally broadcast, removing
-    the remaining exchanges entirely. The anti-join's settled side is
+    Per level the loop runs ONE job: a non-eager checkpoint whose
+    materializing count doubles as the emptiness test. The settled side
+    is a union of the per-level slices, never a re-written whole; it is
     re-checkpointed every ``_SEEN_COLLAPSE_LEVELS`` levels so
-    deep-diameter graphs pay linear, not quadratic, plan work. Every
-    checkpoint is owned by the caller's scope. ``horizon=True``
-    truncates at ``max_iter`` hops — bounded-horizon semantics (only
-    paths of ≤ max_iter hops count) — otherwise an unsettled frontier
-    raises.
+    deep-diameter graphs pay linear, not quadratic, plan work. ``e``
+    comes from :func:`_prep_edge_rel`, so the edge side of the join
+    needs no Exchange and no Sort at any scale; a frontier or settled
+    set whose MEASURED count is ≤ ``_BCAST_STATE_MAX_ROWS`` is also
+    broadcast, removing the remaining exchanges (guide §2.4/§3.1).
+    Every checkpoint is owned by the caller's scope.
+
+    Returns ``(slices, counts)``: the non-empty levels (list index =
+    depth) and their exact row counts. At most ``max_iter`` levels past
+    the seeds run; a caller that must not truncate checks
+    ``len(slices) > max_iter``.
     """
-    frontier = checkpoint(pivots.select(
-        F.col("id").alias("s"), "id",
-        F.lit(1).cast("long").alias("sigma")), eager=False)
+    frontier = checkpoint(seeds, eager=False)
     n = frontier.count()
-    slices = [frontier]
-    counts = [n]
-    # the anti-join's settled side grows by one union branch per level;
-    # re-checkpointing it every _SEEN_COLLAPSE_LEVELS collapses the plan
-    # back to a single LogicalRDD, so a deep-diameter graph (chains at
-    # full horizon) pays O(rounds) plan work, not O(rounds²) — the
-    # amortized cost is one O(|seen|) write per window (VERDICT r12
-    # watch item 1)
-    seen = frontier.select("s", "id")
-    seen_rows = n
-    since_collapse = 0
-    ej = e.withColumnRenamed("src", "id")
-    for _depth in range(1, max_iter + 1):
-        if n == 0:
-            break
+    slices, counts = [frontier], [n]
+    settled = frontier.select("s", "id")
+    ej = e.withColumnRenamed("src", "pred")
+    while n and len(slices) <= max_iter:
         fr = F.broadcast(frontier) if n <= _BCAST_STATE_MAX_ROWS else frontier
-        sn = F.broadcast(seen) if seen_rows <= _BCAST_STATE_MAX_ROWS else seen
+        sn = F.broadcast(settled) \
+            if sum(counts) <= _BCAST_STATE_MAX_ROWS else settled
+        step = (fr.withColumnRenamed("id", "pred").join(ej, "pred")
+                .withColumnRenamed("dst", "id")
+                .filter(F.col("s") != F.col("id"))
+                .join(sn, ["s", "id"], "left_anti"))
         nxt = checkpoint(
-            fr.join(ej, "id")
-            .select("s", F.col("dst").alias("id"), "sigma")
-            .join(sn, ["s", "id"], "left_anti")
-            .groupBy("s", "id").agg(F.sum("sigma").alias("sigma")), eager=False)
+            step.select("s", "id").distinct() if agg is None
+            else step.groupBy("s", "id").agg(agg), eager=False)
         n = nxt.count()
-        if n == 0:
+        if not n:
             break
         slices.append(nxt)
         counts.append(n)
-        seen = union_all([seen, nxt.select("s", "id")], by_name=True)
-        seen_rows += n
-        since_collapse += 1
-        if since_collapse >= _SEEN_COLLAPSE_LEVELS:
-            seen = checkpoint(seen, eager=True)
-            since_collapse = 0
+        settled = union_all([settled, nxt.select("s", "id")], by_name=True)
+        if (len(slices) - 1) % _SEEN_COLLAPSE_LEVELS == 0:
+            settled = checkpoint(settled, eager=True)
         frontier = nxt
-    else:
-        if not horizon and n:
-            raise RuntimeError(
-                f"pivot sigma-BFS not settled in {max_iter} rounds "
-                "— raise max_iter (or pass horizon=True for "
-                "bounded-horizon betweenness)")
     return slices, counts
 
 
@@ -3820,9 +3732,8 @@ def _brandes_backward(slices: list, counts: list, e: DataFrame,
     aggregation per level. Returns ``(node_parts, edge_parts)`` —
     per-level relations the caller unions and aggregates.
 
-    r14 shape: consuming the slices directly (instead of ``depth == d``
-    filters over their union) drops the max-depth aggregation job —
-    ``maxd = len(slices) - 1`` is already known; per-level relations
+    The slices are consumed directly (no ``depth == d`` filters over
+    their union, so ``maxd = len(slices) - 1`` needs no job); per-level relations
     whose exact counts are small are broadcast into their joins, and
     ``e`` is the :func:`_prep_edge_rel` cached relation, so a level
     with small state runs with zero exchanges on the edge side. In
@@ -3901,9 +3812,8 @@ def betweenness_sampled(edges: DataFrame, n_pivots: int = 16,
 
     Scale shape — this is the 100 TB path: state is the k·|V| pivot
     BFS relation (``(s, v, depth, σ)``), never the |V|² closure.
-    Forward: :func:`_pivot_sigma_bfs` — the :func:`landmark_distances`
-    multi-source BFS with a σ-accumulating ``(s, dst)`` sum instead of
-    a min; all k pivots ride the same frontier joins, O(frontier) per
+    Forward: :func:`_frontier_bfs` with a σ-accumulating ``(s, id)``
+    sum; all k pivots ride the same frontier joins, O(frontier) per
     round. Backward: :func:`_brandes_backward` — Brandes' accumulation
     level-synchronously from the deepest BFS layer up, per level one
     edge join between adjacent depth slices and one ``(s, v)``
@@ -4002,7 +3912,15 @@ def _sampled_betweenness(edges: DataFrame, n_pivots: int, seed: int,
     k = pick.count()
     if k == 0:
         return local_df(spark, [], schema)
-    slices, counts = _pivot_sigma_bfs(e, pick, max_iter, horizon=horizon)
+    seeds = pick.select(F.col("id").alias("s"), "id",
+                        F.lit(1).cast("long").alias("sigma"))
+    slices, counts = _frontier_bfs(e, seeds, max_iter,
+                                   F.sum("sigma").alias("sigma"))
+    if not horizon and len(slices) > max_iter:
+        raise RuntimeError(
+            f"pivot sigma-BFS not settled in {max_iter} rounds "
+            "— raise max_iter (or pass horizon=True for "
+            "bounded-horizon betweenness)")
     node_parts, edge_parts = _brandes_backward(slices, counts, e,
                                                want_edges=want_edges)
     parts = edge_parts if want_edges else node_parts

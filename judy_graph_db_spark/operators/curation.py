@@ -1381,48 +1381,6 @@ def c4_line_filter(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def c4_page_signals(docs: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text",
-                    bad_words: tuple = ()) -> DataFrame:
-    """Per-document C4 page-level signals (Raffel et al. 2020 SS2.2),
-    computed over whatever text column is given (the published pipeline
-    applies them AFTER the line filter -- compose with
-    :func:`c4_line_filter`, or use :func:`c4_quality_filter` which does):
-
-    - ``n_sentences``: ``[.!?]+``-delimited segments containing an
-      alphanumeric (the "at least 5 sentences" rule's unit).
-    - ``has_lorem``: 1 iff the page contains the phrase "lorem ipsum"
-      (case-insensitive) -- the placeholder-text rule.
-    - ``has_curly``: 1 iff the page contains a curly bracket -- the
-      code-exclusion rule.
-    - ``bad_word_hits``: how many DISTINCT entries of ``bad_words``
-      appear as lowercase whitespace words. The published pipeline uses
-      the LDNOOBW blocklist, which is a user-supplied asset -- the
-      default here is the empty tuple (0 hits), and tests inject a
-      synthetic list.
-
-    Pure Column expressions, scan-stage. Returns
-    ``(id, n_sentences, has_lorem, has_curly, bad_word_hits)``.
-    """
-    from judy_graph_db_spark.functions.text import sentence_count
-    t = F.col(text_col)
-    words = F.filter(F.split(t, r"\s+"), lambda w: w != F.lit(""))
-    if bad_words:
-        bw = F.size(F.array_intersect(
-            F.array_distinct(F.transform(words, F.lower)),
-            F.array(*[F.lit(str(w).lower()) for w in bad_words]))) \
-            .cast("long")
-    else:
-        bw = F.lit(0).cast("long")
-    return docs.select(
-        F.col(id_col),
-        sentence_count(t).alias("n_sentences"),
-        F.lower(t).contains("lorem ipsum").cast("long").alias("has_lorem"),
-        t.contains("{").cast("long").alias("has_curly"),
-        bw.alias("bad_word_hits"),
-    )
-
-
 def c4_quality_filter(docs: DataFrame, id_col: str = "doc_id",
                       text_col: str = "text",
                       min_words_per_line: int = C4_MIN_WORDS_PER_LINE,

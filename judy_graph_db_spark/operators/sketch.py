@@ -43,7 +43,7 @@ module is the parity-plus replacement for that RAM-residency assumption.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from judy_graph_db_spark.schema import local_df, union_all
 
@@ -424,37 +424,3 @@ def log_histogram(df: DataFrame, value_col: str,
          .cast("long").alias("bin"))
     return (df.select(*g, b)
             .groupBy(*g, "bin").agg(F.count(F.lit(1)).alias("n")))
-
-
-def histogram_quantile(hist: DataFrame, q_permille: int,
-                       group_cols=()) -> DataFrame:
-    """Quantile bounds from a :func:`log_histogram` relation: per group,
-    the bin where the ⌈q·n/1000⌉-th smallest value falls, with its exact
-    integer value bounds ``[2^bin, 2^(bin+1) − 1]`` (bin −1 → [0, 0]).
-    The histogram is aggregate-sized (≤ 64 rows per group), so the
-    cumulative window is free. Returns ``(group_cols…, q_bin, lo, hi)``.
-    """
-    if not 0 < q_permille <= 1000:
-        raise ValueError("q_permille must be in 1..1000")
-    g = list(group_cols)
-    wc = (Window.partitionBy(*g) if g else Window.partitionBy()) \
-        .orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
-    wt = Window.partitionBy(*g) if g else Window.partitionBy()
-    cum = hist.select(
-        *g, "bin",
-        F.sum("n").over(wc).alias("__cum"),
-        F.sum("n").over(wt).alias("__tot"))
-    target = F.expr(f"({q_permille} * __tot + 999) div 1000")
-    return (
-        cum.filter(F.col("__cum") >= target)
-        .groupBy(*g).agg(F.min("bin").alias("q_bin"))
-        .select(
-            *g, "q_bin",
-            F.when(F.col("q_bin") < 0, F.lit(0))
-            .otherwise(F.shiftleft(F.lit(1), F.col("q_bin").cast("int")))
-            .cast("long").alias("lo"),
-            F.when(F.col("q_bin") < 0, F.lit(0))
-            .otherwise(F.shiftleft(F.lit(1),
-                                   F.col("q_bin").cast("int") + 1) - 1)
-            .cast("long").alias("hi"))
-    )

@@ -66,7 +66,7 @@ def main():
 
     # one forward BFS level + one backward level of the sampled
     # betweenness machinery (the loop bodies the bench entries repeat)
-    from judy_graph_db_spark.operators.analytics import _pivot_sigma_bfs
+    from judy_graph_db_spark.operators.analytics import _frontier_bfs
 
     e = (chains.filter(F.col("src") != F.col("dst"))
          .select("src", "dst").distinct().localCheckpoint(eager=True))
@@ -76,7 +76,9 @@ def main():
         F.md5(F.concat_ws("|", F.lit("piv0"),
                           F.col("id").cast("string"))).asc(),
         F.col("id").asc()).limit(16).localCheckpoint(eager=True)
-    sp = _pivot_sigma_bfs(e, pick, 3, horizon=True)
+    sp = _frontier_bfs(e, pick.select(F.col("id").alias("s"), "id",
+                                      F.lit(1).cast("long").alias("sigma")),
+                       3, F.sum("sigma").alias("sigma"))
     if isinstance(sp, tuple):  # after: (slices, counts)
         slices, counts = sp
         lvl = slices[-1]

@@ -74,7 +74,7 @@ def main():
             und0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         ).distinct().localCheckpoint(eager=True))
         from judy_graph_db_spark.operators.analytics import (
-            _brandes_backward, _pivot_sigma_bfs)
+            _brandes_backward, _frontier_bfs)
 
         try:
             from judy_graph_db_spark.operators.analytics import _prep_edge_rel
@@ -92,7 +92,10 @@ def main():
                               F.col("id").cast("string"))).asc(),
             F.col("id").asc()).limit(16).localCheckpoint(eager=True))
         sp = tsec("sigma BFS (9 levels)",
-                  lambda: _pivot_sigma_bfs(e, pick, 9, horizon=True))
+                  lambda: _frontier_bfs(
+                      e, pick.select(F.col("id").alias("s"), "id",
+                                     F.lit(1).cast("long").alias("sigma")),
+                      9, F.sum("sigma").alias("sigma")))
         if isinstance(sp, tuple):
             slices, cnts = sp
             parts = tsec("brandes backward",

@@ -98,3 +98,24 @@ def test_graph_create_materializes(spark):
         (F.col("src") == 1) & (F.col("label") == "Raises") & (F.col("dst") == 6)
     )
     assert got.count() == 1
+
+
+def test_reference_parity_scans_and_key_lookups(spark):
+    g = f2_issue_tracker(spark)
+    # adjacentEdgesByAttr: the four forward Raises edges of node 0
+    got = sorted(tuple(r) for r in adj.adjacent_edges_by_attr(g, 0, "Raises").collect())
+    assert got == [("Raises", s, False) for s in (1, 2, 3, 4)]
+    # allChildNodesFromEdges: (src, label, edge_seq) keys resolve to targets
+    keys = spark.createDataFrame([(0, "Raises", 2), (0, "Raises", 3)],
+                                 "src long, label string, edge_seq int")
+    got = sorted(tuple(r) for r in adj.all_child_nodes_from_edges(g, keys).collect())
+    assert got == [(0, "Raises", 2, 4), (0, "Raises", 3, 5)]
+    # filterEdgesTo, semi-join flavor: every row whose target is 6 or 7
+    targets = spark.createDataFrame([(6,), (7,)], "id long")
+    got = sorted((r.src, r.dst) for r in adj.filter_edges_to_nodes(g, targets).collect())
+    assert got == [(0, 6), (1, 7), (4, 6)]
+    # getNodeEdges / nodeElems / nodeKeys: full dumps
+    assert adj.get_node_edges(g).count() == 22  # 11 fwd + 11 back
+    assert sorted(r.label for r in adj.node_elems(g).collect()) == [
+        "ISSUE"] * 4 + ["ORGANISATION"] + ["PROGRAMMER"] * 2 + ["PULL_REQUEST"]
+    assert sorted(r.id for r in adj.node_keys(g).collect()) == list(range(8))

@@ -1386,9 +1386,54 @@ def test_landmark_distances_and_upper(spark):
     )).fetchall())
     assert twin_u == sorted((u, v, d) for (u, v), d in up2.items())
 
+    # a self-loop counts twice toward the ranking degree, as in the twin:
+    # it lifts node 2 (4 -> 6) over node 0 (4, and the smaller id)
+    base3 = [(0, 1), (0, 2), (2, 3)]
+    sym3 = base3 + [(b, a) for a, b in base3] + [(2, 2)]
+    ld3 = sorted(tuple(r) for r in AN.landmark_distances(
+        edges_df(spark, sym3), n_landmarks=1).collect())
+    assert ld3 == [(2, 0, 1), (2, 1, 2), (2, 2, 0), (2, 3, 1)]
+    values3 = ", ".join(f"({a}, {b})" for a, b in sym3)
+    assert ld3 == sorted(tuple(t) for t in con.execute(
+        AN.landmark_distances_sql(
+            f"SELECT * FROM (VALUES {values3}) AS t(src, dst)",
+            n_landmarks=1)).fetchall())
+
     import pytest as _pt
     with _pt.raises(ValueError, match="positive"):
         AN.landmark_distances(e, n_landmarks=0)
+
+
+def test_frontier_bfs_one_job_per_level(spark):
+    """landmark_distances and shortest_path_tree on a 31-node path run
+    one BFS level per hop (29 and 30 levels here). Under the session's
+    own config (AQE on) a level costs its materializing count, its
+    stage jobs and the broadcasts of its frontier and settled set —
+    about 5 jobs. A loop that re-checkpoints the whole settled set and
+    probes the frontier separately every level ran about 10."""
+    sc = spark.sparkContext
+    n = 31
+    e = edges_df(spark, [(i, i + 1) for i in range(n - 1)])
+
+    def run(group, fn):
+        sc.setJobGroup(group, "frontier BFS job-count assertion")
+        try:
+            rows = fn().collect()
+        finally:
+            sc.setJobGroup(None, None)
+        return rows, len(sc._jsc.sc().statusTracker().getJobIdsForGroup(group))
+
+    ld, ld_jobs = run("bfs-jobs-ld", lambda: AN.landmark_distances(
+        e, n_landmarks=1, max_iter=n))
+    spt, spt_jobs = run("bfs-jobs-spt", lambda: AN.shortest_path_tree(
+        e, [0], max_iter=n))
+    # node 1 is the top-degree node (degree 2, smallest id)
+    assert sorted((r.id, r.depth) for r in ld) == [(v, v - 1) for v in range(1, n)]
+    assert sorted((r.id, r.depth, r.parent) for r in spt) == [
+        (v, v, v - 1) for v in range(1, n)]
+    levels = n - 1
+    assert ld_jobs <= 6 * levels + 10, f"landmark_distances ran {ld_jobs} jobs"
+    assert spt_jobs <= 6 * levels + 10, f"shortest_path_tree ran {spt_jobs} jobs"
 
 
 def test_greedy_coloring(spark):
@@ -1924,8 +1969,11 @@ def test_pivot_sigma_bfs_deep_chain_collapses_seen(spark):
 
     @loopstate.scoped  # frees the BFS state on return
     def check_levels():
-        slices, counts = AN._pivot_sigma_bfs(
-            AN._prep_edge_rel(e.select("src", "dst")), piv, max_iter=n + 5)
+        seeds = piv.select(F.col("id").alias("s"), "id",
+                           F.lit(1).cast("long").alias("sigma"))
+        slices, counts = AN._frontier_bfs(
+            AN._prep_edge_rel(e.select("src", "dst")), seeds,
+            max_iter=n + 5, agg=F.sum("sigma").alias("sigma"))
         assert sum(counts) == n and len(slices) == n
         for depth, (sl, cnt) in enumerate(zip(slices, counts)):
             rows = sl.collect()
