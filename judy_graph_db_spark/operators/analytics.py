@@ -9,7 +9,12 @@ variable-length-path loop in ``plans/compiler.py`` (SURVEY.md §4.3).
 Scale design (100 TB):
 - every iteration is ONE shuffle keyed on the join column; frontiers
   stay distributed. The driver collects only 1-row aggregates, argmaxes
-  and ``connected_components`` pair sets of ≤ ``_LOCAL_CC_MAX_PAIRS``;
+  and, through one seam (``_driver_rows``), relations of at most
+  ``_LOCAL_MAX_ROWS`` rows: ``connected_components``' pairs,
+  ``minplus_closure``'s base pairs and ``pagerank``'s links. Such a call
+  computes on the driver and returns a local relation; the size is the
+  count of the checkpoint or cache the distributed plan materializes
+  anyway;
 - each iteration checkpoints the state DataFrame (``loopstate.checkpoint``)
   so lineage (and the Catalyst plan) stays flat no matter how many rounds
   run; every public operator runs in a ``loopstate.scoped`` scope, which
@@ -20,28 +25,31 @@ Scale design (100 TB):
   ``landmark_distances``, the sampled-betweenness forward pass) is one
   loop, ``_frontier_bfs``: one job per level, the settled set kept as
   per-level slices, and broadcast hints taken from measured level sizes;
-- ``connected_components`` above that bound alternates large-star and
+- ``connected_components`` above the bound alternates large-star and
   small-star contraction, giving O(log n) rounds instead of O(d) on long
   chains;
 - ``triangle_count`` canonicalizes to the ``a < b`` undirected edge set
   first, so each triangle is counted exactly once and the self-joins stay
   half-sized; on skewed degree distributions, AQE skew-join handles the
   hub-vertex buckets;
-- ``pagerank`` pre-aggregates out-degrees once and re-broadcasts nothing —
-  ranks and contributions meet in a shuffle-on-id join that AQE can convert
-  per-partition.
+- ``pagerank`` above the bound pre-aggregates out-degrees once and
+  re-broadcasts nothing — ranks and contributions meet in a shuffle-on-id
+  join that AQE can convert per-partition.
 """
 
 from __future__ import annotations
 
+import heapq
 from typing import Sequence
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from judy_graph_db_spark.loopstate import (Deferred, cache, checkpoint,
                                            fixpoint, free, scoped)
-from judy_graph_db_spark.schema import local_df, union_all
+from judy_graph_db_spark.schema import local_columns_df, local_df, union_all
 
 
 def _symmetric(edges: DataFrame) -> DataFrame:
@@ -109,32 +117,60 @@ def _star_round(pairs: DataFrame, large: bool) -> DataFrame:
     return out if large else out.distinct()
 
 
-#: Largest canonical pair set :func:`connected_components` unions on the
-#: driver; a larger one runs the distributed contraction.
-_LOCAL_CC_MAX_PAIRS = 500_000
+#: Most rows a driver-side branch may collect or build: the canonical
+#: pairs :func:`connected_components` unions, the base and result pairs
+#: of :func:`minplus_closure`, the links :func:`pagerank` iterates over.
+#: A larger relation runs the distributed plan.
+_LOCAL_MAX_ROWS = 1_000_000
 
 
-def _union_find(pairs) -> list:
-    """``(id, min id of its component)`` for every id on ``pairs``."""
-    parent: dict = {}
+def _driver_rows(df: DataFrame, n: int | None = None) -> "pa.Table | None":
+    """``df`` as an Arrow table when it has at most ``_LOCAL_MAX_ROWS``
+    rows and no NULL, else None.
+
+    ``df`` is a checkpoint or cache that the caller's distributed plan
+    materializes anyway; counting it (one job over its RDD, no shuffle)
+    is that materialization. ``n`` is the count when the caller already
+    ran it. Above the bound no row reaches the driver."""
+    if n is None:
+        n = df._jdf.queryExecution().toRdd().count()
+    if n > _LOCAL_MAX_ROWS:
+        return None
+    table = df.toArrow()
+    return None if any(c.null_count for c in table.columns) else table
+
+
+def _union_find(a, b) -> tuple:
+    """Columns ``(id, min id of its component)`` for every id on the
+    pairs ``zip(a, b)`` (numpy arrays), by union-find over dense indices."""
+    ids, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
+    parent = list(range(len(ids)))
 
     def find(x):
-        while parent.setdefault(x, x) != x:
+        while parent[x] != x:
             parent[x] = parent[parent[x]]
             x = parent[x]
         return x
 
-    for a, b in pairs:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    return [(x, find(x)) for x in parent]
+    for i, j in zip(inv[:len(a)].tolist(), inv[len(a):].tolist()):
+        ri, rj = find(i), find(j)
+        if ri != rj:
+            # ids are sorted, so the smaller index is the smaller id
+            parent[max(ri, rj)] = min(ri, rj)
+    root = np.asarray(parent, dtype=np.int64)
+    while True:
+        up = root[root]
+        if np.array_equal(up, root):
+            return ids, ids[root]
+        root = up
 
 
-def _local_components(spark, pairs, nodes: DataFrame | None = None) -> DataFrame:
-    """Driver union-find of collected ``pairs`` into a local relation, plus
-    ``(id, id)`` for every edge-less id of ``nodes``."""
-    comp = local_df(spark, _union_find(pairs), "id long, component long")
+def _local_components(spark, pairs: "pa.Table",
+                      nodes: DataFrame | None = None) -> DataFrame:
+    """Driver union-find of the collected two-column ``pairs`` into a local
+    relation, plus ``(id, id)`` for every edge-less id of ``nodes``."""
+    a, b = (c.to_numpy() for c in pairs.columns)
+    comp = local_columns_df(spark, _union_find(a, b), "id long, component long")
     if nodes is None:
         return comp
     loners = (nodes.select(F.col("id").cast("long").alias("id")).distinct()
@@ -154,8 +190,10 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
 
     The plan is chosen once per call by counting the canonical ``a < b``
     pair checkpoint (the job that materializes it). At most
-    ``_LOCAL_CC_MAX_PAIRS`` pairs are collected and labelled by a driver
-    union-find — small graphs pay job latency, not data. More go through
+    ``_LOCAL_MAX_ROWS`` pairs are collected as Arrow columns and labelled
+    by a driver union-find (:func:`_driver_rows`, the seam
+    :func:`minplus_closure` and :func:`pagerank` share) — small graphs pay
+    job latency, not data. More go through
     alternating large-star/small-star contraction (see :func:`_star_round`),
     O(log n) checkpointed rounds of at most ``max_iter``; convergence test:
     a whp-exact fingerprint (count + sum of per-pair xxhash64) of the pair
@@ -167,9 +205,9 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
         )
         .filter(F.col("a") < F.col("b"))
         .distinct())
-    # one job, no shuffle; no rows reach the driver above the bound
-    if pairs._jdf.queryExecution().toRdd().count() <= _LOCAL_CC_MAX_PAIRS:
-        return _local_components(edges.sparkSession, pairs.collect(), nodes)
+    small = _driver_rows(pairs)
+    if small is not None:
+        return _local_components(edges.sparkSession, small, nodes)
 
     id_set = _endpoints(pairs, "a", "b")
     if nodes is not None:
@@ -265,7 +303,14 @@ def pagerank(
     deterministic function of its input, so it stays oracle-checkable via an
     unrolled-SQL twin (``pagerank_oracle_sql``).
 
-    Shuffle profile (the property that matters at 100 TB): the edge
+    The plan is chosen once per call by the count that materializes the
+    link cache. At most ``_LOCAL_MAX_ROWS`` links are collected
+    (:func:`_driver_rows`) and iterated in numpy on the driver in a fixed
+    ``(src, dst)`` order, so a warm start stays bit-identical to the
+    longer cold run; the result is a local relation.
+
+    Shuffle profile of the distributed plan (the property that matters at
+    100 TB): the edge
     relation is shuffled exactly ONCE — one ``repartition`` on ``src``
     feeds the dedup (hash(src) already clusters (src,dst) duplicates) and
     the windowed out-degree, and the result is ``cache``\\ d, which — unlike
@@ -298,16 +343,20 @@ def pagerank(
         )
         w = Window.partitionBy("src")
         ldeg = cache(links.withColumn("outdeg", F.sum("__w").over(w) / F.col("__w")))
-    # distinct leaves hashpartitioning(id) in place for the rank joins
-    nodes = cache(_endpoints(ldeg).distinct())
     # materialize now: a cache whose plan is already final exposes its
-    # partitioning to every later join (an in-flight one does not).
-    # Deliberately SERIAL (r15 measured a 2-thread overlap of these two
-    # jobs at parity locally): the nodes job reads the ldeg cache, so
-    # running it second guarantees a warm cache — overlapped, its scans
-    # race the cache fill and can recompute the O(|E|) window pass,
-    # which is not free on a saturated cluster.
-    ldeg.count()
+    # partitioning to every later join (an in-flight one does not)
+    small = _driver_rows(ldeg)
+    if small is not None:
+        id_type = _endpoints(ldeg).schema["id"].dataType.simpleString()
+        return _local_pagerank(spark, small, iters, damping, init_ranks,
+                               f"id {id_type}, rank double")
+    # distinct leaves hashpartitioning(id) in place for the rank joins.
+    # Materialized SERIALLY after ldeg (a 2-thread overlap of the two
+    # jobs measured at parity locally): the nodes job reads the ldeg
+    # cache, so running it second guarantees a warm cache — overlapped,
+    # its scans race the cache fill and can recompute the O(|E|) window
+    # pass, which is not free on a saturated cluster.
+    nodes = cache(_endpoints(ldeg).distinct())
     nodes.count()
     if init_ranks is None:
         ranks = nodes.withColumn("rank", F.lit(1.0))
@@ -344,6 +393,30 @@ def pagerank(
             ranks = checkpoint(ranks, eager=True)
     # detach the result from the internal caches, which the scope frees
     return checkpoint(ranks, eager=True)
+
+
+def _local_pagerank(spark, links: "pa.Table", iters: int, damping: float,
+                    init_ranks: DataFrame | None, schema: str) -> DataFrame:
+    """:func:`pagerank`'s iterations over collected ``(src, dst, outdeg)``
+    links, in numpy: the same ``rank / outdeg`` contributions, summed in
+    ``(src, dst)`` order. Returns ``schema``'s ``(id, rank)`` relation."""
+    src, dst, outdeg = (links.column(c).to_numpy() for c in ("src", "dst", "outdeg"))
+    order = np.lexsort((dst, src))
+    src, dst, outdeg = src[order], dst[order], outdeg[order]
+    ids = np.unique(np.concatenate([src, dst]))
+    si, di = np.searchsorted(ids, src), np.searchsorted(ids, dst)
+    rank = np.ones(len(ids))
+    if init_ranks is not None:
+        # only the collected ids are read; the rest start cold at 1.0
+        wanted = local_columns_df(spark, [ids], "id long")
+        got = (init_ranks.select("id", F.col("rank").alias("__r0"))
+               .join(wanted, "id").toArrow())
+        r0 = got.column("__r0").fill_null(1.0).to_numpy()
+        rank[np.searchsorted(ids, got.column("id").to_numpy())] = r0
+    for _ in range(iters):
+        s = np.bincount(di, weights=rank[si] / outdeg, minlength=len(ids))
+        rank = (1.0 - damping) + damping * s
+    return local_columns_df(spark, [ids, rank], schema)
 
 
 def pagerank_oracle_sql(
@@ -806,6 +879,10 @@ def transitive_closure(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     Convergence: (pair count, total depth) is stationary iff a round added
     no pair and improved no depth — pairs only grow, depths only shrink.
     Cycle-safe: the min() keeps depths finite.
+
+    A closure of at most ``_LOCAL_MAX_ROWS`` pairs is computed by one BFS
+    per source on the driver instead, with the same rows (see
+    :func:`minplus_closure`).
     """
     return minplus_closure(edges, keep_self=False, max_iter=max_iter)
 
@@ -827,7 +904,9 @@ def minplus_closure(
     shortest sub-path ≤ cap, so the filter never cuts a needed stepping
     stone). Callers that cap exploration (the unbounded-repeat pattern's
     ``UNBOUNDED_MAX_HOPS``) use this so both execution strategies return
-    identical answers, and it also bounds intermediate state.
+    identical answers, and it also bounds intermediate state. The base
+    pairs are never filtered: an edge heavier than the cap keeps its row
+    at its own weight.
 
     ``weight_col`` generalizes hop counting to weighted shortest paths
     (non-negative integer weights; parallel edges collapse to their
@@ -835,6 +914,15 @@ def minplus_closure(
     O(log L) rounds (L = most edges on any shortest path) compute
     Dijkstra's answer for every pair at once — the relational form of
     all-pairs shortest paths.
+
+    The plan is chosen once per call by the count that materializes the
+    base checkpoint. A base of at most ``_LOCAL_MAX_ROWS`` pairs is
+    collected (:func:`_driver_rows`) and searched from every source on
+    the driver — a BFS, or a Dijkstra with ``weight_col`` — into a local
+    relation with the doubling's exact rows. The doubling runs instead
+    when the result would pass the bound, or when ``2**max_iter`` is below
+    the node count, where the doubling's ``max_iter`` truncation could
+    bind.
     """
     if weight_col is None:
         base = edges.select("src", "dst", F.lit(1).cast("long").alias("depth"))
@@ -844,7 +932,7 @@ def minplus_closure(
         )
     if not keep_self:
         base = base.filter(F.col("src") != F.col("dst"))
-    # materialized by the fixpoint's first fingerprint
+    # materialized by the count that picks the plan
     r = checkpoint(base.groupBy("src", "dst").agg(F.min("depth").alias("depth")))
     if weight_col is not None:
         # min-plus correctness requires non-negative, non-null weights —
@@ -859,6 +947,13 @@ def minplus_closure(
                 f"minplus_closure: weight column {weight_col!r} must be "
                 "non-negative and non-null"
             )
+
+    small = _driver_rows(r)
+    if small is not None:
+        cols = _local_closure(small, keep_self, max_depth,
+                              weight_col is not None, max_iter)
+        if cols is not None:
+            return local_columns_df(edges.sparkSession, cols, r.schema)
 
     def fingerprint(df: DataFrame) -> tuple:
         row = df.agg(
@@ -889,6 +984,86 @@ def minplus_closure(
 
     # the fingerprint job materializes each doubling round: one job per round
     return fixpoint(r, double, fingerprint, max_iter)
+
+
+def _local_closure(base: "pa.Table", keep_self: bool, max_depth: int | None,
+                   weighted: bool, max_iter: int) -> "list | None":
+    """The rows :func:`minplus_closure`'s doubling converges to, as
+    ``[src, dst, depth]`` columns, from its collected ``base`` pairs; None
+    when they would pass ``_LOCAL_MAX_ROWS`` or ``max_iter`` rounds might
+    not converge.
+
+    Each source gets its shortest distance to every node it reaches, its
+    own row being the shortest closed walk (``keep_self`` only). A path
+    over the cap is dropped, but a base pair heavier than the cap keeps
+    its base weight: the doubling filters only the composed pairs."""
+    src, dst, depth = (c.to_pylist() for c in base.columns)
+    # the doubling covers walks of up to 2**max_iter edges; a shortest
+    # path or cycle has at most one edge per node
+    if 2 ** max_iter < len(set(src) | set(dst)):
+        return None
+    adj: dict = {}
+    for s, d, w in zip(src, dst, depth):
+        adj.setdefault(s, []).append((d, w))
+    search = _dijkstra_from if weighted else _bfs_from
+    cap = float("inf") if max_depth is None else max_depth
+    out_s, out_d, out_w = [], [], []
+    for s in adj:
+        dist = search(adj, s, cap)
+        if not keep_self:
+            dist.pop(s, None)
+        for d, w in adj[s]:
+            if w > cap:
+                dist.setdefault(d, w)
+        if len(out_s) + len(dist) > _LOCAL_MAX_ROWS:
+            return None
+        out_s += [s] * len(dist)
+        out_d += dist
+        out_w += dist.values()
+    return [out_s, out_d, out_w]
+
+
+def _bfs_from(adj: dict, s, cap) -> dict:
+    """Fewest hops ≤ ``cap`` from ``s`` to every node a walk of ≥ 1 edge
+    reaches, ``s`` itself included when a cycle returns to it. ``adj``
+    maps a node to its ``(successor, weight)`` list; weights are ignored."""
+    dist: dict = {}
+    frontier, hops = [s], 0
+    while frontier and hops < cap:
+        hops += 1
+        nxt = []
+        for u in frontier:
+            for v, _ in adj.get(u, ()):
+                if v not in dist:
+                    dist[v] = hops
+                    if v != s:
+                        nxt.append(v)
+        frontier = nxt
+    return dist
+
+
+def _dijkstra_from(adj: dict, s, cap) -> dict:
+    """:func:`_bfs_from` with non-negative edge weights."""
+    best = {s: 0}
+    closed = None
+    heap = [(0, s)]
+    while heap:
+        d, u = heapq.heappop(heap)
+        if d > best[u]:
+            continue
+        for v, w in adj.get(u, ()):
+            nd = d + w
+            if nd > cap:
+                continue
+            if v == s:
+                closed = nd if closed is None else min(closed, nd)
+            elif nd < best.get(v, nd + 1):
+                best[v] = nd
+                heapq.heappush(heap, (nd, v))
+    del best[s]
+    if closed is not None:
+        best[s] = closed
+    return best
 
 
 def bipartite_projection(edges: DataFrame, min_count: int = 1,
@@ -2044,10 +2219,9 @@ def minimum_spanning_forest(edges: DataFrame, weight_col: str = "weight",
         # contract on the component-level selected graph (O(#components)),
         # sized by the count above: a small one skips connected_components' count
         cedges = picked.select(F.col("ca").alias("src"), F.col("cb").alias("dst"))
-        if n_picked <= _LOCAL_CC_MAX_PAIRS:
-            merged = _local_components(picked.sparkSession, cedges.collect())
-        else:
-            merged = connected_components(cedges)
+        small = _driver_rows(cedges, n_picked)
+        merged = (connected_components(cedges) if small is None
+                  else _local_components(picked.sparkSession, small))
         nxt = checkpoint(
             comp.join(merged.withColumnRenamed("id", "comp"), "comp", "left")
             .select("id", F.coalesce("component", F.col("comp")).alias("comp")), eager=True)

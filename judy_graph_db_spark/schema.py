@@ -15,7 +15,8 @@ replaces the back-bit ``edgeBackward=0x80000000`` (``FastAccess.hs:149-150``);
 ``labels`` (array) replaces the summed orthogonal attr bits
 (``FastAccess.hs:271-278``).
 
-:func:`local_df` is the one place Python rows become a DataFrame, and
+:func:`local_df` (and its column form :func:`local_columns_df`) is the
+one place Python rows become a DataFrame, and
 :func:`union_all` the one place DataFrames are unioned.
 """
 
@@ -74,10 +75,21 @@ def local_df(spark: SparkSession, rows: Iterable[tuple], schema: T.StructType | 
     """
     if isinstance(schema, str):
         schema = T.StructType.fromDDL(schema)
+    return local_columns_df(spark, list(zip(*rows)) or [()] * len(schema), schema)
+
+
+def local_columns_df(spark: SparkSession, columns: Sequence,
+                     schema: T.StructType | str) -> DataFrame:
+    """:func:`local_df` over driver-side ``columns``, one per ``schema``
+    field: Arrow arrays, numpy arrays or sequences. A result computed on
+    the driver goes in column by column, with no Python row tuples."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
     arrow = to_arrow_schema(schema)
-    cols = list(zip(*rows)) or [()] * len(arrow)
     table = pa.Table.from_arrays(
-        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow)
+        [c.cast(f.type) if isinstance(c, (pa.Array, pa.ChunkedArray))
+         else pa.array(c, type=f.type) for c, f in zip(columns, arrow)],
+        schema=arrow)
     return spark.createDataFrame(table, schema)
 
 

@@ -1,6 +1,7 @@
 """SparkSession factory tuned for this engine.
 
-Local-mode defaults match the driver harness (local[32], 128 GiB); the same
+Local-mode defaults match the driver harness (local[32], 128 GiB, where the
+driver heap is 48g; a smaller host gets ~60% of its memory); the same
 settings translate to cluster mode — AQE on, shuffle partitions sized to the
 parallelism, Arrow enabled for the Pandas-UDF slow path, UTC timestamps so
 results hash-match the DuckDB oracle.
@@ -11,6 +12,17 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def _default_driver_memory() -> str:
+    """48g, or about 60% of this host's physical memory when that is
+    less, so a long local run cannot grow its heap until the kernel kills
+    the JVM."""
+    try:
+        mib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    except (AttributeError, ValueError, OSError):
+        return "48g"
+    return f"{min(48 * 1024, mib * 6 // 10)}m"
 
 
 def get_spark(app_name: str = "judy_graph_db_spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -26,7 +38,8 @@ def get_spark(app_name: str = "judy_graph_db_spark", shuffle_partitions: int | N
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # let the planner pick shuffled-hash over sort-merge when its size

@@ -55,7 +55,6 @@ SLOW_TESTS = frozenset({
     ("test_entry_oracle.py", "test_query_matches_oracle[temporal_ops]"),
     ("test_entry_oracle.py", "test_query_matches_oracle[triangle_count]"),
     ("test_entry_oracle.py", "test_query_matches_oracle[var_length_paths]"),
-    ("test_manifest.py", "test_manifest_ops_match_live_gate[pagerank_ranks]"),
     ("test_manifest.py", "test_manifest_ops_match_live_gate[pattern_1hop_matrix]"),
     ("test_motif.py", "test_match_motif_cost_seeded_segment_order"),
     ("test_pipeline_ops.py", "test_ivf_pq_topk"),

@@ -37,7 +37,7 @@ def test_connected_components_isolated_nodes(spark):
 def test_connected_components_long_chain_converges_fast(spark, monkeypatch):
     # pointer jumping: a 64-node path must converge well under 64 rounds
     # (on the distributed branch; the driver union-find has no rounds)
-    monkeypatch.setattr(AN, "_LOCAL_CC_MAX_PAIRS", 0)
+    monkeypatch.setattr(AN, "_LOCAL_MAX_ROWS", 0)
     n = 64
     e = edges_df(spark, [(i, i + 1) for i in range(n - 1)])
     cc = AN.connected_components(e, max_iter=12)
@@ -1436,6 +1436,34 @@ def test_frontier_bfs_one_job_per_level(spark):
     assert spt_jobs <= 6 * levels + 10, f"shortest_path_tree ran {spt_jobs} jobs"
 
 
+def test_small_closure_and_pagerank_run_on_the_driver(spark):
+    """On a small input transitive_closure and pagerank each run at most
+    5 jobs, their result collect included: the job that sizes and
+    materializes the base (a checkpoint, a cache), the collect of that
+    base, and the collect of the local result. The doubling and the
+    power iteration ran one job per round and per join stage — 32 and
+    19 jobs on the perfbench batch input."""
+    sc = spark.sparkContext
+    e = edges_df(spark, [(i, (i * 7 + 3) % 40) for i in range(40)]
+                 + [(i, i + 1) for i in range(39)])
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, "driver-branch job-count assertion")
+        try:
+            rows = fn().collect()
+        finally:
+            sc.setJobGroup(None, None)
+        return rows, len(sc._jsc.sc().statusTracker().getJobIdsForGroup(group))
+
+    closure, closure_jobs = jobs("small-closure-jobs",
+                                 lambda: AN.transitive_closure(e))
+    ranks, pagerank_jobs = jobs("small-pagerank-jobs",
+                                lambda: AN.pagerank(e, iters=3))
+    assert len(closure) == 40 * 39 and len(ranks) == 40
+    assert closure_jobs <= 5, f"transitive_closure ran {closure_jobs} jobs"
+    assert pagerank_jobs <= 5, f"pagerank ran {pagerank_jobs} jobs"
+
+
 def test_greedy_coloring(spark):
     """Proper coloring (no edge monochromatic), <= Delta+1 colors,
     deterministic across runs, DuckDB twin identical."""
@@ -2247,7 +2275,7 @@ def test_girvan_newman_sampled_matches_exact_sequence(spark):
 
 
 def test_msf_distributed_contraction_branch_equivalent(spark, monkeypatch):
-    """_LOCAL_CC_MAX_PAIRS=0 forces the distributed contraction inside
+    """_LOCAL_MAX_ROWS=0 forces the distributed contraction inside
     connected_components — the branch the first rounds of a 100 TB run
     take — and must produce the exact same forest as the driver
     union-find on every fixture."""
@@ -2265,7 +2293,7 @@ def test_msf_distributed_contraction_branch_equivalent(spark, monkeypatch):
     edges = spark.createDataFrame(rows, "src long, dst long, weight long")
     fast = sorted((r.a, r.b, r.weight)
                   for r in AN.minimum_spanning_forest(edges).collect())
-    monkeypatch.setattr(AN, "_LOCAL_CC_MAX_PAIRS", 0)
+    monkeypatch.setattr(AN, "_LOCAL_MAX_ROWS", 0)
     dist = sorted((r.a, r.b, r.weight)
                   for r in AN.minimum_spanning_forest(edges).collect())
     assert fast == dist == sorted(_kruskal(rows))

@@ -163,10 +163,120 @@ def test_connected_components_branches_row_identical(spark, monkeypatch,
         assert (e.distinct().rdd.getNumPartitions() > 1) == (coalesce == "false")
         got = {}
         for bound, distributed in ((n_pairs, False), (n_pairs - 1, True)):
-            monkeypatch.setattr(AN, "_LOCAL_CC_MAX_PAIRS", bound)
+            monkeypatch.setattr(AN, "_LOCAL_MAX_ROWS", bound)
             out = AN.connected_components(e, nodes=nodes)
             assert _reads_checkpoint(out) == distributed
             got[bound] = sorted((r["id"], r["component"]) for r in out.collect())
     finally:
         spark.conf.set(key, prior)
     assert got[n_pairs] == got[n_pairs - 1] == sorted(want.items())
+
+
+def _closure_fixture(seed):
+    """A random weighted multigraph with cycles, self-loops, parallel
+    edges and zero weights."""
+    import random
+
+    rng = random.Random(seed)
+    n = 14
+    rows = [(rng.randrange(n), rng.randrange(n), rng.choice([0, 1, 2, 3, 7]))
+            for _ in range(26)]
+    rows += [(a, a, rng.choice([0, 4])) for a in rng.sample(range(n), 3)]
+    rows += [(a, b, w + 1) for a, b, w in rng.sample(rows, 4)]   # parallel
+    rows += [(0, 1, 2), (1, 2, 2), (2, 0, 2)]                     # a cycle
+    return rows + [(50, 51, 9)]            # heavier than any cap below
+
+
+def _closure_reference(rows, weighted, keep_self, cap):
+    """Floyd–Warshall over walks of ≥ 1 edge (the diagonal is the shortest
+    closed walk), then the doubling's cap rule: paths over ``cap`` are
+    dropped, base pairs heavier than it keep their base weight."""
+    inf = float("inf")
+    base = {}
+    for a, b, w in rows:
+        w = w if weighted else 1
+        if keep_self or a != b:
+            base[(a, b)] = min(base.get((a, b), inf), w)
+    ids = sorted({x for ab in base for x in ab})
+    d = {(i, j): base.get((i, j), inf) for i in ids for j in ids}
+    for k in ids:
+        for i in ids:
+            for j in ids:
+                d[i, j] = min(d[i, j], d[i, k] + d[k, j])
+    cap = inf if cap is None else cap
+    return sorted((i, j, v if v <= cap else base[i, j])
+                  for (i, j), v in d.items()
+                  if (keep_self or i != j) and v < inf
+                  and (v <= cap or base.get((i, j), 0) > cap))
+
+
+@pytest.mark.parametrize("seed", [3, 8])
+@pytest.mark.parametrize(("weighted", "keep_self", "cap"), [
+    (False, False, None), (False, True, None), (True, False, None),
+    (True, True, None), (True, False, 5), (True, True, 5), (False, True, 2),
+    (False, False, 0)])
+def test_minplus_closure_branches_row_identical(spark, monkeypatch, seed,
+                                               weighted, keep_self, cap):
+    """The driver search admits the closure at a bound of exactly |rows|
+    and falls back to the doubling at |rows| - 1; both give the
+    reference's rows. Under a weighted cap (or a hop cap of 0) a base
+    edge heavier than the cap keeps its base weight."""
+    rows = _closure_fixture(seed)
+    e = local_df(spark, rows, "src long, dst long, weight long")
+    kw = dict(keep_self=keep_self, max_depth=cap,
+              weight_col="weight" if weighted else None)
+    want = _closure_reference(rows, weighted, keep_self, cap)
+    if cap is not None and (weighted or cap < 1):
+        assert any(w > cap for _, _, w in want)
+    got = {}
+    for bound, distributed in ((len(want), False), (len(want) - 1, True)):
+        monkeypatch.setattr(AN, "_LOCAL_MAX_ROWS", bound)
+        out = AN.minplus_closure(e, **kw)
+        assert _reads_checkpoint(out) == distributed
+        got[bound] = sorted(tuple(r) for r in out.collect())
+    assert got[len(want)] == got[len(want) - 1] == want
+
+
+def test_minplus_closure_max_iter_truncation_stays_distributed(spark):
+    """With 2**max_iter below the node count the doubling's truncation can
+    bind, so the call runs the doubling even under the bound; with enough
+    rounds for every path it runs on the driver, and both agree where the
+    truncation does not bind."""
+    chain = [(i, i + 1) for i in range(9)]
+    e = _edges(spark, chain)
+    short = AN.transitive_closure(e, max_iter=2)
+    assert _reads_checkpoint(short)
+    # 2 rounds cover paths of up to 4 hops
+    assert sorted(tuple(r) for r in short.collect()) == sorted(
+        (a, b, b - a) for a in range(10) for b in range(a + 1, min(a + 5, 10)))
+    full = AN.transitive_closure(e, max_iter=4)
+    assert not _reads_checkpoint(full)
+    assert sorted(tuple(r) for r in full.collect()) == sorted(
+        (a, b, b - a) for a in range(10) for b in range(a + 1, 10))
+
+
+@pytest.mark.parametrize("weighted", [False, True])
+def test_pagerank_branches_match(spark, monkeypatch, weighted):
+    """Driver and distributed PageRank give the same ids and ranks to
+    1e-12 (the sums run in different orders) on a graph with dangling
+    nodes and parallel edges, cold and warm-started from ``init_ranks``
+    that lack some ids and carry ids the graph does not have."""
+    import random
+
+    rng = random.Random(29)
+    rows = [(rng.randrange(12), rng.randrange(16), rng.randrange(1, 5))
+            for _ in range(40)]                 # ids 12..15 are sinks
+    e = local_df(spark, rows, "src long, dst long, weight long")
+    init = local_df(spark, [(i, 0.5 + i / 10) for i in range(0, 20, 2)],
+                    "id long, rank double")     # odd ids and 16..19 unseen/extra
+    wcol = "weight" if weighted else None
+    got = {}
+    for bound, distributed in ((10 ** 6, False), (0, True)):
+        monkeypatch.setattr(AN, "_LOCAL_MAX_ROWS", bound)
+        outs = [AN.pagerank(e, iters=3, weight_col=wcol),
+                AN.pagerank(e, iters=2, weight_col=wcol, init_ranks=init)]
+        assert all(_reads_checkpoint(o) == distributed for o in outs)
+        got[bound] = [dict(tuple(r) for r in o.collect()) for o in outs]
+    for local, dist in zip(got[10 ** 6], got[0]):
+        assert local.keys() == dist.keys()
+        assert all(abs(local[k] - dist[k]) < 1e-12 for k in local)

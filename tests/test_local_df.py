@@ -9,7 +9,8 @@ from pathlib import Path
 import pytest
 
 from judy_graph_db_spark import schema as S
-from judy_graph_db_spark.schema import EDGES_SCHEMA, NODES_SCHEMA, RANGES_SCHEMA, local_df
+from judy_graph_db_spark.schema import (EDGES_SCHEMA, NODES_SCHEMA, RANGES_SCHEMA,
+                                        local_columns_df, local_df)
 
 PACKAGE = Path(S.__file__).resolve().parent
 
@@ -36,6 +37,23 @@ CASES = [
     ("rank long, a string, b string, count long", [(1, "a", "b", 7), (2, "", None, 1)]),
     ("symbol string, freq long", [("ü", 3)]),
 ]
+
+
+@pytest.mark.parametrize("schema,rows", CASES, ids=[str(c[0])[:40] for c in CASES])
+def test_local_columns_df_matches_row_form(spark, schema, rows):
+    """The column form gives the row form's schema and rows, from Python
+    lists and from Arrow arrays alike."""
+    import pyarrow as pa
+
+    want = local_df(spark, rows, schema)
+    cols = [list(c) for c in zip(*rows)]
+    arrow = [pa.array(c, type=f.type) for c, f in
+             zip(cols, S.to_arrow_schema(want.schema))]
+    for columns in (cols, arrow):
+        got = local_columns_df(spark, columns, schema)
+        assert got.schema == want.schema
+        assert got.collect() == want.collect()
+        assert _plan_node(got) == "LocalRelation"
 
 
 def _plan_node(df) -> str:
@@ -66,13 +84,15 @@ def test_local_df_plans_local_relation(spark, arrow):
 
 def test_no_create_dataframe_outside_local_df():
     """The Python-worker path (``createDataFrame`` over a list) must not
-    come back: every literal goes through ``local_df``."""
-    helper = inspect.getsource(local_df)
+    come back: every literal goes through ``local_df`` or its column
+    form ``local_columns_df``."""
+    helpers = [inspect.getsource(f) for f in (local_df, local_columns_df)]
     hits = []
     for path in sorted(PACKAGE.rglob("*.py")):
         text = path.read_text()
         if path.name == "schema.py" and path.parent == PACKAGE:
-            text = text.replace(helper, "")
+            for helper in helpers:
+                text = text.replace(helper, "")
         hits += [f"{path.relative_to(PACKAGE.parent)}:{i}"
                  for i, line in enumerate(text.splitlines(), 1) if "createDataFrame(" in line]
     assert not hits, hits

@@ -59,18 +59,22 @@ def _backing(df) -> set:
     return ids
 
 
-def _cc_distributed(e):
-    """connected_components on its distributed branch (the fixture fits
-    the driver union-find otherwise)."""
-    with mock.patch.object(AN, "_LOCAL_CC_MAX_PAIRS", 0):
-        return AN.connected_components(e)
+def _distributed(op):
+    """``op`` on its distributed branch (the fixture fits the driver
+    branch otherwise)."""
+    with mock.patch.object(AN, "_LOCAL_MAX_ROWS", 0):
+        return op()
 
 
 OPERATORS = {
     "connected_components": lambda e, d: AN.connected_components(e),
-    "connected_components_distributed": lambda e, d: _cc_distributed(e),
+    "connected_components_distributed":
+        lambda e, d: _distributed(lambda: AN.connected_components(e)),
     "transitive_closure": lambda e, d: AN.transitive_closure(e),
+    "transitive_closure_distributed":
+        lambda e, d: _distributed(lambda: AN.transitive_closure(e)),
     "pagerank": lambda e, d: AN.pagerank(e),
+    "pagerank_distributed": lambda e, d: _distributed(lambda: AN.pagerank(e)),
     "scc_closure": lambda e, d: AN.strongly_connected_components(e, "closure"),
     "scc_coloring": lambda e, d: AN.strongly_connected_components(e, "coloring"),
     "betweenness_sampled": lambda e, d: AN.betweenness_sampled(e, n_pivots=4),
