@@ -349,7 +349,7 @@ def pagerank(
     if small is not None:
         id_type = _endpoints(ldeg).schema["id"].dataType.simpleString()
         return _local_pagerank(spark, small, iters, damping, init_ranks,
-                               f"id {id_type}, rank double")
+                               id_type)
     # distinct leaves hashpartitioning(id) in place for the rank joins.
     # Materialized SERIALLY after ldeg (a 2-thread overlap of the two
     # jobs measured at parity locally): the nodes job reads the ldeg
@@ -396,10 +396,10 @@ def pagerank(
 
 
 def _local_pagerank(spark, links: "pa.Table", iters: int, damping: float,
-                    init_ranks: DataFrame | None, schema: str) -> DataFrame:
+                    init_ranks: DataFrame | None, id_type: str) -> DataFrame:
     """:func:`pagerank`'s iterations over collected ``(src, dst, outdeg)``
     links, in numpy: the same ``rank / outdeg`` contributions, summed in
-    ``(src, dst)`` order. Returns ``schema``'s ``(id, rank)`` relation."""
+    ``(src, dst)`` order. Returns ``(id id_type, rank double)``."""
     src, dst, outdeg = (links.column(c).to_numpy() for c in ("src", "dst", "outdeg"))
     order = np.lexsort((dst, src))
     src, dst, outdeg = src[order], dst[order], outdeg[order]
@@ -408,15 +408,15 @@ def _local_pagerank(spark, links: "pa.Table", iters: int, damping: float,
     rank = np.ones(len(ids))
     if init_ranks is not None:
         # only the collected ids are read; the rest start cold at 1.0
-        wanted = local_columns_df(spark, [ids], "id long")
-        got = (init_ranks.select("id", F.col("rank").alias("__r0"))
-               .join(wanted, "id").toArrow())
+        wanted = local_columns_df(spark, [ids], f"id {id_type}")
+        got = wanted.join(init_ranks.select("id", F.col("rank").alias("__r0")),
+                          "id").toArrow()
         r0 = got.column("__r0").fill_null(1.0).to_numpy()
         rank[np.searchsorted(ids, got.column("id").to_numpy())] = r0
     for _ in range(iters):
         s = np.bincount(di, weights=rank[si] / outdeg, minlength=len(ids))
         rank = (1.0 - damping) + damping * s
-    return local_columns_df(spark, [ids, rank], schema)
+    return local_columns_df(spark, [ids, rank], f"id {id_type}, rank double")
 
 
 def pagerank_oracle_sql(
@@ -880,8 +880,8 @@ def transitive_closure(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     no pair and improved no depth — pairs only grow, depths only shrink.
     Cycle-safe: the min() keeps depths finite.
 
-    A closure of at most ``_LOCAL_MAX_ROWS`` pairs is computed by one BFS
-    per source on the driver instead, with the same rows (see
+    A closure of at most ``_LOCAL_MAX_ROWS`` pairs is computed by one
+    search per source on the driver instead, with the same rows (see
     :func:`minplus_closure`).
     """
     return minplus_closure(edges, keep_self=False, max_iter=max_iter)
@@ -918,11 +918,12 @@ def minplus_closure(
     The plan is chosen once per call by the count that materializes the
     base checkpoint. A base of at most ``_LOCAL_MAX_ROWS`` pairs is
     collected (:func:`_driver_rows`) and searched from every source on
-    the driver — a BFS, or a Dijkstra with ``weight_col`` — into a local
-    relation with the doubling's exact rows. The doubling runs instead
-    when the result would pass the bound, or when ``2**max_iter`` is below
-    the node count, where the doubling's ``max_iter`` truncation could
-    bind.
+    the driver by Dijkstra (an unweighted base has depth 1 on every pair)
+    into a local relation with the doubling's exact rows. The doubling
+    runs instead when the result would pass the bound, when the searches
+    would scan more than ``4 * _LOCAL_MAX_ROWS`` edges (a dense graph),
+    or when ``2**max_iter`` is below the node count, where the doubling's
+    ``max_iter`` truncation could bind.
     """
     if weight_col is None:
         base = edges.select("src", "dst", F.lit(1).cast("long").alias("depth"))
@@ -950,8 +951,7 @@ def minplus_closure(
 
     small = _driver_rows(r)
     if small is not None:
-        cols = _local_closure(small, keep_self, max_depth,
-                              weight_col is not None, max_iter)
+        cols = _local_closure(small, keep_self, max_depth, max_iter)
         if cols is not None:
             return local_columns_df(edges.sparkSession, cols, r.schema)
 
@@ -987,11 +987,12 @@ def minplus_closure(
 
 
 def _local_closure(base: "pa.Table", keep_self: bool, max_depth: int | None,
-                   weighted: bool, max_iter: int) -> "list | None":
+                   max_iter: int) -> "list | None":
     """The rows :func:`minplus_closure`'s doubling converges to, as
     ``[src, dst, depth]`` columns, from its collected ``base`` pairs; None
-    when they would pass ``_LOCAL_MAX_ROWS`` or ``max_iter`` rounds might
-    not converge.
+    when they would pass ``_LOCAL_MAX_ROWS``, when the searches would scan
+    more than ``4 * _LOCAL_MAX_ROWS`` edges, or when ``max_iter`` rounds
+    might not converge.
 
     Each source gets its shortest distance to every node it reaches, its
     own row being the shortest closed walk (``keep_self`` only). A path
@@ -1005,11 +1006,16 @@ def _local_closure(base: "pa.Table", keep_self: bool, max_depth: int | None,
     adj: dict = {}
     for s, d, w in zip(src, dst, depth):
         adj.setdefault(s, []).append((d, w))
-    search = _dijkstra_from if weighted else _bfs_from
     cap = float("inf") if max_depth is None else max_depth
+    # the driver's work is the edges scanned, summed over the sources: a
+    # dense graph can stay under the row bound and still scan ~n**3 edges
+    scans = 4 * _LOCAL_MAX_ROWS
     out_s, out_d, out_w = [], [], []
     for s in adj:
-        dist = search(adj, s, cap)
+        found = _dijkstra_from(adj, s, cap, scans)
+        if found is None:
+            return None
+        dist, scans = found
         if not keep_self:
             dist.pop(s, None)
         for d, w in adj[s]:
@@ -1023,27 +1029,12 @@ def _local_closure(base: "pa.Table", keep_self: bool, max_depth: int | None,
     return [out_s, out_d, out_w]
 
 
-def _bfs_from(adj: dict, s, cap) -> dict:
-    """Fewest hops ≤ ``cap`` from ``s`` to every node a walk of ≥ 1 edge
-    reaches, ``s`` itself included when a cycle returns to it. ``adj``
-    maps a node to its ``(successor, weight)`` list; weights are ignored."""
-    dist: dict = {}
-    frontier, hops = [s], 0
-    while frontier and hops < cap:
-        hops += 1
-        nxt = []
-        for u in frontier:
-            for v, _ in adj.get(u, ()):
-                if v not in dist:
-                    dist[v] = hops
-                    if v != s:
-                        nxt.append(v)
-        frontier = nxt
-    return dist
-
-
-def _dijkstra_from(adj: dict, s, cap) -> dict:
-    """:func:`_bfs_from` with non-negative edge weights."""
+def _dijkstra_from(adj: dict, s, cap, scans: int) -> "tuple | None":
+    """Shortest distance ≤ ``cap`` from ``s`` to every node a walk of ≥ 1
+    edge reaches, ``s`` itself included when a cycle returns to it, and
+    what is left of ``scans`` after the out-edges of every settled node;
+    None once they would take more. ``adj`` maps a node to its
+    ``(successor, non-negative weight)`` list."""
     best = {s: 0}
     closed = None
     heap = [(0, s)]
@@ -1051,7 +1042,11 @@ def _dijkstra_from(adj: dict, s, cap) -> dict:
         d, u = heapq.heappop(heap)
         if d > best[u]:
             continue
-        for v, w in adj.get(u, ()):
+        out = adj.get(u, ())
+        scans -= len(out)
+        if scans < 0:
+            return None
+        for v, w in out:
             nd = d + w
             if nd > cap:
                 continue
@@ -1063,7 +1058,7 @@ def _dijkstra_from(adj: dict, s, cap) -> dict:
     del best[s]
     if closed is not None:
         best[s] = closed
-    return best
+    return best, scans
 
 
 def bipartite_projection(edges: DataFrame, min_count: int = 1,

@@ -255,20 +255,39 @@ def test_minplus_closure_max_iter_truncation_stays_distributed(spark):
         (a, b, b - a) for a in range(10) for b in range(a + 1, 10))
 
 
+def test_minplus_closure_dense_graph_falls_back_on_scans(spark, monkeypatch):
+    """A complete digraph's closure has no more rows than its base, but
+    each source's search scans every edge: on 12 nodes 1,584 edges for
+    132 rows. Under a bound of 132 rows the scans pass ``4 * bound`` and
+    the call runs the doubling; at a bound of 396 they fit and it runs on
+    the driver. Both give every ordered pair at depth 1."""
+    n = 12
+    e = _edges(spark, [(a, b) for a in range(n) for b in range(n) if a != b])
+    want = sorted((a, b, 1) for a in range(n) for b in range(n) if a != b)
+    for bound, distributed in ((len(want), True), (3 * len(want), False)):
+        monkeypatch.setattr(AN, "_LOCAL_MAX_ROWS", bound)
+        out = AN.transitive_closure(e)
+        assert _reads_checkpoint(out) == distributed
+        assert sorted(tuple(r) for r in out.collect()) == want
+
+
+@pytest.mark.parametrize("id_type", ["bigint", "string"])
 @pytest.mark.parametrize("weighted", [False, True])
-def test_pagerank_branches_match(spark, monkeypatch, weighted):
-    """Driver and distributed PageRank give the same ids and ranks to
-    1e-12 (the sums run in different orders) on a graph with dangling
-    nodes and parallel edges, cold and warm-started from ``init_ranks``
-    that lack some ids and carry ids the graph does not have."""
+def test_pagerank_branches_match(spark, monkeypatch, weighted, id_type):
+    """Driver and distributed PageRank give the same ids, id type and
+    ranks to 1e-12 (the sums run in different orders) on a graph with
+    dangling nodes and parallel edges, cold and warm-started from
+    ``init_ranks`` that lack some ids and carry ids the graph does not
+    have."""
     import random
 
+    key = str if id_type == "string" else int
     rng = random.Random(29)
-    rows = [(rng.randrange(12), rng.randrange(16), rng.randrange(1, 5))
+    rows = [(key(rng.randrange(12)), key(rng.randrange(16)), rng.randrange(1, 5))
             for _ in range(40)]                 # ids 12..15 are sinks
-    e = local_df(spark, rows, "src long, dst long, weight long")
-    init = local_df(spark, [(i, 0.5 + i / 10) for i in range(0, 20, 2)],
-                    "id long, rank double")     # odd ids and 16..19 unseen/extra
+    e = local_df(spark, rows, f"src {id_type}, dst {id_type}, weight long")
+    init = local_df(spark, [(key(i), 0.5 + i / 10) for i in range(0, 20, 2)],
+                    f"id {id_type}, rank double")  # odd ids and 16..19 unseen/extra
     wcol = "weight" if weighted else None
     got = {}
     for bound, distributed in ((10 ** 6, False), (0, True)):
@@ -276,6 +295,8 @@ def test_pagerank_branches_match(spark, monkeypatch, weighted):
         outs = [AN.pagerank(e, iters=3, weight_col=wcol),
                 AN.pagerank(e, iters=2, weight_col=wcol, init_ranks=init)]
         assert all(_reads_checkpoint(o) == distributed for o in outs)
+        assert all(o.schema["id"].dataType.simpleString() == id_type
+                   for o in outs)
         got[bound] = [dict(tuple(r) for r in o.collect()) for o in outs]
     for local, dist in zip(got[10 ** 6], got[0]):
         assert local.keys() == dist.keys()
